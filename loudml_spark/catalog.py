@@ -20,6 +20,9 @@ robust across engines:
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -483,14 +486,21 @@ _CACHED_SERIES: dict = {}
 
 
 def release_caches() -> None:
-    """Unpersist every series cached by the catalog helpers.  Call at
-    catalog teardown (bench does, after its last pass)."""
+    """Release everything cached by the catalog helpers: unpersist
+    cached frames and delete the streaming queries' staging dirs (a
+    path, or a tuple of paths).  Call at catalog teardown (bench
+    does, after its last pass)."""
     while _CACHED_SERIES:
-        _, df = _CACHED_SERIES.popitem()
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped
+        _, entry = _CACHED_SERIES.popitem()
+        if isinstance(entry, DataFrame):
+            try:
+                entry.unpersist()
+            except Exception:
+                pass  # session already stopped
+            continue
+        for path in entry if isinstance(entry, tuple) else (entry,):
+            if isinstance(path, str) and os.path.isabs(path):
+                shutil.rmtree(path, ignore_errors=True)
     from loudml_spark.pipeline.dedup import release_persisted
     release_persisted()
 

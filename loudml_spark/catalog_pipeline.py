@@ -1067,7 +1067,7 @@ SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.8
 
 # connected components of the >= 0.8 LSH pair graph: cluster id = min
 # reachable doc_id (recursive transitive closure — fine at oracle
-# scale; the Spark side uses log-round label propagation instead).
+# scale; the Spark side uses dedup_clusters instead).
 # Docs outside any pair are their own singleton cluster.
 SQL_DEDUP_CLUSTERS_DOCS = f"""
 WITH RECURSIVE {_SQL_LSH_CTES},
@@ -1374,8 +1374,7 @@ WHERE d.doc_id >= 20
 
 def _clusters_cached(spark, sf_dir):
     """The LSH → connected-components frame, cached: both
-    dedup_clusters_docs and dedup_survivors_docs consume it, and the
-    iterative contraction is the catalog's most expensive subplan —
+    dedup_clusters_docs and dedup_survivors_docs consume it, and
     recomputing it per query doubled its bench cost.  Registered in
     the shared release_caches() lifecycle (500-row frame)."""
     from loudml_spark.catalog import _CACHED_SERIES
@@ -1394,10 +1393,9 @@ def _clusters_cached(spark, sf_dir):
 
 def q_dedup_clusters_docs(spark, sf_dir):
     """LSH pairs → connected components → canonical doc per cluster
-    (the keep/drop decision of a dedup pass).  Spark: log-round
-    min-label propagation with path halving; oracle: recursive-CTE
-    transitive closure.  Both reduce to the same deterministic
-    component-min labels."""
+    (the keep/drop decision of a dedup pass).  Spark:
+    dedup_clusters; oracle: recursive-CTE transitive closure.  Both
+    reduce to the same deterministic component-min labels."""
     return _clusters_cached(spark, sf_dir)
 
 
@@ -5689,8 +5687,10 @@ def q_graph_components_docs(spark, sf_dir):
     → 1 = verified mirror set; a large sparse component = the
     chained false-positive blob over-eager bands produce), exposing
     dedup_clusters' components as a first-class graph result.
-    Labels come from the log-round star-contraction CC; stats are
-    one label-keyed rollup + one edge equi-join."""
+    Labels come from dedup_clusters — one union-find task for a
+    graph at or below its measured edge threshold, the log-round
+    star-contraction CC above it; stats are one label-keyed rollup +
+    one edge equi-join."""
     from loudml_spark.pipeline.graph import component_stats
 
     pairs = _lsh_pairs_cached(spark, sf_dir)

@@ -165,7 +165,7 @@ def donut_fit_predict_many(
            "lower double", "upper double"]
     )
 
-    def fn(keys, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(keys, pdf):
         return donut_fit_predict_group(
             keys, pdf, key_cols=key_cols, span=span,
             latent_dim=latent_dim, intermediate_dim=intermediate_dim,
@@ -237,7 +237,7 @@ def donut_forecast_many(
         + (["constraint_breach boolean"] if c else [])
     )
 
-    def fn(keys, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(keys, pdf):
         return donut_forecast_group(
             keys, pdf, key_cols=key_cols, horizon=horizon, span=span,
             latent_dim=latent_dim, intermediate_dim=intermediate_dim,

@@ -320,7 +320,7 @@ def fit_many(
            "sigma double"]
     )
 
-    def fn(keys, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(keys, pdf):
         pdf = pdf.sort_values(ts_col)
         try:
             w, mu, sd, sigma = _fit_arrays(

@@ -81,7 +81,7 @@ def lttb(
     schema = (f"{key_field}, " if key_field else "") + \
         f"{ts_col} long, {value_col} double"
 
-    def fn(keys, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(keys, pdf):
         pdf = pdf.dropna(subset=[value_col]).sort_values(ts_col)
         ts = pdf[ts_col].to_numpy(dtype=np.int64)
         vals = pdf[value_col].to_numpy(dtype=float)

@@ -418,22 +418,25 @@ def component_stats(
     component-level complement of triangle_stats' per-node
     coefficient.
 
-    Algorithm: component labels from the log-round large-star/
-    small-star contraction (:func:`loudml_spark.pipeline.dedup.
-    dedup_clusters` — reused, not re-implemented), then ONE
-    label-keyed aggregation for nodes and one equi-join + aggregation
-    for edges.  density = 2·m_c / (n_c·(n_c−1)) — exact integer
-    counts through one IEEE division.
+    Algorithm: component labels from :func:`loudml_spark.pipeline.
+    dedup.dedup_clusters` (reused, not re-implemented) — one
+    union-find task when the edge frame is at or below its measured
+    ``_UNION_FIND_MAX_EDGES`` bound, the log-round large-star/
+    small-star contraction above it — then ONE label-keyed
+    aggregation for nodes and one equi-join + aggregation for edges.
+    density = 2·m_c / (n_c·(n_c−1)) — exact integer counts through
+    one IEEE division.
 
     Output: (cluster_id, n_nodes, n_edges, density) for components
     with ≥ 2 nodes (singletons have no edges and no density).
 
     Eager by design: :func:`~loudml_spark.pipeline.dedup.
-    dedup_clusters` already runs the contraction rounds at call
-    time, so the census materializes its (one-row-per-component)
-    result as a final eager ``localCheckpoint`` and releases the
-    edge frame's pinned blocks before returning — nothing stays in
-    the block manager but the component table itself."""
+    dedup_clusters` already runs its entry probe (and, on a large
+    graph, the contraction rounds) at call time, so the census
+    materializes its (one-row-per-component) result as a final eager
+    ``localCheckpoint`` and releases the edge frame's pinned blocks
+    before returning — nothing stays in the block manager but the
+    component table itself."""
     from loudml_spark.pipeline.dedup import dedup_clusters
 
     for c in (src_col, dst_col):
@@ -644,10 +647,12 @@ def incremental_components(
     through its current label (endpoints the standing labeling has
     never seen label themselves); the delta then induces a QUOTIENT
     graph whose nodes are labels — ≤ 2·|delta| of them, independent
-    of standing-corpus size — and the log-round star contraction
-    (:func:`~loudml_spark.pipeline.dedup.dedup_clusters`, reused)
-    runs on that quotient only.  One final label-keyed equi-join
-    rewrites just the standing rows whose label merged.  Min-id
+    of standing-corpus size — and
+    :func:`~loudml_spark.pipeline.dedup.dedup_clusters` (reused: one
+    union-find task on a small quotient, the log-round star
+    contraction on a large one) runs on that quotient only.  One
+    final label-keyed equi-join rewrites just the standing rows
+    whose label merged.  Min-id
     labels compose: each standing cluster_id IS its component's
     minimum, new endpoints contribute their own ids, so the quotient
     minimum equals the minimum over the merged full components —

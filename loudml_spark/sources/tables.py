@@ -49,20 +49,24 @@ def _has_nanos_ts(path: str) -> bool:
         return True
 
 
-# Lazy-PLAN memo: (applicationId, sf_dir, name) → the loader's
-# DataFrame.  `spark.read.parquet` pays a driver-side file listing +
-# footer schema read on EVERY call, and a catalog pass calls this
-# loader several hundred times for the same ten paths — a measured
-# per-query constant (round-13 phase profile).  The memo holds the
-# LAZY scan plan only: no rows, no persisted storage, nothing keyed
-# on data content — every action still computes from the parquet
-# inputs, and a new session (new applicationId) re-lists and
-# re-reads schemas from scratch.
+# Lazy-PLAN memo: (applicationId, session timezone, sf_dir, name) →
+# the loader's DataFrame.  `spark.read.parquet` pays a driver-side
+# file listing + footer schema read on EVERY call, and a catalog pass
+# calls this loader several hundred times for the same ten paths — a
+# measured per-query constant (round-13 phase profile).  The memo
+# holds the LAZY scan plan only: no rows, no persisted storage,
+# nothing keyed on data content — every action still computes from
+# the parquet inputs, and a new session (new applicationId) re-lists
+# and re-reads schemas from scratch.  The timezone is in the key because
+# the events loader derives ts_ns through current_timezone(): a plan
+# built under one session timezone is wrong under another.
 _PLAN_MEMO: dict[tuple, DataFrame] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
+    key = (spark.sparkContext.applicationId,
+           spark.conf.get("spark.sql.session.timeZone"),
+           os.path.abspath(sf_dir), name)
     hit = _PLAN_MEMO.get(key)
     if hit is not None:
         return hit

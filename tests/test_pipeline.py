@@ -261,7 +261,8 @@ def test_long_token_shingles_no_memory_blowup(spark):
         assert sorted(hs.tolist()) == sorted(_shingle_hash_set(t, 1))
 
 
-def test_dedup_clusters(spark):
+def test_dedup_clusters(spark, monkeypatch):
+    from loudml_spark.pipeline import dedup
     from loudml_spark.pipeline.dedup import dedup_clusters
 
     # components: {1,2,3,7} (chain + extra edge), {5,9}; 4 is a
@@ -283,7 +284,9 @@ def test_dedup_clusters(spark):
     assert out2 == {1, 2, 3, 5, 7, 9}
     # long chain: large-star/small-star contractions need O(log n)
     # rounds — a 31-node path must close in far fewer rounds than its
-    # diameter (label propagation would need ~30)
+    # diameter (label propagation would need ~30).  A threshold of 0
+    # keeps the chain off the one-task union-find path.
+    monkeypatch.setattr(dedup, "_UNION_FIND_MAX_EDGES", 0)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "id_a long, id_b long")
     stats = {}

@@ -295,6 +295,18 @@ class TestPersistLRU:
             dedup._PERSISTED.extend(saved)
 
 
+@pytest.fixture(params=["one_task", "star_loop"])
+def cc_path(request, monkeypatch):
+    """Run dedup_clusters on each of its two paths: the default
+    threshold keeps the small test graphs on the one-task union-find
+    path; a threshold of 0 forces the large-star/small-star loop."""
+    from loudml_spark.pipeline import dedup
+
+    if request.param == "star_loop":
+        monkeypatch.setattr(dedup, "_UNION_FIND_MAX_EDGES", 0)
+    return request.param
+
+
 class TestProbeCadence2:
     """C16: the iterative operators probe/checkpoint every SECOND
     round.  These tests pin the value contract the cadence argument
@@ -347,29 +359,74 @@ class TestProbeCadence2:
                             changed = True
             assert got == core, f"seed {seed}"
 
-    def test_clusters_equal_union_find(self, spark):
+    @staticmethod
+    def _union_find(es):
+        parent = {}
+
+        def find(x):
+            parent.setdefault(x, x)
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in es:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+        return {u: find(u) for u in parent}
+
+    def test_clusters_equal_union_find(self, spark, cc_path):
         from loudml_spark.pipeline.dedup import dedup_clusters
 
         for seed in (4, 5, 6):
             es = self._rand_edges(seed, n_nodes=60, n_edges=70)
             df = spark.createDataFrame(es, "id_a long, id_b long")
+            stats = {}
+            got = {r["doc_id"]: r["cluster_id"]
+                   for r in dedup_clusters(df, stats=stats).collect()}
+            assert (stats["rounds"] == 0) == (cc_path == "one_task")
+            assert got == self._union_find(es), f"seed {seed}"
+
+    def test_component_stats_equal_union_find_census(self, spark,
+                                                      cc_path):
+        import collections
+
+        for seed in (7, 8):
+            es = self._rand_edges(seed, n_nodes=50, n_edges=60)
+            df = spark.createDataFrame(es, "id_a long, id_b long")
+            out = component_stats(df)
+            got = {r["cluster_id"]: (r["n_nodes"], r["n_edges"],
+                                     r["density"])
+                   for r in out.collect()}
+            release_checkpoint(out)
+            label = self._union_find(es)
+            n = collections.Counter(label.values())
+            m = collections.Counter(label[a] for a, _ in es)
+            want = {c: (n[c], m[c],
+                        pytest.approx(2 * m[c] / (n[c] * (n[c] - 1)),
+                                      abs=1e-6))
+                    for c in n if n[c] >= 2}
+            assert got == want, f"seed {seed}"
+
+    def test_small_graph_labels_in_at_most_four_jobs(self, spark):
+        """The one-task path's point: a 70-edge graph is labeled by a
+        fixed handful of Spark jobs, not a job floor per contraction
+        round (23 jobs before)."""
+        from loudml_spark.pipeline.dedup import dedup_clusters
+
+        sc = spark.sparkContext
+        es = self._rand_edges(4, n_nodes=60, n_edges=70)
+        df = spark.createDataFrame(es, "id_a long, id_b long")
+        group = "dedup-clusters-small-graph"
+        sc.setJobGroup(group, "dedup_clusters on a 70-edge graph")
+        try:
             got = {r["doc_id"]: r["cluster_id"]
                    for r in dedup_clusters(df).collect()}
-            parent = {}
-
-            def find(x):
-                parent.setdefault(x, x)
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            for a, b in es:
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-            want = {u: find(u) for u in parent}
-            assert got == want, f"seed {seed}"
+        finally:
+            sc._jsc.clearJobGroup()
+        assert got == self._union_find(es)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
 
     def test_pagerank_equals_decimal_replica(self, spark):
         """Bit-exact trajectory vs a Decimal replica of the operator's
