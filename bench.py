@@ -18,6 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
+from loudml_spark import session_cache  # noqa: E402
 from loudml_spark.catalog import QUERIES  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -88,15 +89,23 @@ def main():
         if not only or any(name.startswith(p) for p in only)
     }
     samples: dict[str, list[float]] = {}
+    # session-cache hits and misses per query and rep, so a min-based
+    # comparison can tell which queries read a memo
+    cache: dict[str, dict[str, list[int]]] = {}
     for rep in range(reps):
         for name, spec in bench_queries.items():
             # label the jobs (guide §1.5) so the UI/event log maps
             # stages back to catalog queries
             spark.sparkContext.setJobDescription(f"{name} (rep {rep})")
+            c0 = session_cache.stats()
             t0 = time.perf_counter()
             df = spec["fn"](spark, SF_DIR)
             df.write.mode("overwrite").format("noop").save()
             samples.setdefault(name, []).append(time.perf_counter() - t0)
+            c1 = session_cache.stats()
+            for k in ("hits", "misses"):
+                cache.setdefault(name, {}).setdefault(k, []).append(
+                    c1[k] - c0[k])
     spark.sparkContext.setJobDescription(None)
 
     from loudml_spark.catalog import release_caches
@@ -136,6 +145,7 @@ def main():
         "queries": timings,
         "queries_median": medians,
         "queries_cold": colds,
+        "queries_cache": cache,
     }
     print(json.dumps(full))
     # Also persist the complete per-query detail next to this script so

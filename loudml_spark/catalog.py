@@ -20,18 +20,16 @@ robust across engines:
 
 from __future__ import annotations
 
-import os
-import shutil
-
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from loudml_spark import session_cache
 from loudml_spark.features import Feature
 from loudml_spark.operators.align import align_features
 from loudml_spark.operators.bucketize import bucketize
 from loudml_spark.operators.ranking import top_k
 from loudml_spark.operators.seasonal import daytime_col
-from loudml_spark.sources.tables import load_table
+from loudml_spark.session_cache import release_all as release_caches  # noqa: F401
+from loudml_spark.sources.tables import load_table, table_path
 
 NS = 10**9
 JAN1 = 1704067200          # 2024-01-01T00:00:00Z
@@ -479,30 +477,8 @@ GROUP BY l_returnflag, l_linestatus
 JAN22 = JAN1 + 21 * 86400  # train/test boundary for model queries
 
 
-# cached frames handed out by _hourly_series, keyed by (app id, sf_dir)
-# so a long-lived session can release them explicitly — an unbounded
-# .cache() with no unpersist is a storage-leak pattern in services.
-_CACHED_SERIES: dict = {}
-
-
-def release_caches() -> None:
-    """Release everything cached by the catalog helpers: unpersist
-    cached frames and delete the streaming queries' staging dirs (a
-    path, or a tuple of paths).  Call at catalog teardown (bench
-    does, after its last pass)."""
-    while _CACHED_SERIES:
-        _, entry = _CACHED_SERIES.popitem()
-        if isinstance(entry, DataFrame):
-            try:
-                entry.unpersist()
-            except Exception:
-                pass  # session already stopped
-            continue
-        for path in entry if isinstance(entry, tuple) else (entry,):
-            if isinstance(path, str) and os.path.isabs(path):
-                shutil.rmtree(path, ignore_errors=True)
-    from loudml_spark.pipeline.dedup import release_persisted
-    release_persisted()
+# perfbench/env.py reads this name: it is the one session-cache registry.
+_CACHED_SERIES = session_cache._ENTRIES
 
 
 def _exact_series(spark, sf_dir, interval, group_by=()):
@@ -526,15 +502,13 @@ def _hourly_series(spark, sf_dir):
     Cached: the aggregated series is ≤ n_buckets rows (720), but the
     model queries walk it several times (profile fit, fallback stats,
     predict) and each walk would otherwise re-scan the full events
-    table.  Identical logical plans share one cache entry across the
-    catalog's model queries; release_caches() ends the lifecycle."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CACHED_SERIES:
-        out = _ev_bucketize(spark, sf_dir, ["avg(value)"], 3600)
-        _CACHED_SERIES[key] = (
-            out.withColumnRenamed("avg_value", "value").cache()
-        )
-    return _CACHED_SERIES[key]
+    table.  One session-cache entry serves all the catalog's model
+    queries; release_caches() ends the lifecycle."""
+    return session_cache.memo_frame(
+        spark, "hourly_series",
+        lambda: _ev_bucketize(spark, sf_dir, ["avg(value)"], 3600)
+        .withColumnRenamed("avg_value", "value"),
+        table_path(sf_dir, "events"))
 
 
 def _scored_series(spark, sf_dir):

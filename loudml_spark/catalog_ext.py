@@ -9,9 +9,14 @@ would otherwise sum in different orders, identical aliases.
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+from contextlib import contextmanager
+
 from pyspark.sql import functions as F
 
-from loudml_spark.sources.tables import load_table
+from loudml_spark import session_cache
+from loudml_spark.sources.tables import load_table, table_path
 
 NS = 10**9
 
@@ -22,6 +27,50 @@ ROLLUP_LEVELS = (3600, 21600, 86400)   # 1h → 6h → 1d
 VOCAB_TOP_K = 100
 TFIDF_MAX_DOC = 100                # bound the per-doc term output
 TFIDF_TOP_TERMS = 5
+
+
+@contextmanager
+def _small_shuffle(spark):
+    """Run a streaming drain with ``spark.sql.shuffle.partitions`` at
+    2, restored on exit: one small staged input spread over dozens of
+    state-store partitions is pure overhead (a state dir and a commit
+    per partition per batch)."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _stage(spark, sf_dir, table, tag, *writes):
+    """Temp dirs staged once per session, one per ``write(dir)``, as a
+    session-cache entry on the input ``table`` (released by rmtree).
+    The staged files are a pure function of the input parquet:
+    re-writing them per call (bench reps, repeated reads) would only
+    re-measure the disk, not the operator."""
+    def build():
+        dirs = tuple(tempfile.mkdtemp(prefix=f"lms_{tag}_") for _ in writes)
+        try:
+            for d, write in zip(dirs, writes):
+                write(d)
+        except BaseException:
+            for d in dirs:
+                shutil.rmtree(d, ignore_errors=True)
+            raise
+        return dirs
+    return session_cache.memo(spark, tag, build, table_path(sf_dir, table))
+
+
+def _median_split(df, col):
+    """A staging writer: ``df`` as two files split at the median of
+    ``col`` (two ts-range files, so a drain runs two micro-batches)."""
+    def write(tmp):
+        cut = df.agg(F.expr(f"percentile({col}, 0.5)")).first()[0]
+        for part in (df.filter(F.col(col) <= cut),
+                     df.filter(F.col(col) > cut)):
+            part.coalesce(1).write.mode("append").parquet(tmp)
+    return write
 
 
 def _day_ts():
@@ -130,9 +179,6 @@ def q_streaming_sessionize_30m(spark, sf_dir):
     cross-batch merging is exercised for real — and the final
     complete-mode output must equal the batch plan bit-for-bit.
     Shares the batch query's oracle (SQL_SESSIONIZE_NATIVE_30M)."""
-    import shutil
-    import tempfile
-
     from loudml_spark.streaming.job import (
         drain_stream_to_df,
         stream_sessionize,
@@ -153,30 +199,28 @@ def q_streaming_sessionize_30m(spark, sf_dir):
         F.col("value").cast("decimal(18,2)").alias("value"),
     )
     tmp = tempfile.mkdtemp(prefix="lms_sess_stream_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     try:
-        # 2 ts-range files → 2 micro-batches: exercises cross-batch
-        # session merging while paying complete-mode re-output (the
-        # whole session table re-materializes per trigger) only twice
-        ev.repartitionByRange(2, "ts").write.mode("overwrite").parquet(tmp)
-        stream = (
-            spark.readStream.schema(
-                "user_id bigint, ts timestamp, value decimal(18,2)")
-            .option("maxFilesPerTrigger", 1).parquet(tmp)
-        )
-        out = stream_sessionize(
-            stream, gap_seconds=1800, ts_col="ts", by=["user_id"],
-            value_col="value",
-        )
-        return drain_stream_to_df(
-            out,
-            ["user_id", "session_start", "session_end", "n_events",
-             F.col("sum_value").cast("double").alias("sum_value")],
-            output_mode="complete", prefix="stream_sess",
-        )
+        with _small_shuffle(spark):
+            # 2 ts-range files → 2 micro-batches: exercises cross-batch
+            # session merging while paying complete-mode re-output (the
+            # whole session table re-materializes per trigger) only twice
+            ev.repartitionByRange(2, "ts").write.mode("overwrite").parquet(tmp)
+            stream = (
+                spark.readStream.schema(
+                    "user_id bigint, ts timestamp, value decimal(18,2)")
+                .option("maxFilesPerTrigger", 1).parquet(tmp)
+            )
+            out = stream_sessionize(
+                stream, gap_seconds=1800, ts_col="ts", by=["user_id"],
+                value_col="value",
+            )
+            return drain_stream_to_df(
+                out,
+                ["user_id", "session_start", "session_end", "n_events",
+                 F.col("sum_value").cast("double").alias("sum_value")],
+                output_mode="complete", prefix="stream_sess",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -2459,8 +2503,6 @@ def q_streaming_dedup_events(spark, sf_dir):
     source's max re-delivery delay instead (see stream_dedupe).
     Duplicate deliveries are byte-identical rows, so which delivery
     survives is immaterial to the value hash."""
-    import tempfile
-
     from loudml_spark.streaming.job import (
         drain_stream_to_df,
         stream_dedupe,
@@ -2474,23 +2516,14 @@ def q_streaming_dedup_events(spark, sf_dir):
                "as timestamp)").alias("ts"),
         "user_id", "event_type", "value",
     )
-    from loudml_spark.catalog import _CACHED_SERIES
 
-    # stage once per (app, sf): the staged files are a pure function
-    # of the input parquet — re-writing them per call (bench reps,
-    # repeated reads) only re-measures the disk, not the operator.
-    # The temp dir lives until process exit (system temp).
-    skey = (spark.sparkContext.applicationId, sf_dir, "stage_dedup")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        if skey not in _CACHED_SERIES:
-            tmp = tempfile.mkdtemp(prefix="lms_dedup_stream_")
-            ev.coalesce(1).write.mode("overwrite").parquet(tmp)
-            ev.filter(F.col("event_id") % 3 == 0).coalesce(1) \
-                .write.mode("append").parquet(tmp)
-            _CACHED_SERIES[skey] = tmp
-        tmp = _CACHED_SERIES[skey]
+    def stage(tmp):
+        ev.coalesce(1).write.mode("overwrite").parquet(tmp)
+        ev.filter(F.col("event_id") % 3 == 0).coalesce(1) \
+            .write.mode("append").parquet(tmp)
+
+    with _small_shuffle(spark):
+        (tmp,) = _stage(spark, sf_dir, "events", "stage_dedup", stage)
         stream = (
             spark.readStream.schema(
                 "event_id bigint, ts timestamp, user_id bigint, "
@@ -2503,8 +2536,6 @@ def q_streaming_dedup_events(spark, sf_dir):
             out, ["event_id", "user_id", "event_type", "value"],
             output_mode="append", prefix="stream_dedup",
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 SQL_STREAMING_DEDUP_EVENTS = """
@@ -2574,8 +2605,6 @@ def q_streaming_cms_heavy_hitters(spark, sf_dir):
     micro-batch-merged sketch is BIT-IDENTICAL to the batch sketch —
     this query shares the batch query's SQL oracle verbatim, the
     strongest batch↔streaming parity claim in the catalog."""
-    import tempfile
-
     from loudml_spark.pipeline.corpus import cms_estimate, vocabulary
     from loudml_spark.streaming.job import (
         drain_stream_to_df,
@@ -2583,19 +2612,14 @@ def q_streaming_cms_heavy_hitters(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    from loudml_spark.catalog import _CACHED_SERIES
 
-    skey = (spark.sparkContext.applicationId, sf_dir, "stage_cms")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        if skey not in _CACHED_SERIES:
-            tmp = tempfile.mkdtemp(prefix="lms_cms_stream_")
-            for i in range(3):
-                docs.filter(F.col("doc_id") % 3 == i).coalesce(1) \
-                    .write.mode("append").parquet(tmp)
-            _CACHED_SERIES[skey] = tmp
-        tmp = _CACHED_SERIES[skey]
+    def stage(tmp):
+        for i in range(3):
+            docs.filter(F.col("doc_id") % 3 == i).coalesce(1) \
+                .write.mode("append").parquet(tmp)
+
+    with _small_shuffle(spark):
+        (tmp,) = _stage(spark, sf_dir, "documents", "stage_cms", stage)
         stream = (
             spark.readStream.schema("doc_id bigint, text string")
             .option("maxFilesPerTrigger", 1).parquet(tmp)
@@ -2605,8 +2629,6 @@ def q_streaming_cms_heavy_hitters(spark, sf_dir):
             ["d", "bucket", "n"],
             output_mode="complete", prefix="stream_cms",
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     top = vocabulary(docs, top_k=20).select("token", "tf")
     est = cms_estimate(counters, top, depth=CMS_DEPTH, width=CMS_WIDTH)
     return est.select(
@@ -2627,8 +2649,6 @@ def q_streaming_join_click_purchase(spark, sf_dir):
     production sets it to the streams' max skew and state stays
     bounded by throughput × (watermark + window) — see
     stream_interval_join."""
-    import tempfile
-
     from loudml_spark.streaming.job import (
         drain_stream_to_df,
         stream_interval_join,
@@ -2641,21 +2661,14 @@ def q_streaming_join_click_purchase(spark, sf_dir):
         "user_id", ts_utc.alias("ts"))
     purchases = ev.filter("event_type = 'purchase'").select(
         "user_id", ts_utc.alias("ts"), "value")
-    from loudml_spark.catalog import _CACHED_SERIES
 
-    skey = (spark.sparkContext.applicationId, sf_dir, "stage_ij")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        if skey not in _CACHED_SERIES:
-            tmpc = tempfile.mkdtemp(prefix="lms_join_c_")
-            tmpp = tempfile.mkdtemp(prefix="lms_join_p_")
-            clicks.repartitionByRange(2, "ts").write \
-                .mode("overwrite").parquet(tmpc)
-            purchases.repartitionByRange(2, "ts").write \
-                .mode("overwrite").parquet(tmpp)
-            _CACHED_SERIES[skey] = (tmpc, tmpp)
-        tmpc, tmpp = _CACHED_SERIES[skey]
+    def stage(side):
+        return lambda tmp: (side.repartitionByRange(2, "ts").write
+                            .mode("overwrite").parquet(tmp))
+
+    with _small_shuffle(spark):
+        tmpc, tmpp = _stage(spark, sf_dir, "events", "stage_ij",
+                            stage(clicks), stage(purchases))
         sc = (spark.readStream
               .schema("user_id bigint, ts timestamp")
               .option("maxFilesPerTrigger", 1).parquet(tmpc))
@@ -2673,8 +2686,6 @@ def q_streaming_join_click_purchase(spark, sf_dir):
              F.col("r_value").alias("value")],
             output_mode="append", prefix="stream_ij",
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 SQL_STREAMING_JOIN_CLICK_PURCHASE = """
@@ -3351,28 +3362,15 @@ def q_streaming_page_hinkley_daily(spark, sf_dir):
     this query shares the batch query's SQL oracle VERBATIM — the
     CMS-style strongest batch↔streaming parity claim, now for a
     sequential statistic (order matters, not just commutativity)."""
-    import tempfile
-
-    from loudml_spark.catalog import _CACHED_SERIES
     from loudml_spark.streaming.job import (
         drain_stream_to_df,
         stream_page_hinkley,
     )
 
     daily = _daily_mean_by_type(spark, sf_dir)
-    skey = (spark.sparkContext.applicationId, sf_dir, "stage_ph")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        if skey not in _CACHED_SERIES:
-            tmp = tempfile.mkdtemp(prefix="lms_ph_stream_")
-            cut = daily.agg(
-                F.expr("percentile(bucket_ts, 0.5)")).first()[0]
-            for part in (daily.filter(F.col("bucket_ts") <= cut),
-                         daily.filter(F.col("bucket_ts") > cut)):
-                part.coalesce(1).write.mode("append").parquet(tmp)
-            _CACHED_SERIES[skey] = tmp
-        tmp = _CACHED_SERIES[skey]
+    with _small_shuffle(spark):
+        (tmp,) = _stage(spark, sf_dir, "events", "stage_ph",
+                        _median_split(daily, "bucket_ts"))
         stream = (
             spark.readStream
             .schema("event_type string, bucket_ts bigint, value double")
@@ -3384,8 +3382,6 @@ def q_streaming_page_hinkley_daily(spark, sf_dir):
             ["event_type", "bucket_ts", "value", "ph", "is_change"],
             output_mode="append", prefix="stream_ph",
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return out.select(
         "event_type", "bucket_ts", "value",
         (F.round(F.col("ph"), 6) + F.lit(0.0)).alias("ph"),
@@ -4285,16 +4281,15 @@ EXT_QUERIES.update({
 def _bpe_merges(spark, sf_dir):
     """Learn the merge list once per (app, sf) — the trained-model
     cache idiom (same as the classifier weights / Bloom words)."""
-    from loudml_spark.catalog import _CACHED_SERIES
     from loudml_spark.pipeline.corpus import bpe_train_merges
 
-    key = (spark.sparkContext.applicationId, sf_dir, "bpe_merges")
-    if key not in _CACHED_SERIES:
+    def train():
         rows = bpe_train_merges(
             load_table(spark, sf_dir, "documents"),
             n_merges=BPE_N_MERGES).collect()
-        _CACHED_SERIES[key] = [tuple(r["pair"].split(" ")) for r in rows]
-    return _CACHED_SERIES[key]
+        return [tuple(r["pair"].split(" ")) for r in rows]
+    return session_cache.memo(spark, "bpe_merges", train,
+                              table_path(sf_dir, "documents"))
 
 
 def q_bpe_encode_docs(spark, sf_dir):
@@ -5215,9 +5210,6 @@ def q_streaming_hll_users_daily(spark, sf_dir):
     BIT-IDENTICAL to the batch sketch: this query's oracle is the
     batch reconstruction's estimate columns — the CMS parity claim
     for a max-monoid."""
-    import tempfile
-
-    from loudml_spark.catalog import _CACHED_SERIES
     from loudml_spark.operators.sketch import hll_finish
     from loudml_spark.streaming.job import (
         drain_stream_to_df,
@@ -5229,18 +5221,9 @@ def q_streaming_hll_users_daily(spark, sf_dir):
         .cast("long").alias("day_ts"),
         "user_id",
     ).where(F.col("user_id").isNotNull())
-    skey = (spark.sparkContext.applicationId, sf_dir, "stage_hll")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        if skey not in _CACHED_SERIES:
-            tmp = tempfile.mkdtemp(prefix="lms_hll_stream_")
-            cut = ev.agg(F.expr("percentile(day_ts, 0.5)")).first()[0]
-            for part in (ev.filter(F.col("day_ts") <= cut),
-                         ev.filter(F.col("day_ts") > cut)):
-                part.coalesce(1).write.mode("append").parquet(tmp)
-            _CACHED_SERIES[skey] = tmp
-        tmp = _CACHED_SERIES[skey]
+    with _small_shuffle(spark):
+        (tmp,) = _stage(spark, sf_dir, "events", "stage_hll",
+                        _median_split(ev, "day_ts"))
         stream = (
             spark.readStream
             .schema("day_ts bigint, user_id bigint")
@@ -5252,8 +5235,6 @@ def q_streaming_hll_users_daily(spark, sf_dir):
             ["day_ts", "__reg", "__mrho"],
             output_mode="complete", prefix="stream_hll",
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return hll_finish(regs, by=["day_ts"], p=HLL_P)
 
 
@@ -5431,28 +5412,15 @@ def q_streaming_kalman_daily(spark, sf_dir):
     bit-identical and this query shares kalman_level_daily's replay
     oracle VERBATIM — streaming parity for an adaptive-gain
     estimator."""
-    import tempfile
-
-    from loudml_spark.catalog import _CACHED_SERIES
     from loudml_spark.streaming.job import (
         drain_stream_to_df,
         stream_kalman_level,
     )
 
     daily = _daily_mean_by_type(spark, sf_dir)
-    skey = (spark.sparkContext.applicationId, sf_dir, "stage_ph")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        if skey not in _CACHED_SERIES:
-            tmp = tempfile.mkdtemp(prefix="lms_ph_stream_")
-            cut = daily.agg(
-                F.expr("percentile(bucket_ts, 0.5)")).first()[0]
-            for part in (daily.filter(F.col("bucket_ts") <= cut),
-                         daily.filter(F.col("bucket_ts") > cut)):
-                part.coalesce(1).write.mode("append").parquet(tmp)
-            _CACHED_SERIES[skey] = tmp
-        tmp = _CACHED_SERIES[skey]
+    with _small_shuffle(spark):
+        (tmp,) = _stage(spark, sf_dir, "events", "stage_ph",
+                        _median_split(daily, "bucket_ts"))
         stream = (
             spark.readStream
             .schema("event_type string, bucket_ts bigint, value double")
@@ -5465,8 +5433,6 @@ def q_streaming_kalman_daily(spark, sf_dir):
              "variance"],
             output_mode="append", prefix="stream_kalman",
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return out
 
 

@@ -15,6 +15,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from loudml_spark import session_cache
 from loudml_spark.pipeline.dedup import (
     MINHASH_A,
     MINHASH_B,
@@ -33,7 +34,7 @@ from loudml_spark.pipeline.text import (
     langid,
     text_stats,
 )
-from loudml_spark.sources.tables import load_table
+from loudml_spark.sources.tables import load_table, table_path
 
 MOD = 1_000_000_007
 
@@ -956,70 +957,31 @@ FROM (
 
 
 def q_minhash_lsh_pairs_docs(spark, sf_dir):
-    # this synthetic corpus is pathologically self-similar (median
-    # pairwise jaccard ~0.6), which defeats LSH's candidate pruning —
-    # bound the input and use 4-row bands (collision prob j^4) so the
-    # bench stays O(candidates), not O(n²)
-    docs = _rebalance(
-        spark, load_table(spark, sf_dir, "documents").filter("doc_id < 1000")
-    )
-    return minhash_lsh_pairs(docs, n=1, bands=2, threshold=0.8)
-
-
-def _lsh_pairs_cached(spark, sf_dir):
     """The verified >= 0.8 MinHash-LSH pair frame over the doc_id <
     1000 slice — the near-dup EDGE LIST that seven consumers share
     (pagerank ×2, triangle_stats, the component census, kcore,
     incremental components, and the cluster frame).
 
-    Persisted MEMORY_AND_DISK and registered in the bounded
-    semantic-hash LRU (pipeline/dedup._persist_bounded): the
-    consumers share ONE build of the banding + exact-verify pipeline
-    per session instead of each re-running the exact-Jaccard verify
-    (the family's dominant CPU stage, ~2.4 s warm at sf0.1 — so the
-    graph family re-paid it up to 6×/pass) — the same
-    operator-internal reuse the (id, sh, sig) signature frame
-    already gets.  The frame is the pair pipeline's OUTPUT (one row
-    per verified pair: two ids + a double), disk-backed and
-    LRU-capped, and every bench/oracle invocation still computes it
-    from the parquet inputs inside the timed pass.  The eager count
-    materializes it exactly once before any consumer's plan branches
-    could race to compute-and-cache the same partitions (the
-    _shingle_sig_frame rationale)."""
-    from pyspark.storagelevel import StorageLevel
-
-    from loudml_spark.pipeline.dedup import _persist_bounded
-
-    docs = _rebalance(
-        spark, load_table(spark, sf_dir, "documents").filter("doc_id < 1000")
-    )
-    pairs = (
-        minhash_lsh_pairs(docs, n=1, bands=2, threshold=0.8)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    _persist_bounded(pairs)
-    pairs.count()
-    return pairs
-
-
-def _share_spans(spans):
-    """Persist a spans frame (one row per flagged doc) that BOTH its
-    own catalog query and its excision twin consume — each of the
-    four spans→surgery pairs (contamination_spans→excise_contamination,
-    leak_spans→excise_leaks, the seeded pair, repeated_spans→
-    trim_repeated) otherwise re-runs the whole gram-match pipeline
-    inside the excision query.  Registered in the bounded
-    semantic-hash LRU; LAZY persist, deliberately: every consumer's
-    plan scans the spans frame exactly once (excise_spans groups it
-    then left-joins), so the first action materializes the cache
-    with no racing branches and no extra count job."""
-    from pyspark.storagelevel import StorageLevel
-
-    from loudml_spark.pipeline.dedup import _persist_bounded
-
-    spans = spans.persist(StorageLevel.MEMORY_AND_DISK)
-    _persist_bounded(spans)
-    return spans
+    A session-cache frame (persisted MEMORY_AND_DISK, counted once):
+    the consumers share ONE build of the banding + exact-verify
+    pipeline per session instead of each re-running the exact-Jaccard
+    verify (the family's dominant CPU stage, ~2.4 s warm at sf0.1 —
+    so the graph family re-paid it up to 6×/pass).  The frame is the
+    pair pipeline's OUTPUT (one row per verified pair: two ids + a
+    double), and every bench/oracle invocation still computes it from
+    the parquet inputs inside the timed pass."""
+    # this synthetic corpus is pathologically self-similar (median
+    # pairwise jaccard ~0.6), which defeats LSH's candidate pruning —
+    # bound the input and use 4-row bands (collision prob j^4) so the
+    # bench stays O(candidates), not O(n²)
+    def build():
+        docs = _rebalance(
+            spark,
+            load_table(spark, sf_dir, "documents").filter("doc_id < 1000"),
+        )
+        return minhash_lsh_pairs(docs, n=1, bands=2, threshold=0.8)
+    return session_cache.memo_frame(spark, "lsh_pairs", build,
+                                    table_path(sf_dir, "documents"))
 
 
 # CTE chain shared by the pair query and the dedup-cluster oracle
@@ -1372,31 +1334,24 @@ WHERE d.doc_id >= 20
 """
 
 
-def _clusters_cached(spark, sf_dir):
-    """The LSH → connected-components frame, cached: both
-    dedup_clusters_docs and dedup_survivors_docs consume it, and
-    recomputing it per query doubled its bench cost.  Registered in
-    the shared release_caches() lifecycle (500-row frame)."""
-    from loudml_spark.catalog import _CACHED_SERIES
-    from loudml_spark.pipeline.dedup import dedup_clusters
-
-    key = (spark.sparkContext.applicationId, sf_dir, "dedup_clusters")
-    if key not in _CACHED_SERIES:
-        docs = _rebalance(
-            spark,
-            load_table(spark, sf_dir, "documents").filter("doc_id < 1000"),
-        )
-        pairs = _lsh_pairs_cached(spark, sf_dir)
-        _CACHED_SERIES[key] = dedup_clusters(pairs, docs).cache()
-    return _CACHED_SERIES[key]
-
-
 def q_dedup_clusters_docs(spark, sf_dir):
     """LSH pairs → connected components → canonical doc per cluster
     (the keep/drop decision of a dedup pass).  Spark:
     dedup_clusters; oracle: recursive-CTE transitive closure.  Both
-    reduce to the same deterministic component-min labels."""
-    return _clusters_cached(spark, sf_dir)
+    reduce to the same deterministic component-min labels.  A
+    session-cache frame (500 rows): the cluster split and survivor
+    queries consume it too, and recomputing it per query doubled its
+    bench cost."""
+    from loudml_spark.pipeline.dedup import dedup_clusters
+
+    def build():
+        docs = _rebalance(
+            spark,
+            load_table(spark, sf_dir, "documents").filter("doc_id < 1000"),
+        )
+        return dedup_clusters(q_minhash_lsh_pairs_docs(spark, sf_dir), docs)
+    return session_cache.memo_frame(spark, "dedup_clusters", build,
+                                    table_path(sf_dir, "documents"))
 
 
 CLUSTER_SPLIT_A = 1299721
@@ -1416,7 +1371,7 @@ def q_cluster_split_docs(spark, sf_dir):
     from loudml_spark.pipeline.sampling import group_split, split_bucket
     from loudml_spark.pipeline.text import HASH_MOD, scramble_col
 
-    clusters = _clusters_cached(spark, sf_dir)
+    clusters = q_dedup_clusters_docs(spark, sf_dir)
     gh = scramble_col(
         (F.col("cluster_id") * F.lit(CLUSTER_SPLIT_A)
          + F.lit(CLUSTER_SPLIT_B)) % F.lit(HASH_MOD))
@@ -1461,7 +1416,7 @@ def q_dedup_survivors_docs(spark, sf_dir):
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents").filter("doc_id < 1000")
-    clusters = _clusters_cached(spark, sf_dir)
+    clusters = q_dedup_clusters_docs(spark, sf_dir)
     sized = clusters.join(
         docs.select("doc_id", F.length("text").alias("text_len")),
         "doc_id")
@@ -1633,45 +1588,22 @@ SELECT id_a, id_b, cosine FROM p WHERE cosine >= 0.3
 """
 
 
-def _memo_topk(spark, sf_dir, tag, build):
-    """Share a bounded top-k result frame across its consumers —
-    every ANN index pipeline is consumed at least twice per corpus
-    dir (its own catalog query + the recall gate composing it
-    against the exact frame; the exact frame itself has SEVEN
-    consumers: its query + six recall gates — and the realemb twins
-    repeat the pattern on the fixture dir).  Each consumer
-    previously re-collected the query vectors / codebooks (driver
-    jobs per construction) and re-ran the index scan + rank window.
-
-    Lifecycle — the `_lsh_pairs_cached` pattern: the frame is the
-    pipeline's OUTPUT (|queries|·k ≈ 50-100 rows), MEMORY_AND_DISK,
-    bounded-LRU registered, eagerly counted once, and object-memoized
-    in the release_caches-owned registry so repeat constructions skip
-    the driver collects too.  Every bench/oracle run still computes
-    it from parquet inside the timed pass (rep-1 carries the build;
-    bench reports cold next to min)."""
-    from pyspark.storagelevel import StorageLevel
-
-    from loudml_spark.catalog import _CACHED_SERIES
-    from loudml_spark.pipeline.dedup import _persist_bounded
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir),
-           tag)
-    hit = _CACHED_SERIES.get(key)
-    if hit is not None:
-        return hit
-    out = build().persist(StorageLevel.MEMORY_AND_DISK)
-    _persist_bounded(out)
-    out.count()
-    _CACHED_SERIES[key] = out
-    return out
-
-
+# The ANN top-k frames are session-cache frames: every ANN index
+# pipeline is consumed at least twice per corpus dir (its own catalog
+# query + the recall gate composing it against the exact frame; the
+# exact frame itself has SEVEN consumers: its query + six recall gates
+# — and the realemb twins repeat the pattern on the fixture dir).  Each
+# consumer otherwise re-collects the query vectors / codebooks (driver
+# jobs per construction) and re-runs the index scan + rank window.  The
+# frame is the pipeline's OUTPUT (|queries|·k ≈ 50-100 rows); every
+# bench/oracle run still computes it from parquet inside the timed pass
+# (rep-1 carries the build; bench reports cold next to min).
 def q_ann_cosine_topk(spark, sf_dir):
     def build():
         emb = load_table(spark, sf_dir, "embeddings")
         return cosine_topk(emb.filter("vec_id < 10"), emb, k=5)
-    return _memo_topk(spark, sf_dir, "ann_exact_topk", build)
+    return session_cache.memo_frame(spark, "ann_exact_topk", build,
+                                    table_path(sf_dir, "embeddings"))
 
 
 SQL_ANN_COSINE_TOPK = f"""
@@ -1698,7 +1630,8 @@ def q_ann_lsh_topk(spark, sf_dir):
         emb = load_table(spark, sf_dir, "embeddings")
         return lsh_cosine_topk(emb.filter("vec_id < 10"), emb, k=5,
                                bits=6)
-    return _memo_topk(spark, sf_dir, "ann_lsh_topk", build)
+    return session_cache.memo_frame(spark, "ann_lsh_topk", build,
+                                    table_path(sf_dir, "embeddings"))
 
 
 def q_ann_ivf_topk(spark, sf_dir):
@@ -1714,7 +1647,8 @@ def q_ann_ivf_topk(spark, sf_dir):
         emb = load_table(spark, sf_dir, "embeddings")
         return ivf_cosine_topk(emb.filter("vec_id < 10"), emb, k=5,
                                n_centroids=16, n_probe=4)
-    return _memo_topk(spark, sf_dir, "ann_ivf_topk", build)
+    return session_cache.memo_frame(spark, "ann_ivf_topk", build,
+                                    table_path(sf_dir, "embeddings"))
 
 
 def q_ann_pq_topk(spark, sf_dir):
@@ -1731,7 +1665,8 @@ def q_ann_pq_topk(spark, sf_dir):
         emb = load_table(spark, sf_dir, "embeddings")
         return pq_adc_topk(emb.filter("vec_id < 10"), emb, k=5, m=8,
                            n_codes=16)
-    return _memo_topk(spark, sf_dir, "ann_pq_topk", build)
+    return session_cache.memo_frame(spark, "ann_pq_topk", build,
+                                    table_path(sf_dir, "embeddings"))
 
 
 def _sql_pq_subdot(v: str, j: str, cv: str, dsub: int) -> str:
@@ -2173,6 +2108,7 @@ def q_streaming_detect_1h(spark, sf_dir):
     import tempfile
 
     from loudml_spark.catalog import _scored_series
+    from loudml_spark.catalog_ext import _small_shuffle
     from loudml_spark.streaming.job import (
         drain_stream_to_df,
         stateful_detect_stream,
@@ -2182,23 +2118,19 @@ def q_streaming_detect_1h(spark, sf_dir):
         F.lit("m1").alias("model"), "bucket_ts", "score"
     )
     tmp = tempfile.mkdtemp(prefix="lms_stream_")
-    # one small series → dozens of state-store partitions is pure
-    # overhead (a state dir + commit per partition per batch)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     try:
-        scored.coalesce(1).write.mode("overwrite").parquet(tmp)
-        stream = spark.readStream.schema(
-            "model string, bucket_ts long, score double"
-        ).parquet(tmp)
-        out = stateful_detect_stream(stream, key_col="model")
-        return drain_stream_to_df(
-            out,
-            ["model", "bucket_ts", "score", "is_anomaly", "episode_id"],
-            prefix="stream_detect",
-        )
+        with _small_shuffle(spark):
+            scored.coalesce(1).write.mode("overwrite").parquet(tmp)
+            stream = spark.readStream.schema(
+                "model string, bucket_ts long, score double"
+            ).parquet(tmp)
+            out = stateful_detect_stream(stream, key_col="model")
+            return drain_stream_to_df(
+                out,
+                ["model", "bucket_ts", "score", "is_anomaly", "episode_id"],
+                prefix="stream_detect",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -2511,18 +2443,22 @@ def _semdedup_corpus(spark, sf_dir):
     return emb.unionByName(pert)
 
 
-def _semdedup_pairs_cached(spark, sf_dir):
-    """The within-cell cosine pair frame, cached: both SemDeDup
-    catalog queries consume it (pairs directly, survivors through the
-    CC pass), and centroid training + assignment + the cell self-join
-    are the expensive part — the _clusters_cached pattern."""
-    from loudml_spark.catalog import _CACHED_SERIES
-    from loudml_spark.pipeline.similarity import semdedup_pairs
+def q_semdedup_pairs_emb(spark, sf_dir):
+    """SemDeDup candidate pairs (Abbas et al. 2023): coarse-quantizer
+    clustering bounds the quadratic cosine comparison to WITHIN each
+    cell — a plain equi-join on the cell id, never an all-pairs scan.
+    Centroids train on the portable id-hash sample through shared
+    deterministic numpy, so the oracle retrains bit-identical
+    centroids and replays assignment + pairing in SQL.  A
+    session-cache frame: semdedup_survivors_emb consumes it too, and
+    centroid training + assignment + the cell self-join are the
+    expensive part."""
+    from loudml_spark.pipeline.similarity import (
+        semdedup_n_centroids,
+        semdedup_pairs,
+    )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "semdedup_pairs")
-    if key not in _CACHED_SERIES:
-        from loudml_spark.pipeline.similarity import semdedup_n_centroids
-
+    def build():
         corpus = _semdedup_corpus(spark, sf_dir)
         # scale the CELL COUNT with the corpus so cell SIZE stays
         # ~constant (the r8 scale audit measured 16 fixed cells going
@@ -2530,19 +2466,9 @@ def _semdedup_pairs_cached(spark, sf_dir):
         # All driver SFs still resolve to 16, so oracles are unchanged;
         # the oracle generator applies the same rule to the same count.
         n_cells = semdedup_n_centroids(corpus.count())
-        _CACHED_SERIES[key] = semdedup_pairs(
-            corpus, threshold=0.9, n_centroids=n_cells).cache()
-    return _CACHED_SERIES[key]
-
-
-def q_semdedup_pairs_emb(spark, sf_dir):
-    """SemDeDup candidate pairs (Abbas et al. 2023): coarse-quantizer
-    clustering bounds the quadratic cosine comparison to WITHIN each
-    cell — a plain equi-join on the cell id, never an all-pairs scan.
-    Centroids train on the portable id-hash sample through shared
-    deterministic numpy, so the oracle retrains bit-identical
-    centroids and replays assignment + pairing in SQL."""
-    return _semdedup_pairs_cached(spark, sf_dir)
+        return semdedup_pairs(corpus, threshold=0.9, n_centroids=n_cells)
+    return session_cache.memo_frame(spark, "semdedup_pairs", build,
+                                    table_path(sf_dir, "embeddings"))
 
 
 def q_semdedup_survivors_emb(spark, sf_dir):
@@ -2553,7 +2479,7 @@ def q_semdedup_survivors_emb(spark, sf_dir):
     pair frame with semdedup_pairs_emb."""
     from loudml_spark.pipeline.dedup import dedup_clusters
 
-    pairs = _semdedup_pairs_cached(spark, sf_dir).select(
+    pairs = q_semdedup_pairs_emb(spark, sf_dir).select(
         F.col("id_a").cast("long").alias("id_a"),
         F.col("id_b").cast("long").alias("id_b"),
     )
@@ -2666,7 +2592,6 @@ def q_bloom_decontaminate_docs(spark, sf_dir):
     exactly.  Shares the exact operator's oracle — the value-hash
     match IS the proof the prefilter loses nothing (the
     simhash_pairs_blocked pattern)."""
-    from loudml_spark.catalog import _CACHED_SERIES
     from loudml_spark.pipeline.dedup import (
         benchmark_overlap_bloom,
         build_bloom_words,
@@ -2677,12 +2602,12 @@ def q_bloom_decontaminate_docs(spark, sf_dir):
     bench = docs.filter("doc_id < 20").select(
         F.col("doc_id").alias("bench_id"), "text")
     # the Bloom words are a static artifact of the eval set: build
-    # once per (app, sf) and reuse — the production amortization
-    key = (spark.sparkContext.applicationId, sf_dir, "bloom_words")
-    if key not in _CACHED_SERIES:
-        _CACHED_SERIES[key] = build_bloom_words(bench, n=3)
+    # once per session and reuse — the production amortization
+    words = session_cache.memo(
+        spark, "bloom_words", lambda: build_bloom_words(bench, n=3),
+        table_path(sf_dir, "documents"))
     return benchmark_overlap_bloom(
-        corpus, bench, n=3, min_overlap=8, words=_CACHED_SERIES[key])
+        corpus, bench, n=3, min_overlap=8, words=words)
 
 
 
@@ -3074,7 +2999,9 @@ def q_contamination_spans_docs(spark, sf_dir):
     corpus = docs.filter("doc_id >= 20")
     bench = docs.filter("doc_id < 20").select(
         F.col("doc_id").alias("bench_id"), "text")
-    return _share_spans(benchmark_overlap_spans(
+    # persisted lazily: excise_contamination consumes the same frame,
+    # and each consumer's plan scans it exactly once
+    return session_cache.persist(benchmark_overlap_spans(
         corpus, bench, n=3, min_overlap=8))
 
 
@@ -3171,7 +3098,8 @@ def q_leak_spans_docs(spark, sf_dir):
     corpus = docs.filter("doc_id >= 20")
     bench = docs.filter("doc_id < 20").select(
         F.col("doc_id").alias("bench_id"), "text")
-    return _share_spans(
+    # persisted lazily: shared with excise_leaks
+    return session_cache.persist(
         benchmark_leak_spans(corpus, bench, n=3, min_overlap=8))
 
 
@@ -3321,7 +3249,8 @@ def q_leak_spans_seeded(spark, sf_dir):
     from loudml_spark.pipeline.dedup import benchmark_leak_spans
 
     seeded, bench = _seeded_multileak(spark, sf_dir)
-    return _share_spans(
+    # persisted lazily: shared with its excision twin
+    return session_cache.persist(
         benchmark_leak_spans(seeded, bench, n=3, min_overlap=8))
 
 
@@ -3437,7 +3366,8 @@ def q_repeated_spans_docs(spark, sf_dir):
     from loudml_spark.pipeline.dedup import repeated_spans
 
     docs = _rebalance(spark, load_table(spark, sf_dir, "documents"))
-    return _share_spans(repeated_spans(docs, n=10, min_count=2))
+    # persisted lazily: shared with trim_repeated
+    return session_cache.persist(repeated_spans(docs, n=10, min_count=2))
 
 
 SQL_REPEATED_SPANS_DOCS = f"""
@@ -3629,12 +3559,10 @@ def _classifier_weights(spark, sf_dir):
     The oracle generator retrains the identical model from the same
     parquet (same sample key, same numpy), so weights match bit-for-
     bit and inference is an exact integer replay on both engines."""
-    from loudml_spark.catalog import _CACHED_SERIES
     from loudml_spark.pipeline.classify import train_quality_classifier
     from loudml_spark.pipeline.similarity import sample_order_key_expr
 
-    key = (spark.sparkContext.applicationId, sf_dir, "quality_clf")
-    if key not in _CACHED_SERIES:
+    def train():
         rows = (
             load_table(spark, sf_dir, "documents")
             .select("doc_id", "text", "lang")
@@ -3645,9 +3573,10 @@ def _classifier_weights(spark, sf_dir):
         )
         texts = [r["text"] for r in rows]
         labels = [1 if r["lang"] == "en" else 0 for r in rows]
-        _CACHED_SERIES[key] = train_quality_classifier(
+        return train_quality_classifier(
             texts, labels, n_buckets=CLASSIFIER_BUCKETS)
-    return _CACHED_SERIES[key]
+    return session_cache.memo(spark, "quality_clf", train,
+                              table_path(sf_dir, "documents"))
 
 
 def q_classifier_quality_docs(spark, sf_dir):
@@ -4159,7 +4088,8 @@ def q_ann_sq8_topk(spark, sf_dir):
     def build():
         emb = load_table(spark, sf_dir, "embeddings")
         return sq8_cosine_topk(emb.filter("vec_id < 10"), emb, k=5)
-    return _memo_topk(spark, sf_dir, "ann_sq8_topk", build)
+    return session_cache.memo_frame(spark, "ann_sq8_topk", build,
+                                    table_path(sf_dir, "embeddings"))
 
 
 # decoded-corpus vector list (SQ8 encode→decode) against per-dim
@@ -4805,7 +4735,7 @@ def q_pagerank_sim_docs(spark, sf_dir):
     oracle unrolls the same 5 iterations over the same edge CTEs."""
     from loudml_spark.pipeline.graph import pagerank
 
-    pairs = _lsh_pairs_cached(spark, sf_dir)
+    pairs = q_minhash_lsh_pairs_docs(spark, sf_dir)
     pr = pagerank(pairs, src_col="id_a", dst_col="id_b",
                   damping=0.85, n_iter=5)
     return pr.select(F.col("id").alias("doc_id"), "pagerank")
@@ -4960,7 +4890,8 @@ def q_ann_hamming_topk(spark, sf_dir):
         emb = load_table(spark, sf_dir, "embeddings")
         return hamming_topk(emb.filter("vec_id < 10"), emb, k=5,
                             dim=EMB_DIM)
-    return _memo_topk(spark, sf_dir, "ann_hamming_topk", build)
+    return session_cache.memo_frame(spark, "ann_hamming_topk", build,
+                                    table_path(sf_dir, "embeddings"))
 
 
 _SQL_HAMMING_CTES = f"""
@@ -5050,7 +4981,8 @@ def q_ann_hamming_rerank(spark, sf_dir):
         return hamming_rerank_topk(
             emb.filter("vec_id < 10"), emb, k=5,
             shortlist=HAM_SHORTLIST, dim=EMB_DIM)
-    return _memo_topk(spark, sf_dir, "ann_hamming_rerank", build)
+    return session_cache.memo_frame(spark, "ann_hamming_rerank", build,
+                                    table_path(sf_dir, "embeddings"))
 
 
 _SQL_HAM_RERANK_CTES = f"""
@@ -5294,7 +5226,7 @@ def q_triangle_stats_docs(spark, sf_dir):
     pagerank_sim_docs."""
     from loudml_spark.pipeline.graph import triangle_stats
 
-    pairs = _lsh_pairs_cached(spark, sf_dir)
+    pairs = q_minhash_lsh_pairs_docs(spark, sf_dir)
     return triangle_stats(pairs).withColumnRenamed("id", "doc_id")
 
 
@@ -5662,7 +5594,7 @@ def q_pagerank_weighted_sim_docs(spark, sf_dir):
     the trajectory is exact cross-engine."""
     from loudml_spark.pipeline.graph import pagerank
 
-    pairs = _lsh_pairs_cached(spark, sf_dir)
+    pairs = q_minhash_lsh_pairs_docs(spark, sf_dir)
     pr = pagerank(pairs, src_col="id_a", dst_col="id_b",
                   weight_col="jaccard", damping=0.85, n_iter=5)
     return pr.select(F.col("id").alias("doc_id"), "pagerank")
@@ -5693,7 +5625,7 @@ def q_graph_components_docs(spark, sf_dir):
     one edge equi-join."""
     from loudml_spark.pipeline.graph import component_stats
 
-    pairs = _lsh_pairs_cached(spark, sf_dir)
+    pairs = q_minhash_lsh_pairs_docs(spark, sf_dir)
     return component_stats(pairs)
 
 
@@ -6465,7 +6397,7 @@ def q_graph_kcore_docs(spark, sf_dir):
     different algorithm; agreement is the correctness argument."""
     from loudml_spark.pipeline.graph import kcore_numbers
 
-    pairs = _lsh_pairs_cached(spark, sf_dir)
+    pairs = q_minhash_lsh_pairs_docs(spark, sf_dir)
     return kcore_numbers(pairs).withColumnRenamed("id", "doc_id")
 
 
@@ -6545,7 +6477,7 @@ def q_incremental_components_docs(spark, sf_dir):
     # only this demo reconstructs them); the shared persisted pair
     # frame serves every scan, so the per-query localCheckpoint copy
     # is gone
-    pairs = _lsh_pairs_cached(spark, sf_dir).select("id_a", "id_b")
+    pairs = q_minhash_lsh_pairs_docs(spark, sf_dir).select("id_a", "id_b")
     standing = pairs.filter(
         (F.col("id_a") < 800) & (F.col("id_b") < 800))
     delta = pairs.filter(

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from loudml_spark import errors
+from loudml_spark.session_cache import persist
 
 _HASH_BITS = 60                     # 15 hex chars of md5
 _HASH_SPAN = float(1 << _HASH_BITS)
@@ -376,13 +377,9 @@ def kmv_jaccard(
     # join both consume it, and without the persist each re-runs the
     # corpus-scale distinct + per-set rank upstream (guide §5 — the
     # frame is ≤ k·|sets| rows, the canonical bounded-sketch size;
-    # registered in the capped LRU like every operator-internal cache)
-    from pyspark import StorageLevel
-
-    from loudml_spark.pipeline.dedup import _persist_bounded
-
-    sk = sk.persist(StorageLevel.MEMORY_AND_DISK)
-    _persist_bounded(sk)
+    # registered in the session cache like every operator-internal
+    # persist)
+    sk = persist(sk)
     sets = [r["__set"] for r in sk.select("__set").distinct().collect()]
     sets.sort()
     if len(sets) < 2:

@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from loudml_spark.session_cache import persist
+
 TOKEN_RE = "[a-z]+"
 
 
@@ -77,17 +79,12 @@ def token_divergence(
     rounds to 9 dp (ln is libm — the last ulp is not engine-portable;
     p and q are exact and stay unrounded)."""
     def dist(df, name):
-        from pyspark import StorageLevel
-
-        from loudml_spark.pipeline.dedup import _persist_bounded
-
         t = tokens(df, text_col=text_col, id_col=id_col, n=n)
         c = t.groupBy("token").agg(F.count("*").alias("__c"))
         # c (vocab-sized) feeds the eager total probe AND the output
         # frame — persist so each side tokenizes once (the
         # bigram_perplexity cu/cb precedent)
-        c = c.persist(StorageLevel.MEMORY_AND_DISK)
-        _persist_bounded(c)
+        c = persist(c)
         total = c.agg(F.sum("__c")).first()[0] or 1
         return c.select(
             "token", (F.col("__c") / F.lit(float(total))).alias(name))
@@ -536,12 +533,7 @@ def sparse_cosine_pairs(
     # scan, so persist_postings=True trades memory for scan when the
     # input is the expensive part (wide tables, remote storage).
     if persist_postings:
-        from pyspark import StorageLevel
-
-        from loudml_spark.pipeline.dedup import _persist_bounded
-
-        u = u.persist(StorageLevel.MEMORY_AND_DISK)
-        _persist_bounded(u)
+        u = persist(u)
     a, b = u.alias("a"), u.alias("b")
     return (
         a.join(b, (F.col("a.token") == F.col("b.token"))
@@ -664,12 +656,7 @@ def bm25_scores(
     # query-term leg instead of twice.  (Persisting the corpus-sized
     # per_doc frame instead was measured SLOWER — see
     # OPTIMIZATION_r12.md; this is the bounded-frame variant.)
-    from pyspark import StorageLevel
-
-    from loudml_spark.pipeline.dedup import _persist_bounded
-
-    doc_len = doc_len.persist(StorageLevel.MEMORY_AND_DISK)
-    _persist_bounded(doc_len)
+    doc_len = persist(doc_len)
     stats = doc_len.agg(
         F.count("*").alias("n"),
         (F.sum(F.col("doc_len").cast("decimal(30,6)")).cast("double")
@@ -749,12 +736,7 @@ def lm_perplexity(
     # cnt (vocabulary-sized) feeds the eager T/V probe AND the
     # scoring join — persist so the corpus tokenize+count runs once
     # (the bigram_perplexity cu/cb precedent, measured there)
-    from pyspark import StorageLevel
-
-    from loudml_spark.pipeline.dedup import _persist_bounded
-
-    cnt = cnt.persist(StorageLevel.MEMORY_AND_DISK)
-    _persist_bounded(cnt)
+    cnt = persist(cnt)
     stats = cnt.agg(
         F.sum("c").cast("long").alias("t_total"),
         F.count("*").alias("v")).first()
@@ -823,12 +805,7 @@ def importance_weights(
     # cnt (joint-vocabulary-sized) feeds the eager T/V probe AND the
     # scoring join — persist so the corpus tokenize+count runs once
     # (the bigram_perplexity cu/cb precedent)
-    from pyspark import StorageLevel
-
-    from loudml_spark.pipeline.dedup import _persist_bounded
-
-    cnt = cnt.persist(StorageLevel.MEMORY_AND_DISK)
-    _persist_bounded(cnt)
+    cnt = persist(cnt)
     stats = cnt.agg(
         F.sum("ct").cast("long").alias("tt"),
         F.sum("cs").cast("long").alias("ts"),
@@ -925,8 +902,6 @@ def textrank_keywords(
     each new rank rounds at ``round_dp``, so ranks stay bit-identical
     doubles by induction over iterations.  Final scores round at 6.
     """
-    from pyspark import StorageLevel
-
     from loudml_spark import errors
 
     if not 0.0 < damping < 1.0:
@@ -940,14 +915,13 @@ def textrank_keywords(
     e = edges.join(out_w, "u").select(
         "u", "v",
         (F.col("c").cast("double") / F.col("w").cast("double"))
-        .alias("p")).persist(StorageLevel.MEMORY_AND_DISK)
-    # register in the bounded LRU: the lazy-return contract means the
-    # operator cannot unpersist e itself (the caller's action is what
-    # materializes the iteration chain), so without registration each
-    # call leaks one pinned vocab-sized frame until session teardown
-    from loudml_spark.pipeline.dedup import _persist_bounded
-
-    _persist_bounded(e)
+        .alias("p"))
+    # persist through the session cache: the lazy-return contract
+    # means the operator cannot unpersist e itself (the caller's
+    # action is what materializes the iteration chain), so without
+    # registration each call leaks one pinned vocab-sized frame until
+    # session teardown
+    e = persist(e)
     n = e.select("u").distinct().count()
     if n == 0:
         e.unpersist()
@@ -1515,10 +1489,6 @@ def bigram_perplexity(
     if min_count < 1:
         raise errors.Invalid(
             f"min_count must be >= 1, got {min_count}")
-    from pyspark import StorageLevel
-
-    from loudml_spark.pipeline.dedup import _persist_bounded
-
     uni = tokens(df, text_col=text_col, id_col=id_col)
     cu = uni.groupBy("token").agg(
         F.count("*").cast("long").alias("cu"))
@@ -1530,9 +1500,8 @@ def bigram_perplexity(
     # (interleaved A/B; persisting the corpus-sized per-doc frame
     # instead is slower, 5.58 s).  Both frames are model-sized, the
     # documented bounded-persist class; released via
-    # catalog.release_caches / the _PERSIST_CAP LRU.
-    cu = cu.persist(StorageLevel.MEMORY_AND_DISK)
-    _persist_bounded(cu)
+    # catalog.release_caches or the session-cache LRU.
+    cu = persist(cu)
     n_total = int(
         cu.agg(F.sum("cu").cast("long").alias("n")).first()["n"])
     if n_total == 0:
@@ -1542,8 +1511,7 @@ def bigram_perplexity(
         F.count("*").cast("long").alias("tf"))
     cb = per_doc.groupBy("token").agg(
         F.sum("tf").cast("long").alias("cb"))
-    cb = cb.persist(StorageLevel.MEMORY_AND_DISK)
-    _persist_bounded(cb)
+    cb = persist(cb)
     # context totals stay exact (they come from the unpruned frame);
     # only the pairwise numerator table shrinks under min_count
     ctx = cb.groupBy(

@@ -30,8 +30,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
-from pyspark.storagelevel import StorageLevel
 
+from loudml_spark import session_cache
 from loudml_spark.pipeline.text import (
     HASH_MOD,
     TOKEN_RE,
@@ -59,33 +59,8 @@ def _shingle_index_col(w: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<int>"))
 
 
-_PERSISTED: list = []  # [(semantic_hash, df)] — LRU, most recent last
-# Bound on simultaneously persisted operator frames, so a repeated
-# caller (bench reps, a long-lived service) doesn't accumulate them
-# until an explicit release.  Evicting the LEAST-RECENTLY-registered
-# beyond this cap is always correct — an evicted frame still
-# referenced by a live plan is simply recomputed on next use.
-#
-# Sized for the CURRENT registry population, not just the LSH
-# signature frame it was built for: the LM-family count frames
-# (bigram cu/cb, unigram cnt, bm25 doc_len, token_divergence sides,
-# ivf cells, exactsubstr grams), the shared LSH pair frame and the
-# four spans frames (contamination/leak/seeded-leak/repeated — each
-# shared with its excision twin) now register here too, ~20 distinct
-# plans live across a catalog pass.  The original cap of 2 made
-# every LM query evict the LSH signature cache, so each graph-family
-# consumer re-ran the dominant Arrow shingle pass (measured: the
-# whole LSH/graph family regressed 1-2 s/query at sf0.1 once the LM
-# persists landed) — the cap must exceed the live population or the
-# LRU thrashes exactly the frames it exists to keep.  Round 13 adds
-# the ANN top-k result frames (7 per corpus dir × 2 dirs — exact +
-# six index pipelines, each 50-100 rows, shared by the recall
-# gates), lifting the live population to ~34; cap raised to keep the
-# no-thrash invariant.  Every registered frame is
-# model/vocab/result-sized (the documented bounded-persist class)
-# and MEMORY_AND_DISK, so 48 of them is a trivial footprint at any
-# scale.
-_PERSIST_CAP = 48
+# perfbench/env.py reads this name; persists live in session_cache.
+_PERSISTED = ()
 
 
 def verify_spread(df: DataFrame, *key_cols: str) -> DataFrame:
@@ -160,46 +135,6 @@ def posting_pairs(plist: DataFrame, ids_col: str = "ids") -> DataFrame:
         )).alias("p"))
         .select("p.id_a", "p.id_b")
     )
-
-
-def _persist_bounded(df) -> None:
-    """Register a persisted frame in the capped LRU.
-
-    Dedup by SEMANTIC hash, not object identity: two DataFrame
-    objects with the same analyzed plan (e.g. lsh_recall_audit and
-    minhash_lsh_pairs both building the signature frame) share ONE
-    cache manager entry, and unpersisting the older object would
-    drop the data the newer one still reads.  A re-registration of
-    an already-known plan just refreshes its LRU position."""
-    try:
-        h = df.semanticHash()
-    except Exception:
-        h = id(df)
-    for i, (h0, _) in enumerate(_PERSISTED):
-        if h0 == h:
-            _PERSISTED.append(_PERSISTED.pop(i))
-            return
-    _PERSISTED.append((h, df))
-    while len(_PERSISTED) > _PERSIST_CAP:
-        _, old = _PERSISTED.pop(0)
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-
-
-def release_persisted() -> None:
-    """Unpersist frames cached by dedup operators (the LSH shingle/
-    signature frame).  Wired into catalog.release_caches so bench /
-    test teardown drops them; long-lived callers invoking
-    minhash_lsh_pairs repeatedly are additionally protected by the
-    _PERSIST_CAP LRU eviction."""
-    while _PERSISTED:
-        _, df = _PERSISTED.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped
 
 
 def shingles_col(text: Column, n: int = 3) -> Column:
@@ -475,7 +410,7 @@ def shingle_signatures(
     ``corpus_sig``, cluster maintenance) reads the stored keys
     instead of re-hashing the text.  Lazy, map-only by default;
     ``persist=True`` additionally caches it memory-and-disk
-    (bounded registry, released by ``release_persisted``) and
+    (through the session cache, released by ``release_caches``) and
     materializes EAGERLY — the multi-consumer form the LSH paths
     use, where concurrent stages would otherwise race to
     compute-and-cache the same partitions."""
@@ -484,8 +419,7 @@ def shingle_signatures(
         _shingle_sig_udf(n, tokenizer)(F.col(text_col)).alias("ss"),
     ).select("id", F.col("ss.sh").alias("sh"), F.col("ss.sig").alias("sig"))
     if persist:
-        sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
-        _persist_bounded(sig)
+        sig = session_cache.persist(sig)
         sig.count()
     return sig
 
@@ -2061,14 +1995,12 @@ def ngram_containment_pairs(
     # aggregate, and BOTH sides of the candidate self-join — without
     # the persist every branch re-runs the shingle UDF over the full
     # corpus (measured: 32 ArrowEvalPython stages → 2 at sf0.01)
-    ex = ex.persist(StorageLevel.MEMORY_AND_DISK)
-    _persist_bounded(ex)
+    ex = session_cache.persist(ex)
     if max_df is not None:
         keep = ex.groupBy("h").agg(
             F.count("*").alias("__df")).filter(F.col("__df") <= max_df)
         ex = ex.join(keep.select("h"), "h")
-        ex = ex.persist(StorageLevel.MEMORY_AND_DISK)
-        _persist_bounded(ex)
+        ex = session_cache.persist(ex)
     # sizes from the POST-cut gram space so numerator and denominator
     # measure the same universe (otherwise the stop-gram cut silently
     # deflates containment of boilerplate-heavy docs)

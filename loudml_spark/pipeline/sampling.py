@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from loudml_spark import errors
+from loudml_spark.session_cache import persist
 
 SPLIT_MOD = 10_000
 
@@ -636,17 +637,12 @@ def excess_loss_weights(
     # exact and order-independent), so baseline/total_tokens are
     # bit-identical while the corpus-scan count drops from two to
     # one (guide §2.4: aggregate before you probe).
-    from pyspark import StorageLevel
-
-    from loudml_spark.pipeline.dedup import _persist_bounded
-
     per0 = df.groupBy(domain_col).agg(
         F.count("*").alias("n_docs"),
         F.sum(size_col).cast("long").alias("n_tokens"),
         F.sum(loss_dec).alias("__sum_loss"),
         F.sum(size_col).alias("__tok_raw"))
-    per0 = per0.persist(StorageLevel.MEMORY_AND_DISK)
-    _persist_bounded(per0)
+    per0 = persist(per0)
     g = per0.agg(
         F.round(F.sum("__sum_loss").cast("double")
                 / F.sum("n_docs"), 6).alias("baseline"),

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from loudml_spark.litexpr import lit_doubles
 from loudml_spark.pipeline.dedup import cosine_col
+from loudml_spark.session_cache import persist
 
 
 def cosine_topk(
@@ -576,10 +577,6 @@ def semdedup_pairs(
     cosine ≥ ``threshold`` (rounded to ``round_to`` dp BEFORE the
     threshold so the pair set is engine-exact).
     """
-    from pyspark import StorageLevel
-
-    from loudml_spark.pipeline.dedup import _persist_bounded, cosine_col
-
     C = train_ivf_centroids(
         corpus, n_centroids, vec_col=vec_col, seed=seed
     )
@@ -597,8 +594,7 @@ def semdedup_pairs(
     # the double Arrow pass survives a lazy persist (measured at 20k
     # vectors / 157 cells: lazy persist saved ~nothing, eager cut the
     # query ~40%).  One bounded extra job in exchange.
-    cells = cells.persist(StorageLevel.MEMORY_AND_DISK)
-    _persist_bounded(cells)
+    cells = persist(cells)
     cells.count()
     a = cells.select(
         F.col("cell"), F.col(id_col).alias("id_a"),

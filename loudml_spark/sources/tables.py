@@ -26,6 +26,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from loudml_spark import session_cache
+
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -49,34 +51,31 @@ def _has_nanos_ts(path: str) -> bool:
         return True
 
 
-# Lazy-PLAN memo: (applicationId, session timezone, sf_dir, name) →
-# the loader's DataFrame.  `spark.read.parquet` pays a driver-side
-# file listing + footer schema read on EVERY call, and a catalog pass
-# calls this loader several hundred times for the same ten paths — a
-# measured per-query constant (round-13 phase profile).  The memo
-# holds the LAZY scan plan only: no rows, no persisted storage,
-# nothing keyed on data content — every action still computes from
-# the parquet inputs, and a new session (new applicationId) re-lists
-# and re-reads schemas from scratch.  The timezone is in the key because
-# the events loader derives ts_ns through current_timezone(): a plan
-# built under one session timezone is wrong under another.
-_PLAN_MEMO: dict[tuple, DataFrame] = {}
+# perfbench/env.py reads this name; the plans live in session_cache.
+_PLAN_MEMO = ()
+
+
+def table_path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId,
-           spark.conf.get("spark.sql.session.timeZone"),
-           os.path.abspath(sf_dir), name)
-    hit = _PLAN_MEMO.get(key)
-    if hit is not None:
-        return hit
-    df = _load_table(spark, sf_dir, name)
-    _PLAN_MEMO[key] = df
-    return df
+    """The table's lazy scan plan, memoized in the session cache.
+    ``spark.read.parquet`` pays a driver-side file listing and footer
+    schema read on every call, and a catalog pass calls this loader
+    several hundred times for the same ten paths (a measured per-query
+    constant in the round-13 phase profile).  The memo holds the lazy
+    plan only: no rows and no persisted storage, so every action still
+    computes from the parquet.  The cache key carries the session
+    timezone, which the events loader reads through
+    current_timezone(), and the file's mtime, so a rewritten table
+    gets a fresh listing."""
+    path = table_path(sf_dir, name)
+    return session_cache.memo(
+        spark, "load_table", lambda: _load_table(spark, path, name), path)
 
 
-def _load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = os.path.join(sf_dir, f"{name}.parquet")
+def _load_table(spark: SparkSession, path: str, name: str) -> DataFrame:
     if name == "events":
         if _has_nanos_ts(path):
             # read-compat for the int64-raw-nanos layout only

@@ -243,58 +243,6 @@ class TestIncrementalComponents:
             incremental_components(bad, good)
 
 
-class TestPersistLRU:
-    """The bounded-persist registry (pipeline/dedup._persist_bounded)
-    is an LRU shared by the LSH signature frame AND the LM-family
-    count frames (r12).  Two contracts: (1) re-registering a frame
-    with the SAME analyzed plan must not create a second entry —
-    both objects share one cache-manager entry, and evicting the
-    older would drop the data the newer still reads; (2) the cap
-    must hold with oldest-first eviction."""
-
-    def _fresh_registry(self):
-        from loudml_spark.pipeline import dedup
-
-        saved = list(dedup._PERSISTED)
-        dedup._PERSISTED.clear()
-        return dedup, saved
-
-    def test_same_plan_registers_once_and_refreshes_lru(self, spark):
-        dedup, saved = self._fresh_registry()
-        try:
-            a = spark.range(5).persist()
-            b = spark.range(5).persist()   # same analyzed plan as a
-            other = spark.range(7).persist()
-            dedup._persist_bounded(a)
-            dedup._persist_bounded(other)
-            dedup._persist_bounded(b)      # dedup + move-to-end
-            assert len(dedup._PERSISTED) == 2
-            # `a`'s slot was refreshed by `b`: evicting one more
-            # frame must drop `other`, never the shared range(5) plan
-            hashes = [h for h, _ in dedup._PERSISTED]
-            assert hashes[-1] == a.semanticHash()
-        finally:
-            dedup.release_persisted()
-            dedup._PERSISTED.extend(saved)
-
-    def test_cap_evicts_oldest_and_unpersists(self, spark):
-        dedup, saved = self._fresh_registry()
-        try:
-            frames = [spark.range(10 + i).persist()
-                      for i in range(dedup._PERSIST_CAP + 2)]
-            for f in frames:
-                f.count()
-                dedup._persist_bounded(f)
-            assert len(dedup._PERSISTED) == dedup._PERSIST_CAP
-            # the two oldest were evicted AND unpersisted
-            assert frames[0].storageLevel.useMemory is False
-            assert frames[1].storageLevel.useMemory is False
-            assert frames[-1].storageLevel.useMemory is True
-        finally:
-            dedup.release_persisted()
-            dedup._PERSISTED.extend(saved)
-
-
 @pytest.fixture(params=["one_task", "star_loop"])
 def cc_path(request, monkeypatch):
     """Run dedup_clusters on each of its two paths: the default

@@ -648,27 +648,6 @@ def test_drain_defaults_rocksdb_and_exposes_state_metrics(spark):
     assert spark.conf.get(key, None) == prev  # conf restored
 
 
-def test_release_caches_removes_staging_dirs(spark):
-    """The streaming queries cache their staging dir as a path in the
-    catalog cache; release_caches() must delete it, not just drop the
-    entry (an unpersist() on a str used to fail silently and leave the
-    lms_* dir on disk)."""
-    import glob
-
-    from loudml_spark.catalog import QUERIES, _CACHED_SERIES, release_caches
-
-    sf_dir = "/root/testdata/sf0.001"
-    pattern = os.path.join(tempfile.gettempdir(), "lms_*")
-    before = set(glob.glob(pattern))
-    QUERIES["streaming_dedup_events"]["fn"](spark, sf_dir).collect()
-    staged = _CACHED_SERIES[
-        (spark.sparkContext.applicationId, sf_dir, "stage_dedup")]
-    assert os.path.isdir(staged)
-    release_caches()
-    assert not os.path.exists(staged)
-    assert not set(glob.glob(pattern)) - before
-
-
 def test_stream_interval_join_cross_batch(spark, tmpdir):
     """Stream-stream interval join: a (click, purchase) pair split
     ACROSS micro-batches must still match through the join state
