@@ -16,9 +16,27 @@ robust across engines:
 * count columns cast to DOUBLE (loudml counts are floats,
   loudml/worker.py:158) and fill 0 for empty buckets;
 * every computed column is aliased identically in Spark and SQL.
+
+``QUERIES`` is built from the four catalog modules (this one,
+``catalog_pipeline``, ``catalog_tpch``, ``catalog_ext``, in that
+order, each in definition order) by one rule.  A function
+``q_<name>(spark, sf_dir)`` defined in a catalog module is query
+``<name>``; its oracle is whichever ONE of these the same module
+holds:
+
+* ``SQL_<NAME>`` — static DuckDB SQL (spec key ``"oracle"``);
+* ``_sql_<name>(sf_dir=None)`` — a generator returning the SQL
+  (spec key ``"oracle_fn"``), for oracles derived from the data.
+
+To add a query, define ``q_<name>`` and its oracle; nothing else.  A
+query that shares another's oracle binds it under its own name
+(``SQL_B = SQL_A``).  A name defined twice, or a query with no or
+two oracles, fails the import.
 """
 
 from __future__ import annotations
+
+import sys
 
 from pyspark.sql import functions as F
 
@@ -1396,119 +1414,51 @@ FROM j
 
 # ---------------------------------------------------------------- registry
 
-# oracle generators for the learned-model queries (lazy: they import
-# this module back inside their functions, never at import time)
-from loudml_spark import catalog_oracle_ml as _oracle_ml  # noqa: E402
-
-QUERIES: dict[str, dict] = {
-    "ts_avg_1h": {"fn": q_ts_avg_1h, "oracle": SQL_TS_AVG_1H},
-    "ts_multi_metric_6h": {
-        "fn": q_ts_multi_metric_6h, "oracle": SQL_TS_MULTI_METRIC_6H},
-    "ts_sum_1d": {"fn": q_ts_sum_1d, "oracle": SQL_TS_SUM_1D},
-    "ts_count_by_type_6h": {
-        "fn": q_ts_count_by_type_6h, "oracle": SQL_TS_COUNT_BY_TYPE_6H},
-    "ts_match_all_12h": {
-        "fn": q_ts_match_all_12h, "oracle": SQL_TS_MATCH_ALL_12H},
-    "ts_stddev_var_1d": {
-        "fn": q_ts_stddev_var_1d, "oracle": SQL_TS_STDDEV_VAR_1D},
-    "ts_percentiles_1d": {
-        "fn": q_ts_percentiles_1d, "oracle": SQL_TS_PERCENTILES_1D},
-    "ts_fill_previous_1h": {
-        "fn": q_ts_fill_previous_1h, "oracle": SQL_TS_FILL_PREVIOUS_1H},
-    "ts_fill_default_1h": {
-        "fn": q_ts_fill_default_1h, "oracle": SQL_TS_FILL_DEFAULT_1H},
-    "ts_derivative_1h": {
-        "fn": q_ts_derivative_1h, "oracle": SQL_TS_DERIVATIVE_1H},
-    "ts_integral_6h": {"fn": q_ts_integral_6h, "oracle": SQL_TS_INTEGRAL_6H},
-    "ts_diff_1d": {"fn": q_ts_diff_1d, "oracle": SQL_TS_DIFF_1D},
-    "ts_mode_1d": {"fn": q_ts_mode_1d, "oracle": SQL_TS_MODE_1D},
-    "ts_hourofday_profile": {
-        "fn": q_ts_hourofday_profile, "oracle": SQL_TS_HOUROFDAY_PROFILE},
-    "ts_align_measurements_1d": {
-        "fn": q_ts_align_measurements_1d,
-        "oracle": SQL_TS_ALIGN_MEASUREMENTS_1D},
-    "events_top3_users_daily": {
-        "fn": q_events_top3_users_daily,
-        "oracle": SQL_EVENTS_TOP3_USERS_DAILY},
-    "tpch_pricing_summary": {
-        "fn": q_tpch_pricing_summary, "oracle": SQL_TPCH_PRICING_SUMMARY},
-    "anomaly_scores_1h": {
-        "fn": q_anomaly_scores_1h, "oracle": SQL_ANOMALY_SCORES_1H},
-    "anomaly_detect_1h": {
-        "fn": q_anomaly_detect_1h, "oracle": SQL_ANOMALY_DETECT_1H},
-    "keyed_anomaly_detect_6h": {
-        "fn": q_keyed_anomaly_detect_6h,
-        "oracle": SQL_KEYED_ANOMALY_DETECT_6H},
-    "tpch_q3_shipping": {
-        "fn": q_tpch_q3_shipping, "oracle": SQL_TPCH_Q3_SHIPPING},
-    "tpch_q5_local_supplier": {
-        "fn": q_tpch_q5_local_supplier,
-        "oracle": SQL_TPCH_Q5_LOCAL_SUPPLIER},
-    "tpch_q8_market_share": {
-        "fn": q_tpch_q8_market_share,
-        "oracle": SQL_TPCH_Q8_MARKET_SHARE,
-    },
-    "tpch_q7_volume_shipping": {
-        "fn": q_tpch_q7_volume_shipping,
-        "oracle": SQL_TPCH_Q7_VOLUME_SHIPPING},
-    "tpch_q10_returned_items": {
-        "fn": q_tpch_q10_returned_items,
-        "oracle": SQL_TPCH_Q10_RETURNED_ITEMS},
-    "events_by_segment": {
-        "fn": q_events_by_segment, "oracle": SQL_EVENTS_BY_SEGMENT},
-    "asof_enrich_events_orders": {
-        "fn": q_asof_enrich_events_orders,
-        "oracle": SQL_ASOF_ENRICH_EVENTS_ORDERS},
-    "asof_enrich_tolerance_7d": {
-        "fn": q_asof_enrich_tolerance_7d,
-        "oracle": SQL_ASOF_ENRICH_TOLERANCE_7D},
-    "ar_fleet_predict_6h": {
-        "fn": q_ar_fleet_predict_6h,
-        "oracle_fn": _oracle_ml.sql_ar_fleet_predict_6h},
-    "donut_predict_1h": {
-        "fn": q_donut_predict_1h,
-        "oracle_fn": _oracle_ml.sql_donut_predict_1h},
-    "forecast_donut_48h": {
-        "fn": q_forecast_donut_48h,
-        "oracle_fn": _oracle_ml.sql_forecast_donut_48h},
-    "forecast_donut_fleet_6h": {
-        "fn": q_forecast_donut_fleet_6h,
-        "oracle_fn": _oracle_ml.sql_forecast_donut_fleet_6h},
-    "donut_fleet_6h": {
-        "fn": q_donut_fleet_6h,
-        "oracle_fn": _oracle_ml.sql_donut_fleet_6h},
-}
-
-# training-data pipeline operators (dedup / similarity / text)
-from loudml_spark.catalog_pipeline import PIPELINE_QUERIES  # noqa: E402
-
-# TPC-H completion: the 15 query patterns beyond q1/q3/q4/q5/q7/q8/q10
-from loudml_spark.catalog_tpch import TPCH_QUERIES  # noqa: E402
-
-# relational/time-series extensions (sessionize / range join / rollup /
-# corpus vocabulary + TF-IDF)
-from loudml_spark.catalog_ext import EXT_QUERIES  # noqa: E402
-
-
-def _merge_disjoint(base, *parts):
-    """dict.update is last-write-wins, so a name collision between
-    catalog modules would silently shadow a query AND its oracle while
-    every downstream gate stayed green (it would only ever see the
-    survivor).  Fail loudly at import time instead."""
-    for name, extra in parts:
-        dup = base.keys() & extra.keys()
-        if dup:
-            raise RuntimeError(
-                "catalog registry collision from %s: %s" % (name, sorted(dup)))
-        base.update(extra)
-
-
-_merge_disjoint(
-    QUERIES,
-    ("catalog_pipeline", PIPELINE_QUERIES),
-    ("catalog_tpch", TPCH_QUERIES),
-    ("catalog_ext", EXT_QUERIES),
+# the learned-model oracles, bound under the naming rule (their module
+# imports this one back inside its functions, never at import time)
+from loudml_spark.catalog_oracle_ml import (  # noqa: E402
+    sql_ar_fleet_predict_6h as _sql_ar_fleet_predict_6h,
+    sql_donut_fleet_6h as _sql_donut_fleet_6h,
+    sql_donut_predict_1h as _sql_donut_predict_1h,
+    sql_forecast_donut_48h as _sql_forecast_donut_48h,
+    sql_forecast_donut_fleet_6h as _sql_forecast_donut_fleet_6h,
 )
+from loudml_spark import (  # noqa: E402
+    catalog_ext,
+    catalog_pipeline,
+    catalog_tpch,
+)
+
+
+def _build_registry(modules) -> dict[str, dict]:
+    """Apply the naming rule (module docstring) to ``modules`` in
+    order.  A query name defined in two modules, or a query without
+    exactly one oracle, raises at import: a silently shadowed query
+    would leave every downstream gate green."""
+    out: dict[str, dict] = {}
+    for mod in modules:
+        for attr, fn in list(vars(mod).items()):
+            if not (attr.startswith("q_") and callable(fn)
+                    and fn.__module__ == mod.__name__):
+                continue
+            name = attr[2:]
+            if name in out:
+                raise RuntimeError(
+                    f"catalog query {name!r} is defined in both "
+                    f"{out[name]['fn'].__module__} and {mod.__name__}")
+            sql = getattr(mod, "SQL_" + name.upper(), None)
+            sql_fn = getattr(mod, "_sql_" + name, None)
+            if (sql is None) == (sql_fn is None):
+                raise RuntimeError(
+                    f"catalog query {name!r} in {mod.__name__} needs "
+                    f"exactly one of SQL_{name.upper()} and _sql_{name}")
+            out[name] = ({"fn": fn, "oracle": sql} if sql_fn is None
+                         else {"fn": fn, "oracle_fn": sql_fn})
+    return out
+
+
+QUERIES: dict[str, dict] = _build_registry([
+    sys.modules[__name__], catalog_pipeline, catalog_tpch, catalog_ext])
 
 
 def queries():

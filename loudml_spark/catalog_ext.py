@@ -1484,7 +1484,7 @@ def q_ts_interp_linear_1h(spark, sf_dir):
         "bucket_ts", F.round("avg_value", 6).alias("avg_value"))
 
 
-def _sql_ts_interp_linear_1h() -> str:
+def _sql_ts_interp_linear_1h(sf_dir=None) -> str:
     from loudml_spark.catalog import _spine_sql
 
     return _spine_sql(3600) + """
@@ -1675,7 +1675,7 @@ def q_ts_ewma_6h(spark, sf_dir):
     )
 
 
-def _sql_ts_ewma_6h() -> str:
+def _sql_ts_ewma_6h(sf_dir=None) -> str:
     from loudml_spark.operators.tsmath import ewma_trunc_sql
 
     expr = ewma_trunc_sql(
@@ -1929,7 +1929,7 @@ SELECT 3, 'purchase', CAST(SUM(CAST(r2 AS BIGINT)) AS BIGINT) FROM u
 """
 
 
-def q_funnel_latency_view_click_purchase(spark, sf_dir):
+def q_funnel_latency_vcp(spark, sf_dir):
     """Conversion-latency distribution per funnel transition: exact
     p50/p90 and mean of the time from a user's earliest chain
     completion of step k-1 to their earliest completion of step k
@@ -1950,7 +1950,7 @@ def q_funnel_latency_view_click_purchase(spark, sf_dir):
     )
 
 
-SQL_FUNNEL_LATENCY_VIEW_CLICK_PURCHASE = """
+SQL_FUNNEL_LATENCY_VCP = """
 WITH e AS (
   SELECT user_id, epoch_ns(ts) AS ts, event_type FROM events
 ),
@@ -2636,6 +2636,8 @@ def q_streaming_cms_heavy_hitters(spark, sf_dir):
         (F.col("cms_estimate") >= F.col("tf")).alias("no_undercount"),
     )
 
+
+_sql_streaming_cms_heavy_hitters = _sql_cms_heavy_hitters
 
 
 def q_streaming_join_click_purchase(spark, sf_dir):
@@ -3388,6 +3390,9 @@ def q_streaming_page_hinkley_daily(spark, sf_dir):
         "is_change")
 
 
+SQL_STREAMING_PAGE_HINKLEY_DAILY = SQL_PAGE_HINKLEY_DAILY
+
+
 def q_ks_click_vs_view(spark, sf_dir):
     """Two-sample KS drift test between the value distributions of
     click and view events — the binning-free companion to the PSI
@@ -3796,275 +3801,6 @@ ORDER BY rule
 """
 
 
-EXT_QUERIES: dict[str, dict] = {
-    "xcorr_click_view_1h": {
-        "fn": q_xcorr_click_view_1h,
-        "oracle": SQL_XCORR_CLICK_VIEW_1H},
-    "theil_sen_daily_by_type": {
-        "fn": q_theil_sen_daily_by_type,
-        "oracle": SQL_THEIL_SEN_DAILY_BY_TYPE},
-    "backtest_naive_daily": {
-        "fn": q_backtest_naive_daily,
-        "oracle": SQL_BACKTEST_NAIVE_DAILY},
-    "dq_audit_lineitem": {
-        "fn": q_dq_audit_lineitem,
-        "oracle": SQL_DQ_AUDIT_LINEITEM},
-    "winsorized_mean_by_type": {
-        "fn": q_winsorized_mean_by_type,
-        "oracle": SQL_WINSORIZED_MEAN_BY_TYPE},
-    "survival_view_to_purchase": {
-        "fn": q_survival_view_to_purchase,
-        "oracle": SQL_SURVIVAL_VIEW_TO_PURCHASE},
-    "changepoint_daily_by_type": {
-        "fn": q_changepoint_daily_by_type,
-        "oracle": SQL_CHANGEPOINT_DAILY_BY_TYPE},
-    "ts_strength_by_type": {
-        "fn": q_ts_strength_by_type,
-        "oracle": SQL_TS_STRENGTH_BY_TYPE},
-    "brown_forecast_daily": {
-        "fn": q_brown_forecast_daily,
-        "oracle_fn": _sql_brown_forecast_daily},
-    "hw_forecast_daily": {
-        "fn": q_hw_forecast_daily,
-        "oracle_fn": _sql_hw_forecast_daily},
-    "conformal_naive_daily": {
-        "fn": q_conformal_naive_daily,
-        "oracle": SQL_CONFORMAL_NAIVE_DAILY},
-    "spectral_residual_daily": {
-        "fn": q_spectral_residual_daily,
-        "oracle_fn": _sql_spectral_residual_daily},
-    "ks_click_vs_view": {
-        "fn": q_ks_click_vs_view, "oracle": SQL_KS_CLICK_VS_VIEW},
-    "page_hinkley_daily": {
-        "fn": q_page_hinkley_daily, "oracle": SQL_PAGE_HINKLEY_DAILY},
-    "streaming_page_hinkley_daily": {
-        "fn": q_streaming_page_hinkley_daily,
-        "oracle": SQL_PAGE_HINKLEY_DAILY},
-    "acf_hourly_clicks": {
-        "fn": q_acf_hourly_clicks,
-        "oracle": SQL_ACF_HOURLY_CLICKS},
-    "mann_kendall_daily_by_type": {
-        "fn": q_mann_kendall_daily_by_type,
-        "oracle": SQL_MANN_KENDALL_DAILY_BY_TYPE},
-    "periodogram_hourly_clicks": {
-        "fn": q_periodogram_hourly_clicks,
-        "oracle": SQL_PERIODOGRAM_HOURLY_CLICKS},
-    "ljung_box_daily_by_type": {
-        "fn": q_ljung_box_daily_by_type,
-        "oracle": SQL_LJUNG_BOX_DAILY_BY_TYPE},
-    "naive_forecast_daily_by_type": {
-        "fn": q_naive_forecast_daily_by_type,
-        "oracle": SQL_NAIVE_FORECAST_DAILY_BY_TYPE},
-    "cms_heavy_hitters": {
-        "fn": q_cms_heavy_hitters,
-        "oracle_fn": lambda sf_dir=None: _sql_cms_heavy_hitters(),
-    },
-    "lttb_hourly_100": {
-        "fn": q_lttb_hourly_100,
-        "oracle_fn": _sql_lttb_hourly_100,
-    },
-    "rolling_active_users_24h": {
-        "fn": q_rolling_active_users_24h,
-        "oracle": SQL_ROLLING_ACTIVE_USERS_24H,
-    },
-    "stl_anomaly_24x1h": {
-        "fn": q_stl_anomaly_24x1h,
-        "oracle": SQL_STL_ANOMALY_24X1H,
-    },
-    "rolling_p95_6x1h": {
-        "fn": q_rolling_p95_6x1h,
-        "oracle": SQL_ROLLING_P95_6X1H,
-    },
-    "slo_burn_rate_1h_6h": {
-        "fn": q_slo_burn_rate_1h_6h,
-        "oracle": SQL_SLO_BURN_RATE_1H_6H,
-    },
-    "twa_value_by_type": {
-        "fn": q_twa_value_by_type,
-        "oracle": SQL_TWA_VALUE_BY_TYPE,
-    },
-    "gap_report_30m": {
-        "fn": q_gap_report_30m,
-        "oracle": SQL_GAP_REPORT_30M,
-    },
-    "trailing_counts_2h": {
-        "fn": q_trailing_counts_2h,
-        "oracle": SQL_TRAILING_COUNTS_2H,
-    },
-    "funnel_view_click_purchase": {
-        "fn": q_funnel_view_click_purchase,
-        "oracle": SQL_FUNNEL_VIEW_CLICK_PURCHASE,
-    },
-    "funnel_latency_vcp": {
-        "fn": q_funnel_latency_view_click_purchase,
-        "oracle": SQL_FUNNEL_LATENCY_VIEW_CLICK_PURCHASE,
-    },
-    "cohort_retention_daily": {
-        "fn": q_cohort_retention_daily,
-        "oracle": SQL_COHORT_RETENTION_DAILY,
-    },
-    "decile_bins_by_type": {
-        "fn": q_decile_bins_by_type,
-        "oracle": SQL_DECILE_BINS_BY_TYPE,
-    },
-    "ts_decompose_24x1h": {
-        "fn": q_ts_decompose_24x1h,
-        "oracle": SQL_TS_DECOMPOSE_24X1H,
-    },
-    "scd2_user_tiers": {
-        "fn": q_scd2_user_tiers,
-        "oracle": SQL_SCD2_USER_TIERS,
-    },
-    "ts_ewma_6h": {
-        "fn": q_ts_ewma_6h,
-        "oracle_fn": lambda sf_dir=None: _sql_ts_ewma_6h(),
-    },
-    "profile_events": {
-        "fn": q_profile_events,
-        "oracle": SQL_PROFILE_EVENTS,
-    },
-    "ts_rate_counter_1h": {
-        "fn": q_ts_rate_counter_1h,
-        "oracle": SQL_TS_RATE_COUNTER_1H,
-    },
-    "ts_interp_linear_1h": {
-        "fn": q_ts_interp_linear_1h,
-        "oracle_fn": lambda sf_dir=None: _sql_ts_interp_linear_1h(),
-    },
-    "ts_cusum_1d": {
-        "fn": q_ts_cusum_1d,
-        "oracle": SQL_TS_CUSUM_1D,
-    },
-    "ts_mad_scores_6h": {
-        "fn": q_ts_mad_scores_6h,
-        "oracle": SQL_TS_MAD_SCORES_6H,
-    },
-    "sessionize_users_30m": {
-        "fn": q_sessionize_users_30m,
-        "oracle": SQL_SESSIONIZE_USERS_30M,
-    },
-    "streaming_sessionize_30m": {
-        "fn": q_streaming_sessionize_30m,
-        "oracle": SQL_STREAMING_SESSIONIZE_30M,
-    },
-    "streaming_dedup_events": {
-        "fn": q_streaming_dedup_events,
-        "oracle": SQL_STREAMING_DEDUP_EVENTS,
-    },
-    "streaming_join_click_purchase": {
-        "fn": q_streaming_join_click_purchase,
-        "oracle": SQL_STREAMING_JOIN_CLICK_PURCHASE,
-    },
-    "sessionize_native_30m": {
-        "fn": q_sessionize_native_30m,
-        "oracle": SQL_SESSIONIZE_NATIVE_30M,
-    },
-    "range_join_windows_2h": {
-        "fn": q_range_join_windows_2h,
-        "oracle": SQL_RANGE_JOIN_WINDOWS_2H,
-    },
-    "salted_agg_users": {
-        "fn": q_salted_agg_users,
-        "oracle": SQL_SALTED_AGG_USERS,
-    },
-    "salted_join_segments": {
-        "fn": q_salted_join_segments,
-        "oracle": SQL_SALTED_JOIN_SEGMENTS,
-    },
-    "rollup_1h_6h_1d": {
-        "fn": q_rollup_1h_6h_1d,
-        "oracle": SQL_ROLLUP_1H_6H_1D,
-    },
-    "ts_moving_avg_6x1h": {
-        "fn": q_ts_moving_avg_6x1h,
-        "oracle": SQL_TS_MOVING_AVG_6X1H,
-    },
-    "histogram_values_by_type": {
-        "fn": q_histogram_values_by_type,
-        "oracle": SQL_HISTOGRAM_VALUES_BY_TYPE,
-    },
-    "psi_value_drift_by_type": {
-        "fn": q_psi_value_drift_by_type,
-        "oracle": SQL_PSI_VALUE_DRIFT_BY_TYPE,
-    },
-    "distinct_users_daily": {
-        "fn": q_distinct_users_daily,
-        "oracle": SQL_DISTINCT_USERS_DAILY,
-    },
-    "approx_distinct_users_daily": {
-        "fn": q_approx_distinct_users_daily,
-        "oracle": SQL_APPROX_DISTINCT_USERS_DAILY,
-    },
-    "approx_percentiles_1d": {
-        "fn": q_approx_percentiles_1d,
-        "oracle": SQL_APPROX_PERCENTILES_1D,
-    },
-    "token_divergence_en_rest": {
-        "fn": q_token_divergence_en_rest,
-        "oracle": SQL_TOKEN_DIVERGENCE_EN_REST,
-    },
-    "rollup_grouping_sets": {
-        "fn": q_rollup_grouping_sets,
-        "oracle": SQL_ROLLUP_GROUPING_SETS,
-    },
-    "pivot_types_daily": {
-        "fn": q_pivot_types_daily,
-        "oracle": SQL_PIVOT_TYPES_DAILY,
-    },
-    "tpch_q4_priority_semi": {
-        "fn": q_tpch_q4_priority_semi,
-        "oracle": SQL_TPCH_Q4_PRIORITY_SEMI,
-    },
-    "orders_no_late_lines_anti": {
-        "fn": q_orders_no_late_lines_anti,
-        "oracle": SQL_ORDERS_NO_LATE_LINES_ANTI,
-    },
-    "unpivot_lineitem_measures": {
-        "fn": q_unpivot_lineitem_measures,
-        "oracle": SQL_UNPIVOT_LINEITEM_MEASURES,
-    },
-    "bm25_top25_docs": {
-        "fn": q_bm25_top25_docs,
-        "oracle": SQL_BM25_TOP25_DOCS},
-    "lm_perplexity_docs": {
-        "fn": q_lm_perplexity_docs,
-        "oracle_fn": _sql_lm_perplexity_docs},
-    "dsir_weights_docs": {
-        "fn": q_dsir_weights_docs,
-        "oracle_fn": _sql_dsir_weights_docs},
-    "dsir_resample_docs": {
-        "fn": q_dsir_resample_docs,
-        "oracle_fn": _sql_dsir_resample_docs},
-    "textrank_keywords_docs": {
-        "fn": q_textrank_keywords_docs,
-        "oracle_fn": _sql_textrank_keywords_docs},
-    "benford_prices_by_flag": {
-        "fn": q_benford_prices_by_flag,
-        "oracle_fn": _sql_benford_prices_by_flag},
-    "streaming_cms_heavy_hitters": {
-        "fn": q_streaming_cms_heavy_hitters,
-        # the BATCH sketch oracle verbatim: the streaming execution
-        # must reproduce it bit-for-bit (CMS = mergeable integers)
-        "oracle_fn": lambda sf_dir=None: _sql_cms_heavy_hitters()},
-    "bpe_pairs_docs": {
-        "fn": q_bpe_pairs_docs, "oracle": SQL_BPE_PAIRS_DOCS},
-    "zipf_fit_vocab": {
-        "fn": q_zipf_fit_vocab, "oracle": SQL_ZIPF_FIT_VOCAB},
-    "vocab_top100": {
-        "fn": q_vocab_top100,
-        "oracle": SQL_VOCAB_TOP100,
-    },
-    "inverted_index_docs": {
-        "fn": q_inverted_index_docs,
-        "oracle": SQL_INVERTED_INDEX_DOCS,
-    },
-    "tfidf_top5_per_doc": {
-        "fn": q_tfidf_top5_per_doc,
-        "oracle": SQL_TFIDF_TOP5_PER_DOC,
-    },
-}
-
-
 # ------------------------------------------------ round-9 curation ops
 
 
@@ -4185,15 +3921,6 @@ FROM lam
 """
 
 
-EXT_QUERIES.update({
-    "ccnet_ppl_buckets": {
-        "fn": q_ccnet_ppl_buckets, "oracle_fn": _sql_ccnet_ppl_buckets},
-    "token_budget_mix_docs": {
-        "fn": q_token_budget_mix_docs,
-        "oracle_fn": _sql_token_budget_mix_docs},
-})
-
-
 BPE_N_MERGES = 8
 
 
@@ -4270,12 +3997,6 @@ SELECT CAST(step AS INTEGER) AS step, pair,
        CAST(n AS BIGINT) AS n, new_symbol
 FROM (VALUES {values}) AS t(step, pair, n, new_symbol)
 """
-
-
-EXT_QUERIES.update({
-    "bpe_merges_docs": {
-        "fn": q_bpe_merges_docs, "oracle_fn": _sql_bpe_merges_docs},
-})
 
 
 def _bpe_merges(spark, sf_dir):
@@ -4355,12 +4076,6 @@ FROM documents d LEFT JOIN per_doc p USING (doc_id)
 """
 
 
-EXT_QUERIES.update({
-    "bpe_encode_docs": {
-        "fn": q_bpe_encode_docs, "oracle_fn": _sql_bpe_encode_docs},
-})
-
-
 def q_bpe_fertility_by_lang(spark, sf_dir):
     """Tokenizer fertility audit under the trained BPE merges
     (pipeline/corpus.py bpe_fertility): subword tokens per word and
@@ -4416,13 +4131,6 @@ SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_words,
 FROM tok JOIN enc e USING (token)
 GROUP BY lang
 """
-
-
-EXT_QUERIES.update({
-    "bpe_fertility_by_lang": {
-        "fn": q_bpe_fertility_by_lang,
-        "oracle_fn": _sql_bpe_fertility_by_lang},
-})
 
 
 def q_doremi_weights_docs(spark, sf_dir):
@@ -4481,13 +4189,6 @@ SELECT source, n_docs, n_tokens, mean_loss, excess, share,
              OVER () AS DOUBLE), 9) AS weight
 FROM s
 """
-
-
-EXT_QUERIES.update({
-    "doremi_weights_docs": {
-        "fn": q_doremi_weights_docs,
-        "oracle_fn": _sql_doremi_weights_docs},
-})
 
 
 # ------------------------------------------------- basket / markov (r10)
@@ -4588,16 +4289,6 @@ GROUP BY prev_state, state
 """
 
 
-EXT_QUERIES.update({
-    "assoc_rules_events": {
-        "fn": q_assoc_rules_events,
-        "oracle": SQL_ASSOC_RULES_EVENTS},
-    "event_transitions_users": {
-        "fn": q_event_transitions_users,
-        "oracle": SQL_EVENT_TRANSITIONS_USERS},
-})
-
-
 # --------------------------------------------- kmv / zorder stats (r10)
 
 KMV_K = 32
@@ -4620,7 +4311,7 @@ def q_kmv_distinct_users_daily(spark, sf_dir):
         ev, key_col="user_id", by=["day_ts"], k=KMV_K)
 
 
-def _sql_kmv_distinct_users_daily() -> str:
+def _kmv_distinct_users_daily_sql() -> str:
     from loudml_spark.operators.sketch import sql_kmv_hash
 
     h = sql_kmv_hash("user_id")
@@ -4650,7 +4341,7 @@ FROM g
 """
 
 
-SQL_KMV_DISTINCT_USERS_DAILY = _sql_kmv_distinct_users_daily()
+SQL_KMV_DISTINCT_USERS_DAILY = _kmv_distinct_users_daily_sql()
 
 
 ZORDER_BITS = 8
@@ -4688,7 +4379,7 @@ def q_zorder_locality_lineitem(spark, sf_dir):
     )
 
 
-def _sql_zorder_locality_lineitem() -> str:
+def _zorder_locality_lineitem_sql() -> str:
     top = (1 << ZORDER_BITS) - 1
     qs = []
     for c, lo, hi in ZORDER_DIMS:
@@ -4721,17 +4412,7 @@ FROM z GROUP BY z_bucket
 """
 
 
-SQL_ZORDER_LOCALITY_LINEITEM = _sql_zorder_locality_lineitem()
-
-
-EXT_QUERIES.update({
-    "kmv_distinct_users_daily": {
-        "fn": q_kmv_distinct_users_daily,
-        "oracle": SQL_KMV_DISTINCT_USERS_DAILY},
-    "zorder_locality_lineitem": {
-        "fn": q_zorder_locality_lineitem,
-        "oracle": SQL_ZORDER_LOCALITY_LINEITEM},
-})
+SQL_ZORDER_LOCALITY_LINEITEM = _zorder_locality_lineitem_sql()
 
 
 # --------------------------------------------------- rank fusion (r10)
@@ -4836,13 +4517,6 @@ QUALIFY rank <= {RRF_TOP}
 """
 
 
-EXT_QUERIES.update({
-    "rrf_bm25_tfidf_docs": {
-        "fn": q_rrf_bm25_tfidf_docs,
-        "oracle": SQL_RRF_BM25_TFIDF_DOCS},
-})
-
-
 # ----------------------------------------------------------- HLL (r10)
 
 HLL_P = 4
@@ -4866,7 +4540,7 @@ def q_hll_distinct_users_daily(spark, sf_dir):
     return hll_distinct(ev, key_col="user_id", by=["day_ts"], p=HLL_P)
 
 
-def _sql_hll_distinct_users_daily() -> str:
+def _hll_distinct_users_daily_sql() -> str:
     from loudml_spark.operators.sketch import _HASH_BITS, _HLL_ALPHA, sql_kmv_hash
 
     p = HLL_P
@@ -4919,14 +4593,7 @@ FROM s
 """
 
 
-SQL_HLL_DISTINCT_USERS_DAILY = _sql_hll_distinct_users_daily()
-
-
-EXT_QUERIES.update({
-    "hll_distinct_users_daily": {
-        "fn": q_hll_distinct_users_daily,
-        "oracle": SQL_HLL_DISTINCT_USERS_DAILY},
-})
+SQL_HLL_DISTINCT_USERS_DAILY = _hll_distinct_users_daily_sql()
 
 
 # -------------------------------------------------------- kalman (r10)
@@ -5002,13 +4669,6 @@ FROM (VALUES {values})
 """
 
 
-EXT_QUERIES.update({
-    "kalman_level_daily": {
-        "fn": q_kalman_level_daily,
-        "oracle_fn": _sql_kalman_level_daily},
-})
-
-
 # ---------------------------------------------------- bigram LM (r10)
 
 BIGRAM_LAM = 0.75
@@ -5075,13 +4735,6 @@ FROM sc GROUP BY doc_id
 """
 
 
-EXT_QUERIES.update({
-    "bigram_perplexity_docs": {
-        "fn": q_bigram_perplexity_docs,
-        "oracle": SQL_BIGRAM_PERPLEXITY_DOCS},
-})
-
-
 def q_hll_merged_users_daily(spark, sf_dir):
     """HLL mergeability proof (operators/sketch.py
     hll_distinct_merged): daily registers built INDEPENDENTLY per
@@ -5108,13 +4761,6 @@ SQL_HLL_MERGED_USERS_DAILY = f"""
 SELECT day_ts, n_zero_regs, est_hll
 FROM ({SQL_HLL_DISTINCT_USERS_DAILY}) t
 """
-
-
-EXT_QUERIES.update({
-    "hll_merged_users_daily": {
-        "fn": q_hll_merged_users_daily,
-        "oracle": SQL_HLL_MERGED_USERS_DAILY},
-})
 
 
 def q_kalman_smooth_daily(spark, sf_dir):
@@ -5192,13 +4838,6 @@ FROM (VALUES {values})
 """
 
 
-EXT_QUERIES.update({
-    "kalman_smooth_daily": {
-        "fn": q_kalman_smooth_daily,
-        "oracle_fn": _sql_kalman_smooth_daily},
-})
-
-
 def q_streaming_hll_users_daily(spark, sf_dir):
     """The daily HLL sketch executed THROUGH Structured Streaming:
     (day, user) rows staged as 2 ts-range files (→ 2 micro-batches),
@@ -5244,13 +4883,6 @@ FROM ({SQL_HLL_DISTINCT_USERS_DAILY}) t
 """
 
 
-EXT_QUERIES.update({
-    "streaming_hll_users_daily": {
-        "fn": q_streaming_hll_users_daily,
-        "oracle": SQL_STREAMING_HLL_USERS_DAILY},
-})
-
-
 # ------------------------------------------------ kmv set algebra (r10)
 
 KMVJ_K = 256
@@ -5272,7 +4904,7 @@ def q_kmv_jaccard_sources(spark, sf_dir):
         toks, key_col="token", set_col="source", k=KMVJ_K)
 
 
-def _sql_kmv_jaccard_sources() -> str:
+def _kmv_jaccard_sources_sql() -> str:
     from loudml_spark.operators.sketch import sql_kmv_hash
 
     h = sql_kmv_hash("token")
@@ -5316,14 +4948,7 @@ GROUP BY sa, sb
 """
 
 
-SQL_KMV_JACCARD_SOURCES = _sql_kmv_jaccard_sources()
-
-
-EXT_QUERIES.update({
-    "kmv_jaccard_sources": {
-        "fn": q_kmv_jaccard_sources,
-        "oracle": SQL_KMV_JACCARD_SOURCES},
-})
+SQL_KMV_JACCARD_SOURCES = _kmv_jaccard_sources_sql()
 
 
 BIGRAM_MIN_COUNT = 2
@@ -5395,13 +5020,6 @@ FROM sc GROUP BY doc_id
 """
 
 
-EXT_QUERIES.update({
-    "bigram_perplexity_pruned_docs": {
-        "fn": q_bigram_perplexity_pruned_docs,
-        "oracle": SQL_BIGRAM_PERPLEXITY_PRUNED_DOCS},
-})
-
-
 def q_streaming_kalman_daily(spark, sf_dir):
     """The batch Kalman filter executed THROUGH Structured
     Streaming: the daily series staged as 2 ts-range files (the
@@ -5436,8 +5054,4 @@ def q_streaming_kalman_daily(spark, sf_dir):
     return out
 
 
-EXT_QUERIES.update({
-    "streaming_kalman_daily": {
-        "fn": q_streaming_kalman_daily,
-        "oracle_fn": _sql_kalman_level_daily},
-})
+_sql_streaming_kalman_daily = _sql_kalman_level_daily

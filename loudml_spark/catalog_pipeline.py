@@ -1555,6 +1555,9 @@ def q_simhash_pairs_blocked(spark, sf_dir):
     return out.withColumn("hamming", F.col("hamming").cast("int"))
 
 
+SQL_SIMHASH_PAIRS_BLOCKED = SQL_SIMHASH_PAIRS_DOCS
+
+
 def q_embedding_cosine_pairs(spark, sf_dir):
     """Runs the blocked-GEMM exact implementation — the naive
     cartesian verifier is retired to unit-level parity tests
@@ -1586,6 +1589,7 @@ p AS (
 )
 SELECT id_a, id_b, cosine FROM p WHERE cosine >= 0.3
 """
+SQL_EMBEDDING_PAIRS_BLOCKED = SQL_EMBEDDING_COSINE_PAIRS
 
 
 # The ANN top-k frames are session-cache frames: every ANN index
@@ -2134,7 +2138,7 @@ def q_streaming_detect_1h(spark, sf_dir):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def _sql_streaming_detect(sf_dir=None) -> str:
+def _sql_streaming_detect_1h(sf_dir=None) -> str:
     from loudml_spark.catalog import _SQL_SCORED_SERIES
 
     return _SQL_SCORED_SERIES + """
@@ -2609,6 +2613,8 @@ def q_bloom_decontaminate_docs(spark, sf_dir):
     return benchmark_overlap_bloom(
         corpus, bench, n=3, min_overlap=8, words=words)
 
+
+SQL_BLOOM_DECONTAMINATE_DOCS = SQL_DECONTAMINATE_DOCS
 
 
 def q_pack_sequences_docs(spark, sf_dir):
@@ -3462,7 +3468,7 @@ def q_repeated_spans_keep_one_docs(spark, sf_dir):
     return repeated_spans_keep_one(docs, n=10, min_count=2)
 
 
-SQL_REPEATED_SPANS_KEEP_ONE = f"""
+SQL_REPEATED_SPANS_KEEP_ONE_DOCS = f"""
 WITH w AS (
   SELECT doc_id, {_SQL_WORDS} AS ws FROM documents
 ),
@@ -3633,201 +3639,6 @@ SELECT doc_id, logit_micro,
          AS quality_prob
 FROM lg ORDER BY doc_id
 """
-
-
-PIPELINE_QUERIES: dict[str, dict] = {
-    "dedup_lines_docs": {
-        "fn": q_dedup_lines_docs, "oracle": SQL_DEDUP_LINES_DOCS},
-    "text_stats_docs": {
-        "fn": q_text_stats_docs, "oracle": SQL_TEXT_STATS_DOCS},
-    "text_stats_regex_docs": {
-        "fn": q_text_stats_regex_docs,
-        "oracle": SQL_TEXT_STATS_REGEX_DOCS},
-    "repetition_stats_docs": {
-        "fn": q_repetition_stats_docs,
-        "oracle": SQL_REPETITION_STATS_DOCS},
-    "decontaminate_docs": {
-        "fn": q_decontaminate_docs,
-        "oracle": SQL_DECONTAMINATE_DOCS},
-    "stratified_sample_docs": {
-        "fn": q_stratified_sample_docs,
-        "oracle": SQL_STRATIFIED_SAMPLE_DOCS},
-    "pack_shards_docs": {
-        "fn": q_pack_shards_docs,
-        "oracle": SQL_PACK_SHARDS_DOCS},
-    "temperature_mix_docs": {
-        "fn": q_temperature_mix_docs,
-        "oracle_fn": _sql_temperature_mix_docs},
-    "sample_16_per_lang": {
-        "fn": q_sample_16_per_lang,
-        "oracle": SQL_SAMPLE_16_PER_LANG},
-    "incremental_new_docs": {
-        "fn": q_incremental_new_docs,
-        "oracle": SQL_INCREMENTAL_NEW_DOCS},
-    "incremental_lsh_pairs_docs": {
-        "fn": q_incremental_lsh_pairs_docs,
-        "oracle": SQL_INCREMENTAL_LSH_PAIRS_DOCS},
-    "normalize_text_docs": {
-        "fn": q_normalize_text_docs,
-        "oracle": SQL_NORMALIZE_TEXT_DOCS},
-    "embedding_centroids": {
-        "fn": q_embedding_centroids,
-        "oracle": SQL_EMBEDDING_CENTROIDS},
-    "chunk_docs_32_24": {
-        "fn": q_chunk_docs_32_24,
-        "oracle": SQL_CHUNK_DOCS_32_24},
-    "redact_pii_docs": {
-        "fn": q_redact_pii_docs,
-        "oracle": SQL_REDACT_PII_DOCS},
-    "char_entropy_docs": {
-        "fn": q_char_entropy_docs,
-        "oracle": SQL_CHAR_ENTROPY_DOCS},
-    "url_stats_docs": {
-        "fn": q_url_stats_docs,
-        "oracle": SQL_URL_STATS_DOCS},
-    "langid_docs": {"fn": q_langid_docs, "oracle": SQL_LANGID_DOCS},
-    "exact_dedup_fp": {"fn": q_exact_dedup_fp, "oracle": SQL_EXACT_DEDUP_FP},
-    "minhash_signatures_docs": {
-        "fn": q_minhash_signatures_docs,
-        "oracle": SQL_MINHASH_SIGNATURES_DOCS},
-    "minhash_lsh_pairs_docs": {
-        "fn": q_minhash_lsh_pairs_docs,
-        "oracle": SQL_MINHASH_LSH_PAIRS_DOCS},
-    "ngram_jaccard_pairs_docs": {
-        "fn": q_ngram_jaccard_pairs_docs,
-        "oracle": SQL_NGRAM_JACCARD_PAIRS_DOCS},
-    "dedup_clusters_docs": {
-        "fn": q_dedup_clusters_docs, "oracle": SQL_DEDUP_CLUSTERS_DOCS},
-    "cluster_split_docs": {
-        "fn": q_cluster_split_docs, "oracle": SQL_CLUSTER_SPLIT_DOCS},
-    "cdc_chunks_docs": {
-        "fn": q_cdc_chunks_docs, "oracle_fn": _sql_cdc_chunks_docs},
-    "cdc_dup_chunks_docs": {
-        "fn": q_cdc_dup_chunks_docs,
-        "oracle_fn": _sql_cdc_dup_chunks_docs},
-    "incremental_cdc_docs": {
-        "fn": q_incremental_cdc_docs,
-        "oracle_fn": _sql_incremental_cdc_docs},
-    "dedup_survivors_docs": {
-        "fn": q_dedup_survivors_docs, "oracle": SQL_DEDUP_SURVIVORS_DOCS},
-    "simhash_docs": {"fn": q_simhash_docs, "oracle": SQL_SIMHASH_DOCS},
-    "simhash_pairs_docs": {
-        "fn": q_simhash_pairs_docs, "oracle": SQL_SIMHASH_PAIRS_DOCS},
-    "simhash_pairs_blocked": {
-        "fn": q_simhash_pairs_blocked, "oracle": SQL_SIMHASH_PAIRS_DOCS},
-    "embedding_cosine_pairs": {
-        "fn": q_embedding_cosine_pairs,
-        "oracle": SQL_EMBEDDING_COSINE_PAIRS},
-    "embedding_pairs_blocked": {
-        "fn": q_embedding_pairs_blocked,
-        "oracle": SQL_EMBEDDING_COSINE_PAIRS},
-    "ann_cosine_topk": {
-        "fn": q_ann_cosine_topk, "oracle": SQL_ANN_COSINE_TOPK},
-    "ann_lsh_topk": {"fn": q_ann_lsh_topk, "oracle_fn": _sql_ann_lsh_topk},
-    "ann_ivf_topk": {"fn": q_ann_ivf_topk, "oracle_fn": _sql_ann_ivf_topk},
-    "ann_pq_topk": {"fn": q_ann_pq_topk, "oracle_fn": _sql_ann_pq_topk},
-    "multimodal_features": {
-        "fn": q_multimodal_features, "oracle": SQL_MULTIMODAL_FEATURES},
-    "streaming_detect_1h": {
-        "fn": q_streaming_detect_1h, "oracle_fn": _sql_streaming_detect},
-    "split_docs_80_10_10": {
-        "fn": q_split_docs_80_10_10, "oracle": SQL_SPLIT_DOCS_80_10_10},
-    "group_split_docs": {
-        "fn": q_group_split_docs, "oracle": SQL_GROUP_SPLIT_DOCS},
-    "isotonic_calibration_docs": {
-        "fn": q_isotonic_calibration_docs,
-        "oracle_fn": _sql_isotonic_calibration_docs},
-    "auc_quality_by_source": {
-        "fn": q_auc_quality_by_source,
-        "oracle": SQL_AUC_QUALITY_BY_SOURCE},
-    "calibration_error_docs": {
-        "fn": q_calibration_error_docs,
-        "oracle": SQL_CALIBRATION_ERROR_DOCS},
-    "gini_chars_by_source": {
-        "fn": q_gini_chars_by_source,
-        "oracle": SQL_GINI_CHARS_BY_SOURCE},
-    "length_batch_waste": {
-        "fn": q_length_batch_waste,
-        "oracle": SQL_LENGTH_BATCH_WASTE},
-    "quality_gate_docs": {
-        "fn": q_quality_gate_docs, "oracle": SQL_QUALITY_GATE_DOCS},
-    "winnow_fingerprints_docs": {
-        "fn": q_winnow_fingerprints_docs,
-        "oracle_fn": _sql_winnow_fingerprints_docs},
-    "winnow_overlap_pairs": {
-        "fn": q_winnow_overlap_pairs,
-        "oracle_fn": _sql_winnow_overlap_pairs},
-    "lm_score_docs": {
-        "fn": q_lm_score_docs, "oracle": SQL_LM_SCORE_DOCS},
-    "semdedup_pairs_emb": {
-        "fn": q_semdedup_pairs_emb,
-        "oracle_fn": _sql_semdedup_pairs_emb},
-    "semdedup_survivors_emb": {
-        "fn": q_semdedup_survivors_emb,
-        "oracle_fn": _sql_semdedup_survivors_emb},
-    "bloom_decontaminate_docs": {
-        "fn": q_bloom_decontaminate_docs,
-        "oracle": SQL_DECONTAMINATE_DOCS},
-    "pack_sequences_docs": {
-        "fn": q_pack_sequences_docs, "oracle": SQL_PACK_SEQUENCES_DOCS},
-    "centroid_similarity_labels": {
-        "fn": q_centroid_similarity_labels,
-        "oracle": SQL_CENTROID_SIMILARITY_LABELS},
-    "containment_pairs_docs": {
-        "fn": q_containment_pairs_docs,
-        "oracle": SQL_CONTAINMENT_PAIRS_DOCS},
-    "embedding_covariance": {
-        "fn": q_embedding_covariance,
-        "oracle": SQL_EMBEDDING_COVARIANCE},
-    "embedding_outliers": {
-        "fn": q_embedding_outliers,
-        "oracle_fn": _sql_embedding_outliers},
-    "pmi_pairs_docs": {
-        "fn": q_pmi_pairs_docs,
-        "oracle": SQL_PMI_PAIRS_DOCS},
-    "sparse_cosine_pairs_docs": {
-        "fn": q_sparse_cosine_pairs_docs,
-        "oracle": SQL_SPARSE_COSINE_PAIRS_DOCS},
-    "fuzzy_pairs_customers": {
-        "fn": q_fuzzy_pairs_customers,
-        "oracle": SQL_FUZZY_PAIRS_CUSTOMERS},
-    "fuzzy_match_parts": {
-        "fn": q_fuzzy_match_parts,
-        "oracle": SQL_FUZZY_MATCH_PARTS},
-    "classifier_quality_docs": {
-        "fn": q_classifier_quality_docs,
-        "oracle_fn": _sql_classifier_quality_docs},
-    "ann_recall_ivf": {
-        "fn": q_ann_recall_ivf,
-        "oracle_fn": _sql_ann_recall_ivf},
-    "contamination_spans_docs": {
-        "fn": q_contamination_spans_docs,
-        "oracle": SQL_CONTAMINATION_SPANS_DOCS},
-    "excise_contamination_docs": {
-        "fn": q_excise_contamination_docs,
-        "oracle": SQL_EXCISE_CONTAMINATION_DOCS},
-    "leak_spans_docs": {
-        "fn": q_leak_spans_docs,
-        "oracle": SQL_LEAK_SPANS_DOCS},
-    "excise_leaks_docs": {
-        "fn": q_excise_leaks_docs,
-        "oracle": SQL_EXCISE_LEAKS_DOCS},
-    "leak_spans_seeded": {
-        "fn": q_leak_spans_seeded,
-        "oracle": SQL_LEAK_SPANS_SEEDED},
-    "excise_leaks_seeded": {
-        "fn": q_excise_leaks_seeded,
-        "oracle": SQL_EXCISE_LEAKS_SEEDED},
-    "repeated_spans_docs": {
-        "fn": q_repeated_spans_docs,
-        "oracle": SQL_REPEATED_SPANS_DOCS},
-    "trim_repeated_docs": {
-        "fn": q_trim_repeated_docs,
-        "oracle": SQL_TRIM_REPEATED_DOCS},
-    "repeated_spans_keep_one_docs": {
-        "fn": q_repeated_spans_keep_one_docs,
-        "oracle": SQL_REPEATED_SPANS_KEEP_ONE},
-}
 
 
 # ------------------------------------------------ round-9 curation ops
@@ -4064,20 +3875,6 @@ FROM stats s JOIN drift d USING (cid)
 """
 
 
-PIPELINE_QUERIES.update({
-    "gopher_rules_docs": {
-        "fn": q_gopher_rules_docs, "oracle": SQL_GOPHER_RULES_DOCS},
-    "ngram_novelty_docs": {
-        "fn": q_ngram_novelty_docs, "oracle": SQL_NGRAM_NOVELTY_DOCS},
-    "source_overlap_docs": {
-        "fn": q_source_overlap_docs, "oracle": SQL_SOURCE_OVERLAP_DOCS},
-    "kmeans_assign_emb": {
-        "fn": q_kmeans_assign_emb, "oracle": SQL_KMEANS_ASSIGN_EMB},
-    "kmeans_step_emb": {
-        "fn": q_kmeans_step_emb, "oracle": SQL_KMEANS_STEP_EMB},
-})
-
-
 def q_ann_sq8_topk(spark, sf_dir):
     """SQ8 scalar-quantized ANN top-5 (pipeline/similarity.py
     sq8_cosine_topk): one-byte-per-dim corpus compression against
@@ -4191,14 +3988,6 @@ FROM bq LEFT JOIN h USING (query_id)
 """
 
 
-PIPELINE_QUERIES.update({
-    "ann_sq8_topk": {
-        "fn": q_ann_sq8_topk, "oracle": SQL_ANN_SQ8_TOPK},
-    "ann_recall_sq8": {
-        "fn": q_ann_recall_sq8, "oracle": SQL_ANN_RECALL_SQ8},
-})
-
-
 def q_kmeans_balanced_sample(spark, sf_dir):
     """Cluster-balanced diversity sample (SemDeDup/DiverseSample
     companion): EXACTLY 16 vectors per k-means cell, ranked by the
@@ -4238,13 +4027,6 @@ r AS (
 )
 SELECT vec_id, cluster, rank FROM r WHERE rank <= 16
 """
-
-
-PIPELINE_QUERIES.update({
-    "kmeans_balanced_sample": {
-        "fn": q_kmeans_balanced_sample,
-        "oracle": SQL_KMEANS_BALANCED_SAMPLE},
-})
 
 
 def q_hard_negatives_emb(spark, sf_dir):
@@ -4317,14 +4099,6 @@ GROUP BY query_id, q_label
 """
 
 
-PIPELINE_QUERIES.update({
-    "hard_negatives_emb": {
-        "fn": q_hard_negatives_emb, "oracle": SQL_HARD_NEGATIVES_EMB},
-    "margin_audit_emb": {
-        "fn": q_margin_audit_emb, "oracle": SQL_MARGIN_AUDIT_EMB},
-})
-
-
 OVERLAP_SAMPLE_MOD = 4
 
 
@@ -4368,13 +4142,6 @@ FROM shared s
 JOIN totals ta ON ta.src = s.src_a
 JOIN totals tb ON tb.src = s.src_b
 """
-
-
-PIPELINE_QUERIES.update({
-    "source_overlap_sampled": {
-        "fn": q_source_overlap_sampled,
-        "oracle": SQL_SOURCE_OVERLAP_SAMPLED},
-})
 
 
 def q_lsh_recall_audit(spark, sf_dir):
@@ -4425,12 +4192,6 @@ FROM m GROUP BY 1
 """
 
 
-PIPELINE_QUERIES.update({
-    "lsh_recall_audit": {
-        "fn": q_lsh_recall_audit, "oracle": SQL_LSH_RECALL_AUDIT},
-})
-
-
 def q_weighted_sample_docs(spark, sf_dir):
     """Exact weighted sampling without replacement (Efraimidis-
     Spirakis A-ES): 32 docs drawn ∝ token count via top-k of
@@ -4476,13 +4237,6 @@ r AS (
 )
 SELECT doc_id, weight, es_key, rank FROM r WHERE rank <= 32
 """
-
-
-PIPELINE_QUERIES.update({
-    "weighted_sample_docs": {
-        "fn": q_weighted_sample_docs,
-        "oracle": SQL_WEIGHTED_SAMPLE_DOCS},
-})
 
 
 # ------------------------------------------------- round 10: k-means
@@ -4708,20 +4462,6 @@ GROUP BY source
 """
 
 
-PIPELINE_QUERIES.update({
-    "kmeans_silhouette_emb": {
-        "fn": q_kmeans_silhouette_emb,
-        "oracle": SQL_KMEANS_SILHOUETTE_EMB},
-    "davies_bouldin_emb": {
-        "fn": q_davies_bouldin_emb,
-        "oracle": SQL_DAVIES_BOULDIN_EMB},
-    "kmeans_fit_emb": {
-        "fn": q_kmeans_fit_emb, "oracle_fn": _sql_kmeans_fit_emb},
-    "dup_rate_by_source": {
-        "fn": q_dup_rate_by_source, "oracle": SQL_DUP_RATE_BY_SOURCE},
-})
-
-
 # ------------------------------------------------------ pagerank (r10)
 
 
@@ -4750,13 +4490,6 @@ p8 AS (SELECT id_a, id_b FROM j WHERE jaccard >= 0.8),
 {sql_pagerank_ctes('p8', damping=0.85, n_iter=5)}
 SELECT id AS doc_id, r AS pagerank FROM pr5
 """
-
-
-PIPELINE_QUERIES.update({
-    "pagerank_sim_docs": {
-        "fn": q_pagerank_sim_docs,
-        "oracle_fn": _sql_pagerank_sim_docs},
-})
 
 
 # ----------------------------------------------------------- mmr (r10)
@@ -4856,13 +4589,6 @@ selset{t} AS (
     return f"WITH {ctes}\n{union}"
 
 
-PIPELINE_QUERIES.update({
-    "mmr_topk_emb": {
-        "fn": q_mmr_topk_emb,
-        "oracle_fn": _sql_mmr_topk_emb},
-})
-
-
 # ------------------------------------------- binary / hamming ann (r10)
 
 EMB_DIM = 64
@@ -4956,14 +4682,6 @@ FROM hbq LEFT JOIN hh USING (query_id)
 """
 
 
-PIPELINE_QUERIES.update({
-    "ann_hamming_topk": {
-        "fn": q_ann_hamming_topk, "oracle": SQL_ANN_HAMMING_TOPK},
-    "ann_recall_hamming": {
-        "fn": q_ann_recall_hamming, "oracle": SQL_ANN_RECALL_HAMMING},
-})
-
-
 HAM_SHORTLIST = 100
 
 
@@ -5043,15 +4761,6 @@ FROM hrbq LEFT JOIN hrh USING (query_id)
 """
 
 
-PIPELINE_QUERIES.update({
-    "ann_hamming_rerank": {
-        "fn": q_ann_hamming_rerank, "oracle": SQL_ANN_HAMMING_RERANK},
-    "ann_recall_hamming_rerank": {
-        "fn": q_ann_recall_hamming_rerank,
-        "oracle": SQL_ANN_RECALL_HAMMING_RERANK},
-})
-
-
 # ------------------------------------- semantic decontamination (r10)
 
 SEMDECON_T = 0.35
@@ -5102,13 +4811,6 @@ FROM sr WHERE rn = 1
 """
 
 
-PIPELINE_QUERIES.update({
-    "semantic_decontaminate_emb": {
-        "fn": q_semantic_decontaminate_emb,
-        "oracle": SQL_SEMANTIC_DECONTAMINATE_EMB},
-})
-
-
 # ------------------------------------------- lexical diversity (r10)
 
 
@@ -5142,13 +4844,6 @@ SELECT doc_id, n_tokens, n_types, n_hapax,
             THEN CAST(n_hapax AS DOUBLE) / n_types END AS hapax_ratio
 FROM ld
 """
-
-
-PIPELINE_QUERIES.update({
-    "lexical_diversity_docs": {
-        "fn": q_lexical_diversity_docs,
-        "oracle": SQL_LEXICAL_DIVERSITY_DOCS},
-})
 
 
 # --------------------------------------- rank-normalized quality (r10)
@@ -5202,13 +4897,6 @@ SELECT doc_id, source, pct_rank,
        pct_rank >= {1.0 - RANKNORM_KEEP} AS selected
 FROM pr
 """
-
-
-PIPELINE_QUERIES.update({
-    "rank_normalized_quality_docs": {
-        "fn": q_rank_normalized_quality_docs,
-        "oracle": SQL_RANK_NORMALIZED_QUALITY_DOCS},
-})
 
 
 # ------------------------------------------------ triangle stats (r10)
@@ -5271,13 +4959,6 @@ SELECT tdeg.id AS doc_id, degree,
             ELSE 0.0 END AS coeff
 FROM tdeg LEFT JOIN tpn ON tpn.id = tdeg.id
 """
-
-
-PIPELINE_QUERIES.update({
-    "triangle_stats_docs": {
-        "fn": q_triangle_stats_docs,
-        "oracle": SQL_TRIANGLE_STATS_DOCS},
-})
 
 
 # ---------------------------------- recall gates for LSH and PQ (r10)
@@ -5350,14 +5031,6 @@ SELECT pbq.query_id,
        CAST(COALESCE(ph2.c, 0) AS DOUBLE) / pbq.n AS recall
 FROM pbq LEFT JOIN ph2 USING (query_id)
 """
-
-
-PIPELINE_QUERIES.update({
-    "ann_recall_lsh": {
-        "fn": q_ann_recall_lsh, "oracle_fn": _sql_ann_recall_lsh},
-    "ann_recall_pq": {
-        "fn": q_ann_recall_pq, "oracle_fn": _sql_ann_recall_pq},
-})
 
 
 # -------------------------------------------- real-text fixture (r11)
@@ -5567,19 +5240,6 @@ FROM d GROUP BY lang
 """
 
 
-PIPELINE_QUERIES.update({
-    "realtext_gopher_rates": {
-        "fn": q_realtext_gopher_rates,
-        "oracle_fn": _sql_realtext_gopher_rates},
-    "realtext_bigram_pruned": {
-        "fn": q_realtext_bigram_pruned,
-        "oracle_fn": _sql_realtext_bigram_pruned},
-    "realtext_lexical_by_lang": {
-        "fn": q_realtext_lexical_by_lang,
-        "oracle_fn": _sql_realtext_lexical_by_lang},
-})
-
-
 # ------------------------------------------ graph family close (r11)
 
 
@@ -5659,16 +5319,6 @@ SELECT n.cluster_id, n.n_nodes, e.n_edges,
 FROM nodes n JOIN edges e USING (cluster_id)
 WHERE n.n_nodes >= 2
 """
-
-
-PIPELINE_QUERIES.update({
-    "pagerank_weighted_sim_docs": {
-        "fn": q_pagerank_weighted_sim_docs,
-        "oracle_fn": _sql_pagerank_weighted_sim_docs},
-    "graph_components_docs": {
-        "fn": q_graph_components_docs,
-        "oracle": SQL_GRAPH_COMPONENTS_DOCS},
-})
 
 
 # ------------------------------------------ realtext family, part 2
@@ -5779,16 +5429,6 @@ p AS (
 SELECT lang, lang_guess, CAST(COUNT(*) AS BIGINT) AS n_docs
 FROM p GROUP BY lang, lang_guess
 """
-
-
-PIPELINE_QUERIES.update({
-    "realtext_zipf_fit": {
-        "fn": q_realtext_zipf_fit,
-        "oracle_fn": _sql_realtext_zipf_fit},
-    "realtext_langid_confusion": {
-        "fn": q_realtext_langid_confusion,
-        "oracle_fn": _sql_realtext_langid_confusion},
-})
 
 
 # --------------------------------- realistic-embedding fixture (r12)
@@ -6133,54 +5773,44 @@ FROM (VALUES {values}) AS t(n10, n_vectors)
 """
 
 
-PIPELINE_QUERIES.update({
-    "realemb_recall_lsh": {
-        "fn": q_realemb_recall_lsh,
-        "oracle_fn": lambda sf_dir=None:
-            _re_shadow(_sql_ann_recall_lsh(_re_dir()))},
-    "realemb_recall_ivf": {
-        "fn": q_realemb_recall_ivf,
-        "oracle_fn": lambda sf_dir=None:
-            _re_shadow(_sql_ann_recall_ivf(_re_dir()))},
-    "realemb_recall_pq": {
-        "fn": q_realemb_recall_pq,
-        "oracle_fn": lambda sf_dir=None:
-            _re_shadow(_sql_ann_recall_pq(_re_dir()))},
-    "realemb_recall_sq8": {
-        "fn": q_realemb_recall_sq8,
-        "oracle_fn": lambda sf_dir=None:
-            _re_shadow(SQL_ANN_RECALL_SQ8)},
-    "realemb_recall_hamming": {
-        "fn": q_realemb_recall_hamming,
-        "oracle_fn": lambda sf_dir=None:
-            _re_shadow(SQL_ANN_RECALL_HAMMING)},
-    "realemb_recall_hamming_rerank": {
-        "fn": q_realemb_recall_hamming_rerank,
-        "oracle_fn": lambda sf_dir=None:
-            _re_shadow(SQL_ANN_RECALL_HAMMING_RERANK)},
-    "realemb_silhouette": {
-        "fn": q_realemb_silhouette,
-        "oracle_fn": lambda sf_dir=None:
-            _re_shadow(SQL_KMEANS_SILHOUETTE_EMB)},
-    "realemb_davies_bouldin": {
-        "fn": q_realemb_davies_bouldin,
-        "oracle_fn": lambda sf_dir=None:
-            _re_shadow(SQL_DAVIES_BOULDIN_EMB)},
-    "realemb_kmeans_fit": {
-        "fn": q_realemb_kmeans_fit,
-        "oracle_fn": lambda sf_dir=None: _sql_kmeans_fit_emb(_re_dir())},
-    "realemb_covariance": {
-        "fn": q_realemb_covariance,
-        "oracle_fn": lambda sf_dir=None:
-            _re_shadow(SQL_EMBEDDING_COVARIANCE)},
-    "realemb_anisotropy": {
-        "fn": q_realemb_anisotropy, "oracle_fn": _sql_realemb_anisotropy},
-    "realemb_dup_recovery": {
-        "fn": q_realemb_dup_recovery,
-        "oracle_fn": _sql_realemb_dup_recovery},
-    "realemb_hubness": {
-        "fn": q_realemb_hubness, "oracle_fn": _sql_realemb_hubness},
-})
+def _sql_realemb_recall_lsh(sf_dir=None) -> str:
+    return _re_shadow(_sql_ann_recall_lsh(_re_dir()))
+
+
+def _sql_realemb_recall_ivf(sf_dir=None) -> str:
+    return _re_shadow(_sql_ann_recall_ivf(_re_dir()))
+
+
+def _sql_realemb_recall_pq(sf_dir=None) -> str:
+    return _re_shadow(_sql_ann_recall_pq(_re_dir()))
+
+
+def _sql_realemb_recall_sq8(sf_dir=None) -> str:
+    return _re_shadow(SQL_ANN_RECALL_SQ8)
+
+
+def _sql_realemb_recall_hamming(sf_dir=None) -> str:
+    return _re_shadow(SQL_ANN_RECALL_HAMMING)
+
+
+def _sql_realemb_recall_hamming_rerank(sf_dir=None) -> str:
+    return _re_shadow(SQL_ANN_RECALL_HAMMING_RERANK)
+
+
+def _sql_realemb_silhouette(sf_dir=None) -> str:
+    return _re_shadow(SQL_KMEANS_SILHOUETTE_EMB)
+
+
+def _sql_realemb_davies_bouldin(sf_dir=None) -> str:
+    return _re_shadow(SQL_DAVIES_BOULDIN_EMB)
+
+
+def _sql_realemb_kmeans_fit(sf_dir=None) -> str:
+    return _sql_kmeans_fit_emb(_re_dir())
+
+
+def _sql_realemb_covariance(sf_dir=None) -> str:
+    return _re_shadow(SQL_EMBEDDING_COVARIANCE)
 
 
 def q_realemb_lsh_buckets(spark, sf_dir):
@@ -6268,16 +5898,6 @@ SELECT CAST(cell AS INTEGER) AS cell,
        CAST(n_vectors AS BIGINT) AS n_vectors
 FROM (VALUES {values}) AS t(cell, n_vectors)
 """
-
-
-PIPELINE_QUERIES.update({
-    "realemb_lsh_buckets": {
-        "fn": q_realemb_lsh_buckets,
-        "oracle_fn": _sql_realemb_lsh_buckets},
-    "realemb_ivf_cells": {
-        "fn": q_realemb_ivf_cells,
-        "oracle_fn": _sql_realemb_ivf_cells},
-})
 
 
 # ------------------------------- perceptual image near-dup (r12, #5)
@@ -6374,13 +5994,6 @@ FROM (VALUES {values}) AS t(id_a, id_b, hamming)
 """
 
 
-PIPELINE_QUERIES.update({
-    "image_dhash_pairs": {
-        "fn": q_image_dhash_pairs,
-        "oracle_fn": _sql_image_dhash_pairs},
-})
-
-
 # ----------------------------------- k-core decomposition (r12, #7)
 
 def q_graph_kcore_docs(spark, sf_dir):
@@ -6452,12 +6065,6 @@ FROM (VALUES {values}) AS t(doc_id, degree, core)
 """
 
 
-PIPELINE_QUERIES.update({
-    "graph_kcore_docs": {
-        "fn": q_graph_kcore_docs, "oracle_fn": _sql_graph_kcore_docs},
-})
-
-
 def q_incremental_components_docs(spark, sf_dir):
     """Incremental component maintenance (pipeline/graph.py
     incremental_components): the standing near-dup graph is the
@@ -6507,10 +6114,3 @@ icomp AS (
 SELECT doc_id, cluster_id, cluster_id = doc_id AS is_canonical
 FROM icomp
 """
-
-
-PIPELINE_QUERIES.update({
-    "incremental_components_docs": {
-        "fn": q_incremental_components_docs,
-        "oracle": SQL_INCREMENTAL_COMPONENTS_DOCS},
-})

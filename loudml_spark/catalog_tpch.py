@@ -107,7 +107,7 @@ def q_tpch_q2_min_cost_supplier(spark, sf_dir):
     )
 
 
-SQL_TPCH_Q2 = """
+SQL_TPCH_Q2_MIN_COST_SUPPLIER = """
 WITH eu_supp AS (
   SELECT s_suppkey, s_name, s_acctbal, n_name
   FROM supplier
@@ -155,7 +155,7 @@ def q_tpch_q6_forecast_revenue(spark, sf_dir):
     )
 
 
-SQL_TPCH_Q6 = """
+SQL_TPCH_Q6_FORECAST_REVENUE = """
 SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
                 * CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) AS revenue,
        CAST(COUNT(*) AS BIGINT) AS n_lines
@@ -200,7 +200,7 @@ def q_tpch_q9_product_profit(spark, sf_dir):
     )
 
 
-SQL_TPCH_Q9 = """
+SQL_TPCH_Q9_PRODUCT_PROFIT = """
 SELECT n_name AS nation,
        CAST(year(o_orderdate) AS INTEGER) AS o_year,
        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -259,7 +259,7 @@ def q_tpch_q11_important_parts(spark, sf_dir):
     )
 
 
-SQL_TPCH_Q11 = """
+SQL_TPCH_Q11_IMPORTANT_PARTS = """
 WITH base AS (
   SELECT l_partkey,
          CAST(l_extendedprice AS DECIMAL(18,2))
@@ -300,7 +300,7 @@ def q_tpch_q12_late_priority(spark, sf_dir):
     )
 
 
-SQL_TPCH_Q12 = """
+SQL_TPCH_Q12_LATE_PRIORITY = """
 SELECT l_linestatus,
        CAST(COUNT(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
                        THEN 1 END) AS BIGINT) AS high_line_count,
@@ -335,7 +335,7 @@ def q_tpch_q13_order_count_dist(spark, sf_dir):
         F.count("*").alias("custdist"))
 
 
-SQL_TPCH_Q13 = """
+SQL_TPCH_Q13_ORDER_COUNT_DIST = """
 WITH per_cust AS (
   SELECT c_custkey, CAST(COUNT(o_orderkey) AS BIGINT) AS c_count
   FROM customer
@@ -375,7 +375,7 @@ def q_tpch_q14_promo_share(spark, sf_dir):
     )
 
 
-SQL_TPCH_Q14 = """
+SQL_TPCH_Q14_PROMO_SHARE = """
 WITH base AS (
   SELECT p_type,
          CAST(l_extendedprice AS DECIMAL(18,2))
@@ -420,7 +420,7 @@ def q_tpch_q15_top_supplier(spark, sf_dir):
     )
 
 
-SQL_TPCH_Q15 = """
+SQL_TPCH_Q15_TOP_SUPPLIER = """
 WITH rev AS (
   SELECT l_suppkey,
          SUM(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -461,7 +461,7 @@ def q_tpch_q16_supplier_cnt(spark, sf_dir):
     )
 
 
-SQL_TPCH_Q16 = """
+SQL_TPCH_Q16_SUPPLIER_CNT = """
 SELECT p_brand, p_type, p_size,
        CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
 FROM lineitem
@@ -506,7 +506,7 @@ def q_tpch_q17_small_qty_revenue(spark, sf_dir):
     )
 
 
-SQL_TPCH_Q17 = """
+SQL_TPCH_Q17_SMALL_QTY_REVENUE = """
 WITH lines AS (
   SELECT p_partkey, CAST(l_quantity AS BIGINT) AS qty,
          CAST(l_extendedprice AS DECIMAL(18,2)) AS price
@@ -554,7 +554,7 @@ def q_tpch_q18_large_orders(spark, sf_dir):
     )
 
 
-SQL_TPCH_Q18 = """
+SQL_TPCH_Q18_LARGE_ORDERS = """
 WITH big AS (
   SELECT l_orderkey, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT)
            AS sum_qty
@@ -598,7 +598,7 @@ def q_tpch_q19_bracket_revenue(spark, sf_dir):
     )
 
 
-SQL_TPCH_Q19 = """
+SQL_TPCH_Q19_BRACKET_REVENUE = """
 SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
                * (CAST(1 AS DECIMAL(3,2))
                   - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE)
@@ -655,7 +655,7 @@ def q_tpch_q20_excess_shippers(spark, sf_dir):
     )
 
 
-SQL_TPCH_Q20 = """
+SQL_TPCH_Q20_EXCESS_SHIPPERS = """
 WITH shipped AS (
   SELECT p_partkey, l_suppkey, CAST(l_quantity AS BIGINT) AS qty
   FROM lineitem
@@ -712,7 +712,7 @@ def q_tpch_q21_last_shipper(spark, sf_dir):
     )
 
 
-SQL_TPCH_Q21 = """
+SQL_TPCH_Q21_LAST_SHIPPER = """
 WITH fin AS (
   SELECT l_orderkey, l_suppkey, l_shipdate
   FROM lineitem
@@ -769,7 +769,7 @@ def q_tpch_q22_dormant_customers(spark, sf_dir):
     )
 
 
-SQL_TPCH_Q22 = """
+SQL_TPCH_Q22_DORMANT_CUSTOMERS = """
 WITH cust AS (
   SELECT c_custkey, c_nationkey,
          CAST(c_acctbal AS DECIMAL(18,2)) AS bal
@@ -787,37 +787,3 @@ WHERE bal * n_pos > sum_pos
                         WHERE o_orderdate >= TIMESTAMP '1999-01-01')
 GROUP BY c_nationkey
 """
-
-
-TPCH_QUERIES = {
-    "tpch_q2_min_cost_supplier": {
-        "fn": q_tpch_q2_min_cost_supplier, "oracle": SQL_TPCH_Q2},
-    "tpch_q6_forecast_revenue": {
-        "fn": q_tpch_q6_forecast_revenue, "oracle": SQL_TPCH_Q6},
-    "tpch_q9_product_profit": {
-        "fn": q_tpch_q9_product_profit, "oracle": SQL_TPCH_Q9},
-    "tpch_q11_important_parts": {
-        "fn": q_tpch_q11_important_parts, "oracle": SQL_TPCH_Q11},
-    "tpch_q12_late_priority": {
-        "fn": q_tpch_q12_late_priority, "oracle": SQL_TPCH_Q12},
-    "tpch_q13_order_count_dist": {
-        "fn": q_tpch_q13_order_count_dist, "oracle": SQL_TPCH_Q13},
-    "tpch_q14_promo_share": {
-        "fn": q_tpch_q14_promo_share, "oracle": SQL_TPCH_Q14},
-    "tpch_q15_top_supplier": {
-        "fn": q_tpch_q15_top_supplier, "oracle": SQL_TPCH_Q15},
-    "tpch_q16_supplier_cnt": {
-        "fn": q_tpch_q16_supplier_cnt, "oracle": SQL_TPCH_Q16},
-    "tpch_q17_small_qty_revenue": {
-        "fn": q_tpch_q17_small_qty_revenue, "oracle": SQL_TPCH_Q17},
-    "tpch_q18_large_orders": {
-        "fn": q_tpch_q18_large_orders, "oracle": SQL_TPCH_Q18},
-    "tpch_q19_bracket_revenue": {
-        "fn": q_tpch_q19_bracket_revenue, "oracle": SQL_TPCH_Q19},
-    "tpch_q20_excess_shippers": {
-        "fn": q_tpch_q20_excess_shippers, "oracle": SQL_TPCH_Q20},
-    "tpch_q21_last_shipper": {
-        "fn": q_tpch_q21_last_shipper, "oracle": SQL_TPCH_Q21},
-    "tpch_q22_dormant_customers": {
-        "fn": q_tpch_q22_dormant_customers, "oracle": SQL_TPCH_Q22},
-}

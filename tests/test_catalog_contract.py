@@ -4,6 +4,8 @@ interface the correctness harness consumes, so a broken entry here
 means a broken CORRECTNESS row there."""
 
 import math as _math
+import textwrap
+import types
 
 import pytest
 
@@ -143,23 +145,76 @@ def test_every_query_is_oracle_paired():
     assert set(qs) == set(os_), sorted(set(qs) - set(os_))
 
 
+def _fake_module(name, src):
+    """A module object whose functions report ``name`` as their
+    ``__module__``, as a real catalog module's do."""
+    mod = types.ModuleType(name)
+    exec(textwrap.dedent(src), mod.__dict__)
+    return mod
+
+
 def test_registry_rejects_name_collisions():
-    """The catalog registry is assembled from four module dicts;
-    dict.update is last-write-wins, so a collision would silently
-    shadow a query and its oracle (round-7 incident: 4 TPC-H keys
-    shadowed).  ``_merge_disjoint`` must raise on a duplicate key
-    and the live assembly must itself be collision-free."""
+    """The registry is built from four modules by one naming rule; a
+    query name defined in two modules, or a query with two oracle
+    candidates, must raise instead of silently shadowing one (round-7
+    incident: 4 TPC-H keys shadowed)."""
     from loudml_spark import catalog
 
-    with pytest.raises(RuntimeError, match="collision.*dup_q"):
-        catalog._merge_disjoint(
-            {"dup_q": {}}, ("fake_module", {"dup_q": {}, "other": {}}))
+    a = _fake_module("fake_a", """
+        def q_dup(spark, sf_dir): pass
+        SQL_DUP = "SELECT 1"
+    """)
+    b = _fake_module("fake_b", """
+        def q_dup(spark, sf_dir): pass
+        def _sql_dup(sf_dir=None): return "SELECT 1"
+    """)
+    assert catalog._build_registry([a]) == {
+        "dup": {"fn": a.q_dup, "oracle": a.SQL_DUP}}
+    assert catalog._build_registry([b]) == {
+        "dup": {"fn": b.q_dup, "oracle_fn": b._sql_dup}}
+    with pytest.raises(RuntimeError, match="'dup'.*fake_a and fake_b"):
+        catalog._build_registry([a, b])
 
-    # live registry: the union of the four module dicts equals the
-    # merged size, i.e. no key was ever shadowed
-    from loudml_spark.catalog_ext import EXT_QUERIES
-    from loudml_spark.catalog_pipeline import PIPELINE_QUERIES
-    from loudml_spark.catalog_tpch import TPCH_QUERIES
-    sizes = [len(PIPELINE_QUERIES), len(TPCH_QUERIES), len(EXT_QUERIES)]
-    base = len(catalog.QUERIES) - sum(sizes)
-    assert base > 0 and len(entry.queries()) == base + sum(sizes)
+    # a q_ function imported into another module belongs to its
+    # defining module only
+    c = types.ModuleType("fake_c")
+    c.q_dup = a.q_dup
+    assert list(catalog._build_registry([a, c])) == ["dup"]
+
+    both = _fake_module("fake_both", """
+        def q_x(spark, sf_dir): pass
+        SQL_X = "SELECT 1"
+        def _sql_x(sf_dir=None): return "SELECT 1"
+    """)
+    with pytest.raises(RuntimeError, match="'x'.*exactly one"):
+        catalog._build_registry([both])
+
+    # live registry: every key names its own implementation
+    for name, spec in catalog.QUERIES.items():
+        assert spec["fn"].__name__ == "q_" + name, name
+
+
+def test_every_sql_constant_is_an_oracle():
+    """A renamed or removed query must not leave a dead oracle
+    behind: every module-level SQL_* string in the catalog modules is
+    some query's oracle (a shared oracle is bound under each query's
+    name, so identity is the test)."""
+    from loudml_spark import (
+        catalog,
+        catalog_ext,
+        catalog_oracle_ml,
+        catalog_pipeline,
+        catalog_tpch,
+    )
+
+    oracles = {id(spec["oracle"]) for spec in catalog.QUERIES.values()
+               if "oracle" in spec}
+    orphans = [
+        f"{mod.__name__}.{attr}"
+        for mod in (catalog, catalog_pipeline, catalog_tpch, catalog_ext,
+                    catalog_oracle_ml)
+        for attr, value in vars(mod).items()
+        if attr.startswith("SQL_") and isinstance(value, str)
+        and id(value) not in oracles
+    ]
+    assert not orphans, orphans

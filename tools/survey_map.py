@@ -33,9 +33,8 @@ def build_table() -> str:
         "",
         "Every `queries()` name, its entry point, and oracle kind"
         " (`sql` = static DuckDB SQL, `data-derived` = constructed"
-        " from the same parquet by independent Python, `rows-only` ="
-        " no SQL-expressible oracle).  Regenerate with"
-        " `python tools/survey_map.py`.",
+        " from the same parquet by independent Python).  Regenerate"
+        " with `python tools/survey_map.py`.",
         "",
         "| catalog query | entry point | oracle |",
         "|---|---|---|",
@@ -49,12 +48,7 @@ def build_table() -> str:
             where = f"`{mod}.py:{line}` `{fn.__name__}`"
         except OSError:
             where = f"`{mod}` `{fn.__name__}`"
-        if spec.get("oracle"):
-            kind = "sql"
-        elif spec.get("oracle_fn"):
-            kind = "data-derived"
-        else:
-            kind = "rows-only"
+        kind = "sql" if "oracle" in spec else "data-derived"
         lines.append(f"| `{name}` | {where} | {kind} |")
     lines += ["", END]
     return "\n".join(lines)
