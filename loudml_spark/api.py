@@ -23,6 +23,7 @@ state (server.py:263-393).  Spark actions are already async-capable
 from __future__ import annotations
 
 import math
+import threading
 from typing import Any, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
@@ -335,6 +336,7 @@ class Engine:
         self.jobs = JobRegistry(spark)
         self.scheduled = ScheduledJobRegistry(self.jobs)
         self.hooks: dict[str, list] = {}  # model name → hooks
+        self._write_locks: dict[str, threading.Lock] = {}
 
     @classmethod
     def from_config(cls, spark: SparkSession, path: str) -> "Engine":
@@ -429,8 +431,13 @@ class Engine:
 
     def write(self, bucket_name: str, df: DataFrame,
               mode: str = "append") -> None:
-        """POST /buckets/<n>/_write (server.py:1153-1165)."""
-        self.buckets.get(bucket_name).write(df, mode=mode)
+        """POST /buckets/<n>/_write (server.py:1153-1165).  Writes to
+        one bucket take turns: two concurrent parquet appends to one
+        path share Spark's ``_temporary`` commit dir, and one of them
+        fails or loses rows."""
+        lock = self._write_locks.setdefault(bucket_name, threading.Lock())
+        with lock:
+            self.buckets.get(bucket_name).write(df, mode=mode)
 
     # ---- models (server.py:686-936) ------------------------------------
     def create_model(self, settings: Mapping[str, Any]):
@@ -538,26 +545,6 @@ class Engine:
         return model
 
     # ---- lifecycle (server.py:907-936, 1583-1703) ----------------------
-    def _series_for(self, model, bucket_name: str, from_date, to_date,
-                    feature_expr: str, *, widen: bool = False, **kw):
-        from loudml_spark import timeutil
-        from loudml_spark.features import parse_features
-        from loudml_spark.operators.bucketize import BUCKET_COL, bucketize
-
-        bucket = self.buckets.get(bucket_name)
-        interval = model.bucket_interval
-        from_ts, to_ts = timeutil.align_range(
-            timeutil.make_ts(from_date), timeutil.make_ts(to_date), interval)
-        lo = from_ts - (model.history_buckets() * interval if widen else 0)
-        feat = parse_features([feature_expr])[0]
-        series = bucketize(
-            bucket.read(self.spark), [feature_expr], lo, to_ts, interval,
-            **kw,
-        ).withColumnRenamed(feat.name, model.feature_col)
-        if BUCKET_COL != model.ts_col:
-            series = series.withColumnRenamed(BUCKET_COL, model.ts_col)
-        return series, from_ts, to_ts
-
     def train(self, model_name: str, bucket_name: str, from_date, to_date,
               feature_expr: str, *, bg: bool = False,
               resume: bool = False, **kw):
@@ -570,8 +557,9 @@ class Engine:
         model = self.get_model(model_name)
 
         def run():
-            series, _, _ = self._series_for(
-                model, bucket_name, from_date, to_date, feature_expr, **kw)
+            series, _, _ = model.bucket_series(
+                self.buckets.get(bucket_name).read(self.spark),
+                from_date, to_date, feature_expr, **kw)
             import inspect
 
             supports_resume = "resume" in inspect.signature(
@@ -604,9 +592,9 @@ class Engine:
         model = self.get_model(model_name)
 
         def run():
-            series, from_ts, to_ts = self._series_for(
-                model, bucket_name, from_date, to_date, feature_expr,
-                widen=True, **kw)
+            series, from_ts, to_ts = model.bucket_series(
+                self.buckets.get(bucket_name).read(self.spark),
+                from_date, to_date, feature_expr, widen=True, **kw)
             scored = model.predict(series).filter(
                 F.col(model.ts_col) >= F.lit(from_ts))
             hooks = self.hooks.get(model_name) if flag_abnormal else None
@@ -678,8 +666,6 @@ class Engine:
         keys.  NotImplementedError in the reference OSS
         (bucket.py:279-286); here: per-key max anomaly score over the
         range, descending, key ascending tie-break."""
-        from loudml_spark.operators.bucketize import BUCKET_COL, bucketize
-
         model = self.get_model(model_name)
         if key_cols and model.history_buckets() > 0:
             # windowed estimators (Donut, window regression) score ONE
@@ -693,16 +679,9 @@ class Engine:
                 f"model {model_name!r} is a windowed single-series "
                 "estimator; per-key _top needs a profile model or the "
                 "fleet API")
-        bucket = self.buckets.get(bucket_name)
-        from loudml_spark.features import parse_features
-
-        feat = parse_features([feature_expr])[0]
-        series = bucketize(
-            bucket.read(self.spark), [feature_expr], from_date, to_date,
-            model.bucket_interval, group_by=key_cols, **kw,
-        ).withColumnRenamed(feat.name, model.feature_col)
-        if BUCKET_COL != model.ts_col:
-            series = series.withColumnRenamed(BUCKET_COL, model.ts_col)
+        series, _, _ = model.bucket_series(
+            self.buckets.get(bucket_name).read(self.spark), from_date,
+            to_date, feature_expr, group_by=key_cols, **kw)
         scored = model.predict(series)
         return (
             scored.groupBy(*key_cols)

@@ -834,7 +834,7 @@ def q_donut_predict_1h(spark, sf_dir):
     VALUE-ORACLED since round 5: the series is the DECIMAL-exact mean
     (bit-identical across engines, no rounding) and the oracle replays
     training/inference through the shared numpy cores
-    (models.donut_fit_values / donut_predict_values), inlining the
+    (donut_np.donut_fit_values / donut_predict_values), inlining the
     band as literals while the SQL recomputes observed and the erf
     score from parquet (catalog_oracle_ml.py)."""
     from loudml_spark.ml.models import DonutModel
@@ -870,8 +870,8 @@ def q_forecast_donut_48h(spark, sf_dir):
     VALUE-ORACLED since round 5 via the shared-core replay
     (catalog_oracle_ml.sql_forecast_donut_48h): the oracle retrains
     on the DuckDB-recomputed exact-mean series with
-    models.donut_fit_values and rolls the forecast forward with
-    models.donut_forecast_values; like the fleet forecast, the
+    donut_np.donut_fit_values and rolls the forecast forward with
+    donut_np.donut_forecast_values; like the fleet forecast, the
     output has no observed column, so the SQL carries the band as
     literals — the hash pins the Spark path to the single-process
     replay."""

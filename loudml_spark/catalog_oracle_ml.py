@@ -169,11 +169,11 @@ def sql_donut_predict_1h(sf_dir: str | None = None) -> str:
     through the shared numpy cores, inline the band, recompute
     observed + erf score in SQL."""
     from loudml_spark.catalog import JAN22
-    from loudml_spark.ml.models import (
-        BAND_SIGMA,
+    from loudml_spark.ml.donut_np import (
         donut_fit_values,
         donut_predict_values,
     )
+    from loudml_spark.ml.models import BAND_SIGMA
 
     sf_dir = resolve_oracle_sf_dir(sf_dir)
     span = 24
@@ -213,7 +213,7 @@ def sql_forecast_donut_48h(sf_dir: str | None = None) -> str:
     the shared cores and roll the forecast forward; literal band over
     the 48 future buckets."""
     from loudml_spark.catalog import JAN31
-    from loudml_spark.ml.models import (
+    from loudml_spark.ml.donut_np import (
         donut_fit_values,
         donut_forecast_values,
     )
@@ -292,17 +292,15 @@ def sql_forecast_donut_fleet_6h(sf_dir: str | None = None) -> str:
 
     from loudml_spark.catalog import JAN1, JAN31, NS
     from loudml_spark.ml.donut_fleet import donut_forecast_group
-    from loudml_spark.ml.scoring import band_sigma_for
 
     sf_dir = resolve_oracle_sf_dir(sf_dir)
-    p = band_sigma_for(0.95)
     lits = []
     for et, (ts, vals) in sorted(
             _series_by_key(sf_dir, JAN1, JAN31, NS).items()):
         pdf = pd.DataFrame({"bucket_ts": ts, "value": vals})
         rows = donut_forecast_group(
             (et,), pdf, key_cols=["event_type"], horizon=8, span=28,
-            epochs=30, p=p, bucket_interval=21600,
+            epochs=30, percent_interval=0.95, bucket_interval=21600,
         )
         for r in rows.itertuples(index=False):
             lits.append(

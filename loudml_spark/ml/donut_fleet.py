@@ -13,7 +13,6 @@ are stable across partitionings and reruns.
 
 from __future__ import annotations
 
-import json
 import zlib
 
 import numpy as np
@@ -21,12 +20,38 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from loudml_spark.ml.donut_np import NumpyVAE
+from loudml_spark.ml.donut_np import (
+    donut_fit_values,
+    donut_forecast_values,
+    donut_predict_values,
+    search_hyperparams_np,
+)
 from loudml_spark.ml.models import BAND_SIGMA
 
 
 def _key_seed(key: tuple, base_seed: int) -> int:
     return base_seed + zlib.crc32("|".join(map(str, key)).encode()) % 10**6
+
+
+def _key_hyperparams(vals, span, latent_dim, intermediate_dim, *,
+                     max_evals, search_epochs, seed):
+    """(span, latent, hidden) for one key: as given, or with
+    ``span="auto"`` the per-key search's pick — None when the series
+    is too short for any candidate."""
+    if span != "auto":
+        return span, latent_dim, intermediate_dim
+    try:
+        best = search_hyperparams_np(
+            vals, max_evals=max_evals, epochs=search_epochs, seed=seed)
+    except ValueError:
+        return None
+    return best["span"], best["latent_dim"], best["intermediate_dim"]
+
+
+def _with_keys(rows: pd.DataFrame, key_cols, keys) -> pd.DataFrame:
+    for i, k in enumerate(key_cols):
+        rows.insert(i, k, keys[i])
+    return rows
 
 
 def donut_fit_predict_group(
@@ -53,86 +78,36 @@ def donut_fit_predict_group(
     pdf = pdf.sort_values(ts_col).reset_index(drop=True)
     vals = pdf[value_col].to_numpy(dtype=float)
     ts = pdf[ts_col].to_numpy()
-    cut = train_before
-    if cut is None:
-        cut_idx = int(len(vals) * 2 / 3)
+    if train_before is None:
+        cut = int(len(vals) * 2 / 3)
     else:
-        cut_idx = int(np.searchsorted(ts, cut))
-    kseed0 = _key_seed(keys, seed)
-    if span == "auto":
-        from loudml_spark.ml.donut_np import search_hyperparams_np
-
-        try:
-            best = search_hyperparams_np(
-                vals[:cut_idx], max_evals=max_evals,
-                epochs=search_epochs, seed=kseed0,
-            )
-        except ValueError:
-            return pd.DataFrame(
-                columns=[*key_cols, ts_col, "observed", "predicted",
-                         "lower", "upper"]
-            )
-        k_span, k_latent, k_inter = (
-            best["span"], best["latent_dim"], best["intermediate_dim"])
-    else:
-        k_span, k_latent, k_inter = span, latent_dim, intermediate_dim
-    train = vals[:cut_idx]
-    # nothing to score (series ends at/before the cut) or not
-    # enough history for even one query window → empty, not a
-    # sliding_window_view crash inside the executor
-    if (
-        len(train) <= k_span + 2
-        or cut_idx >= len(vals)
-        or len(vals) - max(0, cut_idx - k_span + 1) < k_span
-    ):
+        cut = int(np.searchsorted(ts, train_before))
+    kseed = _key_seed(keys, seed)
+    hp = _key_hyperparams(
+        vals[:cut], span, latent_dim, intermediate_dim,
+        max_evals=max_evals, search_epochs=search_epochs, seed=kseed)
+    # too little training data, or nothing to score (the series ends
+    # at/before the cut) → empty, not a crash inside the executor
+    if hp is None or cut <= hp[0] + 2 or cut >= len(vals):
         return pd.DataFrame(
             columns=[*key_cols, ts_col, "observed", "predicted",
                      "lower", "upper"]
         )
-    mean = float(np.nanmean(train))
-    std = float(np.nanstd(train))
-    # NaN is truthy — `or 1.0` would NOT catch an all-missing
-    # slice; mirror DonutModel.fit's explicit convention
-    std = 1.0 if std == 0 or np.isnan(std) else std
-    mean = 0.0 if np.isnan(mean) else mean
-
-    def windows(v):
-        scaled = (v - mean) / std
-        mask = (~np.isnan(scaled)).astype(float)
-        scaled = np.nan_to_num(scaled, nan=0.0)
-        X = np.lib.stride_tricks.sliding_window_view(
-            scaled, k_span).copy()
-        M = np.lib.stride_tricks.sliding_window_view(
-            mask, k_span).copy()
-        return X, M
-
-    vae = NumpyVAE(k_span, k_latent, k_inter, kseed0)
-    Xt, Mt = windows(train)
-    vae.fit(Xt, Mt, epochs=epochs)
-
+    k_span, k_latent, k_inter = hp
+    state = donut_fit_values(
+        vals[:cut], span=k_span, latent_dim=k_latent,
+        intermediate_dim=k_inter, epochs=epochs, seed=kseed)
     # score everything from the cut onward (history reaches back
     # span-1 buckets, donut.py:1210-1217)
-    lo = max(0, cut_idx - k_span + 1)
-    Xq, Mq = windows(vals[lo:])
-    Mq2 = Mq.copy()
-    Mq2[:, -1] = 0.0
-    rng = np.random.default_rng(kseed0 + 7)
-    mu, sigma = vae.reconstruct(Xq, Mq2, rng)
-    pred = mu[:, -1] * std + mean
-    sig = sigma[:, -1] * std
-    out_ts = ts[lo + k_span - 1:]
-    keep = out_ts >= ts[cut_idx] if cut_idx < len(ts) else \
-        np.zeros(len(out_ts), bool)
-    rows = pd.DataFrame({
-        ts_col: out_ts[keep],
-        "observed": vals[lo + k_span - 1:][keep],
-        "predicted": pred[keep],
-        "lower": (pred - BAND_SIGMA * sig)[keep],
-        "upper": (pred + BAND_SIGMA * sig)[keep],
-    })
-    for i, k in enumerate(key_cols):
-        rows.insert(i, k, keys[i])
-    return rows
+    pred, sig = donut_predict_values(
+        state, vals[cut - k_span + 1:], span=k_span, seed=kseed)
+    return _with_keys(pd.DataFrame({
+        ts_col: ts[cut:],
+        "observed": vals[cut:],
+        "predicted": pred,
+        "lower": pred - BAND_SIGMA * sig,
+        "upper": pred + BAND_SIGMA * sig,
+    }), key_cols, keys)
 
 
 def donut_fit_predict_many(
@@ -215,6 +190,7 @@ def donut_forecast_many(
     """
     from loudml_spark.ml.scoring import band_sigma_for
 
+    band_sigma_for(percent_interval)  # raise Invalid here, not per key
     c = None
     if constraint is not None:
         from loudml_spark.api import parse_constraint
@@ -229,7 +205,6 @@ def donut_forecast_many(
                 f"(fleet value column is {value_col!r})"
             )
 
-    p = band_sigma_for(percent_interval)
     schema = ", ".join(
         [f"{k} string" for k in key_cols]
         + [f"{ts_col} long", "predicted double",
@@ -241,7 +216,8 @@ def donut_forecast_many(
         return donut_forecast_group(
             keys, pdf, key_cols=key_cols, horizon=horizon, span=span,
             latent_dim=latent_dim, intermediate_dim=intermediate_dim,
-            epochs=epochs, p=p, percent_noise=percent_noise,
+            epochs=epochs, percent_interval=percent_interval,
+            percent_noise=percent_noise,
             bucket_interval=bucket_interval, ts_col=ts_col,
             value_col=value_col, seed=seed, max_evals=max_evals,
             search_epochs=search_epochs, constraint=c,
@@ -260,7 +236,7 @@ def donut_forecast_group(
     latent_dim: int = 3,
     intermediate_dim: int = 34,
     epochs: int = 40,
-    p: float = 1.0,
+    percent_interval: float = 0.68,
     percent_noise: float = 0.0,
     bucket_interval: int = 3600,
     ts_col: str = "bucket_ts",
@@ -278,45 +254,21 @@ def donut_forecast_group(
     vals = pdf[value_col].to_numpy(dtype=float)
     ts = pdf[ts_col].to_numpy()
     kseed = _key_seed(keys, seed)
-    empty = pd.DataFrame(
-        columns=[*key_cols, ts_col, "predicted", "lower", "upper",
-                 *(["constraint_breach"] if c else [])])
-    if span == "auto":
-        from loudml_spark.ml.donut_np import search_hyperparams_np
-
-        try:
-            best = search_hyperparams_np(
-                vals, max_evals=max_evals, epochs=search_epochs,
-                seed=kseed)
-        except ValueError:
-            return empty
-        k_span, k_latent, k_inter = (
-            best["span"], best["latent_dim"],
-            best["intermediate_dim"])
-    else:
-        k_span, k_latent, k_inter = span, latent_dim, intermediate_dim
-    if len(vals) <= k_span + 2:
-        return empty
-    mean = float(np.nanmean(vals))
-    std = float(np.nanstd(vals))
-    std = 1.0 if std == 0 or np.isnan(std) else std
-    mean = 0.0 if np.isnan(mean) else mean
-    scaled = np.nan_to_num((vals - mean) / std, nan=0.0)
-    mask = (~np.isnan(vals)).astype(float)
-    X = np.lib.stride_tricks.sliding_window_view(scaled, k_span).copy()
-    M = np.lib.stride_tricks.sliding_window_view(mask, k_span).copy()
-    vae = NumpyVAE(k_span, k_latent, k_inter, kseed)
-    vae.fit(X, M, epochs=epochs)
-    # [-(span-1):] with span == 1 is [-0:] == the whole array
-    tail = slice(-(k_span - 1), None) if k_span > 1 else slice(0, 0)
-    window = np.concatenate([scaled[tail], [0.0]])
-    wmask = np.concatenate([mask[tail], [0.0]])
-    rng = np.random.default_rng(kseed + 13)
-    noise = percent_noise * float(bucket_interval) / 86400.0
-    y, sig = vae.forecast_roll(window, wmask, horizon, rng,
-                               noise=noise)
-    pred = y * std + mean
-    half = p * sig * std
+    hp = _key_hyperparams(
+        vals, span, latent_dim, intermediate_dim,
+        max_evals=max_evals, search_epochs=search_epochs, seed=kseed)
+    if hp is None or len(vals) <= hp[0] + 2:
+        return pd.DataFrame(
+            columns=[*key_cols, ts_col, "predicted", "lower", "upper",
+                     *(["constraint_breach"] if c else [])])
+    k_span, k_latent, k_inter = hp
+    state = donut_fit_values(
+        vals, span=k_span, latent_dim=k_latent, intermediate_dim=k_inter,
+        epochs=epochs, seed=kseed)
+    pred, half = donut_forecast_values(
+        state, horizon, span=k_span, seed=kseed,
+        percent_interval=percent_interval, percent_noise=percent_noise,
+        bucket_interval=bucket_interval)
     start = int(ts[-1]) + bucket_interval
     rows = pd.DataFrame({
         ts_col: [start + j * bucket_interval for j in range(horizon)],
@@ -332,11 +284,4 @@ def donut_forecast_group(
         if hit.size:
             breach[hit[0]] = True
         rows["constraint_breach"] = breach
-    for i, k in enumerate(key_cols):
-        rows.insert(i, k, keys[i])
-    return rows
-
-
-def states_json(models: dict) -> str:
-    """Serialize a {key: NumpyVAE} fleet for storage."""
-    return json.dumps({k: v.state_dict() for k, v in models.items()})
+    return _with_keys(rows, key_cols, keys)

@@ -277,7 +277,122 @@ class NumpyVAE:
         return vae
 
 
-def _span_windows(span, scaled, mask, cut, cache):
+# ------------------------------------------------------------------
+# The one numpy implementation of each Donut step.  DonutModel (driver),
+# the per-key fleet (executors) and the DuckDB oracle replays all call
+# these, so they run the same float ops with the same seeds.
+
+
+def zscore_params(vals) -> tuple[float, float]:
+    """(mean, std) that z-score a series holding NaN for missing
+    buckets: std → 1 when it is 0 or NaN (donut.py:650); an
+    all-missing or empty slice scales with mean 0, std 1."""
+    if np.isnan(vals).all():
+        return 0.0, 1.0
+    mean = float(np.nanmean(vals))
+    std = float(np.nanstd(vals))
+    if std == 0 or np.isnan(std):
+        std = 1.0
+    return mean, std
+
+
+def donut_windows(vals, mean: float, std: float, span: int):
+    """z-scored sliding windows X (missing → 0) and their observed
+    mask M, both N×span."""
+    scaled = (vals - mean) / std
+    mask = (~np.isnan(scaled)).astype(float)
+    scaled = np.nan_to_num(scaled, nan=0.0)
+    X = np.lib.stride_tricks.sliding_window_view(scaled, span).copy()
+    M = np.lib.stride_tricks.sliding_window_view(mask, span).copy()
+    return X, M
+
+
+def donut_fit_values(
+    vals,
+    *,
+    span: int,
+    latent_dim: int,
+    intermediate_dim: int,
+    epochs: int,
+    seed: int,
+    batch_size: int = 64,
+    init: dict | None = None,
+) -> dict:
+    """Train the VAE on a value array (NaN = missing) → JSON state.
+
+    ``init`` (a ``NumpyVAE.state_dict()``) continues training from
+    those weights, the reference's `_train_ckpt_on_dataset`
+    (donut.py:857-897): the checkpoint pins architecture and seed,
+    mean/std are re-estimated on ``vals`` (donut.py:866) and Adam
+    moments restart."""
+    mean, std = zscore_params(vals)
+    X, M = donut_windows(vals, mean, std, span)
+    vae = (NumpyVAE(span, latent_dim, intermediate_dim, seed)
+           if init is None else NumpyVAE.from_state(init))
+    history = vae.fit(X, M, epochs=epochs, batch_size=batch_size)
+    # the raw training tail (span-1 values) seeds the first forecast
+    # window without re-reading the source (donut.py:1361-1365 widens
+    # the scan instead); [-0:] would be the whole array
+    tail = vals[-(span - 1):] if span > 1 else vals[:0]
+    return {
+        "vae": vae.state_dict(), "mean": mean, "std": std,
+        "loss": history[-1],
+        "tail": [None if np.isnan(v) else float(v) for v in tail],
+    }
+
+
+def donut_predict_values(state: dict, vals, *, span: int, seed: int):
+    """(pred, sig) for every full window of ``vals``, aligned to
+    ``vals[span-1:]``: each bucket is predicted from its window with
+    that bucket treated as missing (donut.py:1260-1265)."""
+    mean, std = state["mean"], state["std"]
+    X, M = donut_windows(vals, mean, std, span)
+    M[:, -1] = 0.0
+    vae = NumpyVAE.from_state(state["vae"])
+    mu, sigma = vae.reconstruct(X, M, np.random.default_rng(seed + 7))
+    return mu[:, -1] * std + mean, sigma[:, -1] * std
+
+
+def donut_forecast_values(
+    state: dict,
+    steps: int,
+    *,
+    span: int,
+    seed: int,
+    percent_interval: float = 0.68,
+    percent_noise: float = 0.0,
+    bucket_interval: int = 3600,
+    history=None,
+):
+    """Roll-forward forecast: (pred, half_band) arrays of length
+    ``steps``, starting from the last span-1 values of ``history``
+    (default: the stored training tail)."""
+    from loudml_spark import errors
+    from loudml_spark.ml.scoring import band_sigma_for
+
+    mean, std = state["mean"], state["std"]
+    raw = history if history is not None else state.get("tail")
+    if raw is None or len(raw) < span - 1:
+        raise errors.Invalid(
+            f"forecast needs the last {span - 1} observed "
+            "values (train first or pass history=)")
+    hist = np.array(
+        [np.nan if v is None else float(v) for v in raw],
+        dtype=float,
+    )
+    hist = hist[-(span - 1):] if span > 1 else hist[:0]
+    window = np.nan_to_num(
+        np.concatenate([(hist - mean) / std, [0.0]]), nan=0.0)
+    mask = np.concatenate([(~np.isnan(hist)).astype(float), [0.0]])
+    vae = NumpyVAE.from_state(state["vae"])
+    rng = np.random.default_rng(seed + 13)
+    noise = percent_noise * float(bucket_interval) / 86400.0
+    y, sig = vae.forecast_roll(window, mask, steps, rng, noise=noise)
+    p = band_sigma_for(percent_interval)
+    return y * std + mean, p * sig * std
+
+
+def _span_windows(span, vals, mean, std, cut, cache):
     """Window matrices depend only on span — share one read-only set
     per span across every (latent, hidden) candidate instead of
     copying O(n·span) arrays per config (with 2·max_evals candidates
@@ -285,16 +400,9 @@ def _span_windows(span, scaled, mask, cut, cache):
     candidate count; in fleet mode this runs per key inside
     executors' Python workers)."""
     if span not in cache:
-        lo = cut - span + 1
         cache[span] = (
-            np.lib.stride_tricks.sliding_window_view(
-                scaled[:cut], span).copy(),
-            np.lib.stride_tricks.sliding_window_view(
-                mask[:cut], span).copy(),
-            np.lib.stride_tricks.sliding_window_view(
-                scaled[lo:], span).copy(),
-            np.lib.stride_tricks.sliding_window_view(
-                mask[lo:], span).copy(),
+            *donut_windows(vals[:cut], mean, std, span),
+            *donut_windows(vals[cut - span + 1:], mean, std, span),
         )
     return cache[span]
 
@@ -306,11 +414,11 @@ class _Candidate:
     scratch).  The shared matrices are never mutated: fit() copies
     its mini-batches and val_loss() copies the query mask."""
 
-    def __init__(self, span, ld, id_, scaled, mask, cut, seed,
+    def __init__(self, span, ld, id_, vals, mean, std, cut, seed,
                  win_cache):
         self.span, self.ld, self.id_ = span, ld, id_
         self.Xt, self.Mt, self.Xv, self.Mv = _span_windows(
-            span, scaled, mask, cut, win_cache)
+            span, vals, mean, std, cut, win_cache)
         self.vae = NumpyVAE(span, ld, id_, seed)
         self.seed = seed
         self.epochs_spent = 0
@@ -399,12 +507,7 @@ def search_hyperparams_np(
     cut = int(len(vals) * train_size)
     # scaling is candidate-invariant (depends only on vals/cut) —
     # hoisted out of the eval loop (it runs per key in fleet mode)
-    mean = float(np.nanmean(vals[:cut])) if cut else 0.0
-    std = float(np.nanstd(vals[:cut])) if cut else 1.0
-    std = 1.0 if std == 0 or np.isnan(std) else std
-    mean = 0.0 if np.isnan(mean) else mean
-    scaled = np.nan_to_num((vals - mean) / std, nan=0.0)
-    mask = (~np.isnan(vals)).astype(float)
+    mean, std = zscore_params(vals[:cut])
 
     def fits(span):
         return cut > span + 2 and len(vals) - cut > span
@@ -417,7 +520,8 @@ def search_hyperparams_np(
         raise ValueError(
             "series too short for any candidate span in the search grid")
     win_cache: dict = {}
-    cands = [_Candidate(s, ld, id_, scaled, mask, cut, seed, win_cache)
+    cands = [_Candidate(s, ld, id_, vals, mean, std, cut, seed,
+                        win_cache)
              for s, ld, id_ in configs]
 
     def ranked(cs):

@@ -16,9 +16,10 @@ predict = broadcast join — both scale to any number of series):
 
 Both support ``forecast`` (predict future buckets from the profile
 alone) — covering the reference's forecast API shape
-(loudml/donut.py:1333-1475) with a deterministic estimator.  The VAE
-(donut) estimator is gated behind an import-try: this container ships
-no TF/torch, so it raises a clear error; the scoring/detection
+(loudml/donut.py:1333-1475) with a deterministic estimator.
+
+``DonutModel`` is the reference's VAE estimator on the pure-numpy
+core in ml/donut_np.py (no TF/torch needed); the scoring/detection
 pipeline downstream is estimator-agnostic.
 
 State persists as JSON (settings + state + versioned checkpoints),
@@ -55,6 +56,17 @@ def _slot_cols(seasonality: dict, ts_col: str):
             .cast("int").alias("__wd")
         )
     return cols
+
+
+def collect_series(series_df: DataFrame, ts_col: str, value_col: str):
+    """Collect an aggregated series in time order → (ts int64 array,
+    values float array with NaN for missing)."""
+    import numpy as np
+
+    rows = series_df.orderBy(ts_col).select(ts_col, value_col).collect()
+    ts = np.array([r[0] for r in rows], dtype=np.int64)
+    vals = np.array([np.nan if r[1] is None else float(r[1]) for r in rows])
+    return ts, vals
 
 
 class BaseModel:
@@ -119,6 +131,45 @@ class BaseModel:
             return 0  # span="auto" unresolved → predict will raise
         return max(0, span - 1)
 
+    def bucket_series(
+        self,
+        source_df: DataFrame,
+        from_date,
+        to_date,
+        feature_expr: str,
+        *,
+        widen: bool = False,
+        now: float | None = None,
+        **bucketize_kw,
+    ):
+        """This model's input series from a raw source: bucketize
+        ``feature_expr`` over ``[from, to)`` aligned outward to the
+        model's interval, named ``(ts_col, feature_col)``.  ``widen``
+        starts the scan ``history_buckets()`` intervals early, so a
+        window model predicts the first requested bucket
+        (donut.py:1210-1217 widens inside predict rather than trusting
+        callers).  ``bucketize_kw`` passes through (ts_col, ts_unit,
+        group_by).  Returns (series, from_ts, to_ts) — the aligned,
+        unwidened range."""
+        from loudml_spark import timeutil
+        from loudml_spark.features import parse_features
+        from loudml_spark.operators.bucketize import BUCKET_COL, bucketize
+
+        interval = self.bucket_interval
+        from_ts, to_ts = timeutil.align_range(
+            timeutil.make_ts(from_date, now=now),
+            timeutil.make_ts(to_date, now=now),
+            interval,
+        )
+        lo = from_ts - (self.history_buckets() * interval if widen else 0)
+        feat = parse_features([feature_expr])[0]
+        series = bucketize(
+            source_df, [feature_expr], lo, to_ts, interval, **bucketize_kw,
+        ).withColumnRenamed(feat.name, self.feature_col)
+        if BUCKET_COL != self.ts_col:
+            series = series.withColumnRenamed(BUCKET_COL, self.ts_col)
+        return series, from_ts, to_ts
+
     def predict_range(
         self,
         source_df: DataFrame,
@@ -130,31 +181,14 @@ class BaseModel:
         ts_unit: str = "s",
         now: float | None = None,
     ) -> DataFrame:
-        """Predict ``[from, to)`` straight from a raw source: bucketize
-        with the scan AUTOMATICALLY widened by (span−1)·interval of
-        history (donut.py:1210-1217 — the reference widens inside
-        predict rather than trusting callers), score, then trim back
-        to the requested range.  Window models therefore return a full
-        prediction for the very first requested bucket."""
-        from loudml_spark import timeutil
-        from loudml_spark.features import parse_features
-        from loudml_spark.operators.bucketize import BUCKET_COL, bucketize
-
-        interval = self.bucket_interval
-        from_ts, to_ts = timeutil.align_range(
-            timeutil.make_ts(from_date, now=now),
-            timeutil.make_ts(to_date, now=now),
-            interval,
+        """Predict ``[from, to)`` straight from a raw source: the
+        widened series (:meth:`bucket_series`), scored, then trimmed
+        back to the requested range.  Window models therefore return
+        a full prediction for the very first requested bucket."""
+        series, from_ts, _ = self.bucket_series(
+            source_df, from_date, to_date, feature_expr, widen=True,
+            now=now, ts_col=ts_col, ts_unit=ts_unit,
         )
-        hist_from = from_ts - self.history_buckets() * interval
-        feat = parse_features([feature_expr])[0]
-        series = bucketize(
-            source_df, [feature_expr], hist_from, to_ts, interval,
-            ts_col=ts_col, ts_unit=ts_unit,
-        )
-        series = series.withColumnRenamed(feat.name, self.feature_col)
-        if BUCKET_COL != self.ts_col:
-            series = series.withColumnRenamed(BUCKET_COL, self.ts_col)
         return self.predict(series).filter(
             F.col(self.ts_col) >= F.lit(from_ts)
         )
@@ -292,116 +326,6 @@ class SeasonalNaiveModel(BaseModel):
         ).drop(self.feature_col)
 
 
-def _donut_windows(vals, mean: float, std: float, span: int):
-    """z-scored sliding windows + missing mask (shared by fit,
-    predict, and the DuckDB oracle replay)."""
-    import numpy as np
-
-    scaled = (vals - mean) / std
-    mask = (~np.isnan(scaled)).astype(float)
-    scaled = np.nan_to_num(scaled, nan=0.0)
-    X = np.lib.stride_tricks.sliding_window_view(scaled, span).copy()
-    M = np.lib.stride_tricks.sliding_window_view(mask, span).copy()
-    return X, M
-
-
-def donut_fit_values(
-    vals,
-    *,
-    span: int,
-    latent_dim: int,
-    intermediate_dim: int,
-    epochs: int,
-    batch_size: int,
-    seed: int,
-) -> dict:
-    """Pure-numpy Donut training on a value array → state dict.
-    Module-level so the oracle generator (catalog_oracle_ml.py) can
-    replay the EXACT training the model runs — same float ops, same
-    seeds, bit-identical weights."""
-    import numpy as np
-
-    from loudml_spark.ml.donut_np import NumpyVAE
-
-    mean = float(np.nanmean(vals))
-    std = float(np.nanstd(vals))
-    if std == 0 or np.isnan(std):
-        std = 1.0  # donut.py:650
-    X, M = _donut_windows(vals, mean, std, span)
-    vae = NumpyVAE(span, latent_dim, intermediate_dim, seed)
-    history = vae.fit(X, M, epochs=epochs, batch_size=batch_size)
-    tail = vals[-(span - 1):] if span > 1 else vals[:0]
-    return {
-        "vae": vae.state_dict(), "mean": mean, "std": std,
-        "loss": history[-1],
-        "tail": [None if np.isnan(v) else float(v) for v in tail],
-    }
-
-
-def donut_predict_values(state: dict, vals, *, span: int, seed: int):
-    """Pure-numpy Donut inference: (pred, sig) aligned to
-    ``vals[span-1:]`` — the numpy core of DonutModel.transform,
-    shared with the oracle replay."""
-    import numpy as np
-
-    from loudml_spark.ml.donut_np import NumpyVAE
-
-    mean, std = state["mean"], state["std"]
-    X, M = _donut_windows(vals, mean, std, span)
-    # the bucket being predicted is treated as missing
-    # (donut.py:1260-1265)
-    Mq = M.copy()
-    Mq[:, -1] = 0.0
-    vae = NumpyVAE.from_state(state["vae"])
-    rng = np.random.default_rng(seed + 7)
-    mu, sigma = vae.reconstruct(X, Mq, rng)
-    return mu[:, -1] * std + mean, sigma[:, -1] * std
-
-
-def donut_forecast_values(
-    state: dict,
-    steps: int,
-    *,
-    span: int,
-    seed: int,
-    percent_interval: float = 0.68,
-    percent_noise: float = 0.0,
-    bucket_interval: int = 3600,
-    history=None,
-):
-    """Pure-numpy roll-forward forecast: (pred, half_band) arrays of
-    length ``steps`` — the numpy core of DonutModel.forecast, shared
-    with the oracle replay."""
-    import numpy as np
-
-    from loudml_spark.ml.donut_np import NumpyVAE
-    from loudml_spark.ml.scoring import band_sigma_for
-
-    mean, std = state["mean"], state["std"]
-    raw = history if history is not None else state.get("tail")
-    if raw is None or len(raw) < span - 1:
-        raise errors.Invalid(
-            f"forecast needs the last {span - 1} observed "
-            "values (train first or pass history=)")
-    hist = np.array(
-        [np.nan if v is None else float(v) for v in raw],
-        dtype=float,
-    )
-    # [-(span-1):] with span == 1 is [-0:] == the WHOLE array —
-    # slice explicitly so a span-1 model rolls from an empty tail
-    hist = hist[-(span - 1):] if span > 1 else hist[:0]
-    window = np.concatenate([(hist - mean) / std, [0.0]])
-    mask = np.concatenate(
-        [(~np.isnan(hist)).astype(float), [0.0]])
-    window = np.nan_to_num(window, nan=0.0)
-    vae = NumpyVAE.from_state(state["vae"])
-    rng = np.random.default_rng(seed + 13)
-    noise = percent_noise * float(bucket_interval) / 86400.0
-    y, sig = vae.forecast_roll(window, mask, steps, rng, noise=noise)
-    p = band_sigma_for(percent_interval)
-    return y * std + mean, p * sig * std
-
-
 class DonutModel(BaseModel):
     """Donut VAE (arXiv 1802.03903) on the pure-numpy estimator
     (ml/donut_np.py) — same train/predict contract as the reference's
@@ -412,9 +336,8 @@ class DonutModel(BaseModel):
 
     Fit runs on the driver over the *collected aggregated* series —
     the reference's own sizing (≤ tens of thousands of floats).
-    Inference is batched numpy over all windows at once; for fleets,
-    run one model per key via applyInPandas (see ml/regression.fit_many
-    for the pattern)."""
+    Inference is batched numpy over all windows at once; for fleets
+    (one VAE per key inside executors) use ml/donut_fleet.py."""
 
     TYPE = "donut"
 
@@ -442,50 +365,21 @@ class DonutModel(BaseModel):
                  seed=self.seed, max_evals=self.max_evals)
         return s
 
-    def _series(self, series_df):
-        import numpy as np
-
-        rows = series_df.orderBy(self.ts_col).select(
-            self.ts_col, self.feature_col).collect()
-        ts = np.array([r[0] for r in rows], dtype=np.int64)
-        vals = np.array(
-            [np.nan if r[1] is None else float(r[1]) for r in rows]
-        )
-        return ts, vals
-
-    def _windows(self, vals, mean, std):
-        import numpy as np
-
-        scaled = (vals - mean) / std
-        mask = (~np.isnan(scaled)).astype(float)
-        scaled = np.nan_to_num(scaled, nan=0.0)
-        X = np.lib.stride_tricks.sliding_window_view(scaled, self.span).copy()
-        M = np.lib.stride_tricks.sliding_window_view(mask, self.span).copy()
-        return X, M
-
     def fit(self, series_df, *, resume: bool = False):
         """Train (or, with ``resume=True`` and an existing checkpoint,
-        CONTINUE training) the VAE.  Resume mirrors the reference's
-        `_train_ckpt_on_dataset` (donut.py:857-897), which keeps the
-        existing keras graph and fits it further on the new window:
-        weights warm-start from ``state["vae"]``; data statistics are
-        re-estimated on the new series (stat_dataset is re-run per
-        train in the reference, donut.py:866); the architecture
-        (span/latent/hidden) is pinned by the checkpoint.  Adam
-        moments restart — matching a fresh `fit` call on a built
-        model, not a mid-epoch suspend."""
-        import numpy as np
+        CONTINUE training) the VAE: ``donut_fit_values`` warm-starts
+        from ``state["vae"]`` (see its ``init``), and the checkpoint
+        pins span/latent/hidden, so ``span="auto"`` is not searched
+        again."""
+        from loudml_spark.ml.donut_np import donut_fit_values
 
-        from loudml_spark.ml.donut_np import NumpyVAE
-
-        warm = resume and isinstance(self.state, dict) \
-            and "vae" in self.state
+        init = self.state["vae"] if resume and isinstance(
+            self.state, dict) and "vae" in self.state else None
         if self.span == "auto":
-            if warm:
-                # checkpoint pins the architecture — no re-search
-                self.span = int(self.state["vae"]["span"])
-                self.latent_dim = int(self.state["vae"]["latent"])
-                self.intermediate_dim = int(self.state["vae"]["hidden"])
+            if init is not None:
+                self.span = int(init["span"])
+                self.latent_dim = int(init["latent"])
+                self.intermediate_dim = int(init["hidden"])
             else:
                 best = auto_hyperparams(
                     series_df, max_evals=self.max_evals, seed=self.seed,
@@ -495,41 +389,19 @@ class DonutModel(BaseModel):
                 self.latent_dim = best["latent_dim"]
                 self.intermediate_dim = best["intermediate_dim"]
 
-        _, vals = self._series(series_df)
-        if warm:
-            mean = float(np.nanmean(vals))
-            std = float(np.nanstd(vals))
-            if std == 0 or np.isnan(std):
-                std = 1.0  # donut.py:650
-            X, M = self._windows(vals, mean, std)
-            vae = NumpyVAE.from_state(self.state["vae"])
-            history = vae.fit(X, M, epochs=self.epochs,
-                              batch_size=self.batch_size)
-            # keep the raw training tail (span-1 values) so forecast
-            # can seed its first window without re-reading the source
-            # (donut.py:1361-1365 widens the scan instead)
-            tail = vals[-(self.span - 1):] if self.span > 1 else vals[:0]
-            self.state = {
-                "vae": vae.state_dict(), "mean": mean, "std": std,
-                "loss": history[-1],
-                "tail": [None if np.isnan(v) else float(v) for v in tail],
-            }
-        else:
-            self.state = donut_fit_values(
-                vals, span=self.span, latent_dim=self.latent_dim,
-                intermediate_dim=self.intermediate_dim,
-                epochs=self.epochs, batch_size=self.batch_size,
-                seed=self.seed,
-            )
+        _, vals = collect_series(series_df, self.ts_col, self.feature_col)
+        self.state = donut_fit_values(
+            vals, span=self.span, latent_dim=self.latent_dim,
+            intermediate_dim=self.intermediate_dim, epochs=self.epochs,
+            batch_size=self.batch_size, seed=self.seed, init=init,
+        )
         return self
 
     def transform(self, series_df):
-        import numpy as np
-
-        from loudml_spark.ml.donut_np import NumpyVAE
+        from loudml_spark.ml.donut_np import donut_predict_values
 
         self._require_trained()
-        ts, vals = self._series(series_df)
+        ts, vals = collect_series(series_df, self.ts_col, self.feature_col)
         pred, sig = donut_predict_values(
             self.state, vals, span=self.span, seed=self.seed)
         spark = series_df.sparkSession
@@ -562,10 +434,7 @@ class DonutModel(BaseModel):
         Driver loop bounded by horizon/interval, never data volume.
         Returns (bucket_ts, predicted, lower, upper).
         """
-        import numpy as np
-
-        from loudml_spark.ml.donut_np import NumpyVAE
-        from loudml_spark.ml.scoring import band_sigma_for
+        from loudml_spark.ml.donut_np import donut_forecast_values
 
         self._require_trained()
         steps = int((to_ts - from_ts) // self.bucket_interval)
@@ -625,14 +494,9 @@ def auto_hyperparams(
     Returns {"span", "latent_dim", "intermediate_dim", "loss",
     "n_evals"}.
     """
-    import numpy as np
-
     from loudml_spark.ml.donut_np import search_hyperparams_np
 
-    rows = series_df.orderBy(ts_col).select(value_col).collect()
-    vals = np.array(
-        [np.nan if r[0] is None else float(r[0]) for r in rows]
-    )
+    _, vals = collect_series(series_df, ts_col, value_col)
     try:
         return search_hyperparams_np(
             vals, max_evals=max_evals, spans=spans,

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from loudml_spark import errors
-from loudml_spark.ml.models import BAND_SIGMA, BaseModel
+from loudml_spark.ml.models import BAND_SIGMA, BaseModel, collect_series
 
 
 def _solve_spd(A: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -91,10 +91,15 @@ def _fit_arrays(values: np.ndarray, span: int, ridge: float):
     return w, mu, sd, sigma
 
 
-def _predict_window(window: np.ndarray, w: np.ndarray, mu: float,
-                    sd: float) -> float:
+def _predict_window(window, w: np.ndarray, mu: float, sd: float) -> float:
+    """Next value from the ``span`` previous ones.  Every AR scoring
+    path (forecast, impute, :func:`predict_many`'s UDF and its oracle
+    mirror :func:`ar_predict_values`) calls this one function."""
     xs = (np.asarray(window, dtype=float) - mu) / sd
-    # np.sum not `@`: bit-stable across processes (see _solve_spd)
+    # np.sum (pairwise, BLAS-free), NOT `@`: BLAS ddot picks
+    # env-dependent kernels (driver vs Spark-worker process configs
+    # differ by ~1 ulp) — pairwise summation is bit-stable across
+    # processes (see _solve_spd)
     return float((np.sum(xs * w[:-1]) + w[-1]) * sd + mu)
 
 
@@ -120,11 +125,7 @@ class WindowRegressionModel(BaseModel):
         return self.span
 
     def fit(self, series_df: DataFrame):
-        rows = series_df.orderBy(self.ts_col).select(
-            self.feature_col).collect()
-        values = np.array(
-            [np.nan if r[0] is None else float(r[0]) for r in rows]
-        )
+        _, values = collect_series(series_df, self.ts_col, self.feature_col)
         w, mu, sd, sigma = _fit_arrays(values, self.span, self.ridge)
         self.state = {
             "weights": w.tolist(), "mean": mu, "std": sd, "sigma": sigma,
@@ -247,10 +248,8 @@ def auto_span(
     wins ties.  The candidate fits are independent → trivially
     parallelizable; each is a closed-form solve on the collected
     aggregated series."""
-    rows = series_df.orderBy(ts_col).select(value_col).collect()
-    v = pd.Series(
-        [np.nan if r[0] is None else float(r[0]) for r in rows]
-    ).ffill().bfill().to_numpy(dtype=float)
+    _, v = collect_series(series_df, ts_col, value_col)
+    v = pd.Series(v).ffill().bfill().to_numpy(dtype=float)
     k = round(len(v) * train_size)
     results = []
     for span in sorted(candidates):
@@ -293,12 +292,7 @@ def ar_predict_values(
     for i in range(len(filled)):
         win = [x for x in filled[max(0, i - span):i] if not np.isnan(x)]
         if len(win) == len(wt) - 1:
-            xs = (np.asarray(win, dtype=float) - mu) / sd
-            # np.sum (pairwise, BLAS-free), NOT `@`: BLAS ddot picks
-            # env-dependent kernels (driver vs Spark-worker process
-            # configs differ by ~1 ulp) — pairwise summation is
-            # bit-stable across processes
-            out[i] = (np.sum(xs * wt[:-1]) + wt[-1]) * sd + mu
+            out[i] = _predict_window(win, wt, mu, sd)
     return out
 
 
@@ -366,11 +360,8 @@ def predict_many(
         for i in range(len(win)):
             wv, wt = win.iloc[i], weights.iloc[i]
             if wv is not None and wt is not None and len(wv) == len(wt) - 1:
-                xs = (np.asarray(wv, dtype=float) - mean.iloc[i]) / std.iloc[i]
-                # np.sum not `@`: bit-stable across driver/worker
-                # process configs (see ar_predict_values)
-                out[i] = (np.sum(xs * np.asarray(wt)[:-1]) + wt[-1]) \
-                    * std.iloc[i] + mean.iloc[i]
+                out[i] = _predict_window(
+                    wv, np.asarray(wt), mean.iloc[i], std.iloc[i])
         return pd.Series(out)
 
     pred_udf = F.pandas_udf(fn, "double")

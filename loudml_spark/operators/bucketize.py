@@ -32,6 +32,7 @@ the parquet scan as a pushed filter / partition prune.
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
 from typing import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -80,6 +81,17 @@ def _bucket_expr(df: DataFrame, ts_col: str, interval: int, ts_unit: str) -> Col
     return (F.floor(epoch / F.lit(interval)) * F.lit(interval)).cast("long")
 
 
+def _ntz_lit(epoch_s: float, dtype) -> Column:
+    """An epoch bound as a UTC wall-clock string literal cast to NTZ:
+    tz-independent — ``timestamp_seconds(...).cast(NTZ)`` would render
+    it in the SESSION timezone and shift the range under non-UTC
+    sessions — and a plain string-literal comparison pushes into the
+    scan."""
+    s = datetime.fromtimestamp(float(epoch_s), tz=timezone.utc).strftime(
+        "%Y-%m-%d %H:%M:%S.%f")
+    return F.lit(s).cast(dtype)
+
+
 def _range_predicate(
     df: DataFrame, ts_col: str, from_ts: float, to_ts: float, ts_unit: str
 ) -> Column:
@@ -87,17 +99,8 @@ def _range_predicate(
     Catalyst pushes it into the scan."""
     dtype = df.schema[ts_col].dataType
     if isinstance(dtype, T.TimestampNTZType):
-        # UTC wall-clock literals cast to NTZ: tz-independent, and a
-        # plain string-literal comparison pushes into the scan
-        from datetime import datetime, timezone
-
-        def _ntz_lit(v: float):
-            s = datetime.fromtimestamp(float(v), tz=timezone.utc) \
-                .strftime("%Y-%m-%d %H:%M:%S.%f")
-            return F.lit(s).cast(dtype)
-
-        return (F.col(ts_col) >= _ntz_lit(from_ts)) & (
-            F.col(ts_col) < _ntz_lit(to_ts))
+        return (F.col(ts_col) >= _ntz_lit(from_ts, dtype)) & (
+            F.col(ts_col) < _ntz_lit(to_ts, dtype))
     if isinstance(dtype, T.TimestampType):
         lo = F.timestamp_seconds(F.lit(float(from_ts)))
         hi = F.timestamp_seconds(F.lit(float(to_ts)))
@@ -123,20 +126,8 @@ def _range_predicate(
         ):
             rdtype = df.schema[raw].dataType
             if isinstance(rdtype, T.TimestampNTZType):
-                # NTZ wall clocks are UTC by the loader's contract:
-                # build the bounds as UTC STRING literals cast to NTZ
-                # (tz-independent) — timestamp_seconds(...).cast(NTZ)
-                # would render the bound in the SESSION timezone and
-                # shift the pruning range under non-UTC sessions.
-                from datetime import datetime, timezone
-
-                def _ntz(v: float):
-                    s = datetime.fromtimestamp(
-                        float(v), tz=timezone.utc
-                    ).strftime("%Y-%m-%d %H:%M:%S.%f")
-                    return F.lit(s).cast(rdtype)
-
-                lo, hi = _ntz(from_ts), _ntz(to_ts)
+                # NTZ wall clocks are UTC by the loader's contract
+                lo, hi = _ntz_lit(from_ts, rdtype), _ntz_lit(to_ts, rdtype)
             else:
                 lo = F.timestamp_seconds(F.lit(float(from_ts)))
                 hi = F.timestamp_seconds(F.lit(float(to_ts)))

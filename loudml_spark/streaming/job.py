@@ -164,12 +164,8 @@ def stream_dedupe(
 #: bounded-state claims are about.
 last_state_metrics: list[dict] = []
 
-_STATE_STORE_PROVIDERS = {
-    "rocksdb": ("org.apache.spark.sql.execution.streaming."
-                "state.RocksDBStateStoreProvider"),
-    "hdfs": ("org.apache.spark.sql.execution.streaming."
-             "state.HDFSBackedStateStoreProvider"),
-}
+_ROCKSDB_PROVIDER = ("org.apache.spark.sql.execution.streaming."
+                     "state.RocksDBStateStoreProvider")
 
 
 def drain_stream_to_df(
@@ -179,7 +175,6 @@ def drain_stream_to_df(
     output_mode: str = "append",
     timeout: int = 300,
     prefix: str = "drain",
-    state_store: str | None = "rocksdb",
 ) -> DataFrame:
     """Run a BOUNDED streaming plan to completion and hand back the
     result as a regular DataFrame: memory sink + availableNow
@@ -190,16 +185,14 @@ def drain_stream_to_df(
     the checkpointed blocks are freed by the ContextCleaner once the
     returned frame is unreferenced.
 
-    ``state_store`` (default ``"rocksdb"``) picks the state-store
-    provider for the drained query — the RocksDB provider is the
+    The drained query runs the RocksDB state-store provider — the
     production recommendation for large key cardinality (state spills
     to local SST files instead of executor heap), so the catalog's
     streaming queries run what SCALE.md recommends rather than a
-    test-only default; pass ``"hdfs"`` for the in-memory provider or
-    ``None`` to leave the session setting untouched.  The provider
-    conf is session-global but only read at query START, so it is
-    set just before ``start()`` and restored after.  Each drain also
-    records its stateful-operator metrics in ``last_state_metrics``.
+    test-only default.  The provider conf is session-global but only
+    read at query START, so it is set just before ``start()`` and
+    restored after.  Each drain also records its stateful-operator
+    metrics in ``last_state_metrics``.
 
     This is the batch↔streaming parity harness the oracle-paired
     streaming catalog queries share (streaming_detect_1h,
@@ -212,13 +205,7 @@ def drain_stream_to_df(
     name = prefix + "_" + uuid.uuid4().hex[:8]
     key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(key, None)
-    if state_store is not None:
-        provider = _STATE_STORE_PROVIDERS.get(state_store)
-        if provider is None:
-            raise errors.Invalid(
-                f"unknown state store {state_store!r} "
-                f"(one of {sorted(_STATE_STORE_PROVIDERS)} or None)")
-        spark.conf.set(key, provider)
+    spark.conf.set(key, _ROCKSDB_PROVIDER)
     try:
         q = (
             out_stream.writeStream.format("memory").queryName(name)
@@ -229,11 +216,10 @@ def drain_stream_to_df(
         progress = q.lastProgress or {}
         q.stop()
     finally:
-        if state_store is not None:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
     global last_state_metrics
     last_state_metrics = list(progress.get("stateOperators") or [])
     if not finished:

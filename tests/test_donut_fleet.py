@@ -183,3 +183,93 @@ def test_fleet_forecast_constraint_flags_per_key(spark):
     with _pytest.raises(errors.Invalid):
         donut_forecast_many(df, ["series"], horizon=4,
                             constraint="other:low:1.0")
+
+
+# -- the fleet and DonutModel share one numpy core ---------------------
+
+def _gapped_pdf(n=120, seed=11, all_missing_before=None):
+    import pandas as pd
+
+    rng = np.random.default_rng(seed)
+    ts = BASE + 3600 * np.arange(n)
+    v = 10 + 3 * np.sin(2 * np.pi * np.arange(n) / 24) \
+        + rng.normal(0, 0.2, n)
+    v[rng.random(n) < 0.1] = np.nan
+    if all_missing_before is not None:
+        v[:all_missing_before] = np.nan
+    return pd.DataFrame({"bucket_ts": ts, "value": v})
+
+
+def _frame(spark, pdf):
+    return spark.createDataFrame(
+        [(int(t), None if np.isnan(v) else float(v))
+         for t, v in zip(pdf["bucket_ts"], pdf["value"])],
+        "bucket_ts long, value double")
+
+
+def _keyed_model(keys, **kw):
+    from loudml_spark.ml.donut_fleet import _key_seed
+    from loudml_spark.ml.models import DonutModel
+
+    return DonutModel("k", span=12, latent_dim=3, intermediate_dim=34,
+                      epochs=5, seed=_key_seed(keys, 42), **kw)
+
+
+def _fleet_vs_model_predictions(spark, pdf, cut):
+    from loudml_spark.ml.donut_fleet import donut_fit_predict_group
+
+    keys = ("k1",)
+    ts = pdf["bucket_ts"].to_numpy()
+    fleet = donut_fit_predict_group(
+        keys, pdf, key_cols=["k"], span=12, epochs=5,
+        train_before=int(ts[cut]))
+    model = _keyed_model(keys)
+    df = _frame(spark, pdf)
+    model.fit(df.filter(F.col("bucket_ts") < int(ts[cut])))
+    # the scored slice carries span-1 buckets of history, as the fleet's
+    scored = model.transform(
+        df.filter(F.col("bucket_ts") >= int(ts[cut - 11])))
+    got = sorted(
+        (r["bucket_ts"], r["predicted"], r["lower"], r["upper"])
+        for r in scored.collect() if r["bucket_ts"] >= ts[cut])
+    want = [(int(r.bucket_ts), r.predicted, r.lower, r.upper)
+            for r in fleet.itertuples(index=False)]
+    return model, got, want
+
+
+def test_fleet_group_equals_donut_model_bit_for_bit(spark):
+    _, got, want = _fleet_vs_model_predictions(spark, _gapped_pdf(), 80)
+    assert len(want) == 40
+    assert got == want  # exact float equality, not approx
+
+
+def test_fleet_forecast_group_equals_donut_model_forecast(spark):
+    from loudml_spark.ml.donut_fleet import donut_forecast_group
+
+    keys = ("k1",)
+    pdf = _gapped_pdf()
+    fleet = donut_forecast_group(
+        keys, pdf, key_cols=["k"], horizon=6, span=12, epochs=5,
+        percent_interval=0.9, percent_noise=0.5, bucket_interval=3600)
+    model = _keyed_model(keys, bucket_interval=3600)
+    model.fit(_frame(spark, pdf))
+    start = int(pdf["bucket_ts"].iloc[-1]) + 3600
+    got = sorted(tuple(r) for r in model.forecast(
+        spark, start, start + 6 * 3600, percent_interval=0.9,
+        percent_noise=0.5).collect())
+    want = [(int(r.bucket_ts), r.predicted, r.lower, r.upper)
+            for r in fleet.itertuples(index=False)]
+    assert got == want
+
+
+def test_all_missing_training_slice_same_finite_state(spark):
+    import json
+
+    model, got, want = _fleet_vs_model_predictions(
+        spark, _gapped_pdf(all_missing_before=80), 80)
+    # mean -> 0, std -> 1 on an all-missing slice: finite state that
+    # serializes as strict JSON, and the fleet predicts the same
+    assert (model.state["mean"], model.state["std"]) == (0.0, 1.0)
+    json.dumps(model.state, allow_nan=False)
+    assert got == want
+    assert len(want) == 40 and all(np.isfinite(w[1:]).all() for w in want)

@@ -278,3 +278,42 @@ def test_eval_fires_hooks_on_injected_anomaly(spark, tmp_path_factory):
     assert fired, "hook did not fire on the injected spike"
     assert fired[0][0] == "hm"
     assert fired[0][1] == BASE + 460 * 3600
+
+
+def test_concurrent_appends_to_one_parquet_bucket(engine, tmp_path):
+    """Appends to one parquet path share Spark's ``_temporary`` commit
+    dir: unserialized, one can fail or lose rows.  Engine.write must
+    make every append commit all its rows."""
+    import threading
+
+    engine.add_bucket({"name": "sink", "type": "parquet",
+                       "path": str(tmp_path / "sink")})
+    n_writers, n_rows = 6, 25  # more writers than local[4] cores
+    frames = [
+        engine.spark.createDataFrame(
+            [(w, j) for j in range(n_rows)], "writer long, j long")
+        for w in range(n_writers)
+    ]
+    barrier = threading.Barrier(n_writers)
+    failures = []
+
+    def append(df):
+        barrier.wait(timeout=60)
+        try:
+            engine.write("sink", df)
+        except Exception as e:  # noqa: BLE001 - reported below
+            failures.append(e)
+
+    threads = [threading.Thread(target=append, args=(df,))
+               for df in frames]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    try:
+        assert not any(t.is_alive() for t in threads)
+        assert failures == []
+        assert engine.spark.read.parquet(
+            str(tmp_path / "sink")).count() == n_writers * n_rows
+    finally:
+        engine.delete_bucket("sink")
