@@ -35,6 +35,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from loudml_spark import errors
 from loudml_spark.ml.scoring import with_scores
@@ -398,23 +399,35 @@ class DonutModel(BaseModel):
         return self
 
     def transform(self, series_df):
+        """``series_df`` plus ``predicted``/``lower``/``upper``, null
+        for the first ``span − 1`` buckets.  The output is built from
+        the rows already collected for the model input, every column
+        kept, instead of joining the predictions back onto the lazy
+        ``series_df``, which would scan the source a second time."""
+        import numpy as np
+
         from loudml_spark.ml.donut_np import donut_predict_values
 
         self._require_trained()
-        ts, vals = collect_series(series_df, self.ts_col, self.feature_col)
+        rows = series_df.orderBy(self.ts_col).collect()
+        vals = np.array([np.nan if r[self.feature_col] is None
+                         else float(r[self.feature_col]) for r in rows])
         pred, sig = donut_predict_values(
             self.state, vals, span=self.span, seed=self.seed)
-        spark = series_df.sparkSession
-        out_ts = ts[self.span - 1:]
-        pred_df = spark.createDataFrame(
-            [(int(t), float(p), float(p - BAND_SIGMA * s),
-              float(p + BAND_SIGMA * s))
-             for t, p, s in zip(out_ts, pred, sig)],
-            f"{self.ts_col} long, predicted double, lower double, "
-            "upper double",
+        band = [None] * (len(rows) - len(pred)) + [
+            (float(p), float(p - BAND_SIGMA * s), float(p + BAND_SIGMA * s))
+            for p, s in zip(pred, sig)]
+        fields = [series_df.schema[self.ts_col]] + [
+            f for f in series_df.schema.fields if f.name != self.ts_col]
+        schema = T.StructType(fields + [
+            T.StructField(c, T.DoubleType())
+            for c in ("predicted", "lower", "upper")])
+        names = [f.name for f in fields]
+        return series_df.sparkSession.createDataFrame(
+            [tuple(r[n] for n in names) + (b or (None, None, None))
+             for r, b in zip(rows, band)],
+            schema,
         )
-        return series_df.join(F.broadcast(pred_df), on=self.ts_col,
-                              how="left")
 
     def forecast(self, spark, from_ts: int, to_ts: int, *,
                  percent_interval: float = 0.68,

@@ -176,6 +176,28 @@ def time_spine(
     )
 
 
+def bucket_range(from_date, to_date, bucket_interval, *,
+                 now: float | None = None):
+    """``(interval, raw_from, raw_to, from_ts, to_ts)`` of a request.
+
+    Data is filtered on the RAW half-open range ``[raw_from, raw_to)``;
+    the bucket spine is ``range(from_ts, to_ts, interval)``, the
+    aligned cover of it, so edge buckets may be partial.  This matches
+    the reference: WHERE time >= from AND time < to plus
+    modulo-aligned GROUP BY time(interval)
+    (tests/test_memdatasource.py:62-75 golden [2.5, None, 4.0])."""
+    interval_s = timeutil.parse_timedelta(bucket_interval)
+    if interval_s != int(interval_s) or interval_s <= 0:
+        raise errors.Invalid("bucket_interval must be a positive whole number of seconds")
+    interval = int(interval_s)
+    raw_from = timeutil.make_ts(from_date, now=now)
+    raw_to = timeutil.make_ts(to_date, now=now)
+    if raw_to < raw_from:
+        raise errors.Invalid(f"invalid date range: [{raw_from}, {raw_to})")
+    from_ts, to_ts = timeutil.align_range(raw_from, raw_to, interval, now=now)
+    return interval, raw_from, raw_to, from_ts, to_ts
+
+
 def bucketize(
     df: DataFrame,
     features,
@@ -194,6 +216,13 @@ def bucketize(
     Returns a DataFrame ``(group_by..., bucket_ts: long, <feature>...)``
     with one row per (key, bucket) including empty buckets.
     ``bucket_ts`` is the bucket's left edge in epoch seconds.
+
+    ``spine=False`` skips the empty-bucket spine join and returns only
+    the buckets that hold rows.  Count-family zero fill and constant
+    defaults still apply to those rows, but ``post`` steps
+    (derivative), forward fill (``default: previous``) and
+    ``transform: diff`` then run over present buckets only: the
+    "previous bucket" of each row is the previous PRESENT bucket.
     """
     features = parse_features(features)
     if not features:
@@ -203,20 +232,8 @@ def bucketize(
         raise errors.Invalid(f"duplicate feature names: {names}")
 
     group_by = list(group_by or [])
-    interval_s = timeutil.parse_timedelta(bucket_interval)
-    if interval_s != int(interval_s) or interval_s <= 0:
-        raise errors.Invalid("bucket_interval must be a positive whole number of seconds")
-    interval = int(interval_s)
-    # Data is filtered on the RAW half-open range; the bucket spine is
-    # the aligned cover of it, so edge buckets may be partial.  This
-    # matches the reference: WHERE time >= from AND time < to plus
-    # modulo-aligned GROUP BY time(interval)
-    # (tests/test_memdatasource.py:62-75 golden [2.5, None, 4.0]).
-    raw_from = timeutil.make_ts(from_date, now=now)
-    raw_to = timeutil.make_ts(to_date, now=now)
-    if raw_to < raw_from:
-        raise errors.Invalid(f"invalid date range: [{raw_from}, {raw_to})")
-    from_ts, to_ts = timeutil.align_range(raw_from, raw_to, interval, now=now)
+    interval, raw_from, raw_to, from_ts, to_ts = bucket_range(
+        from_date, to_date, bucket_interval, now=now)
 
     bucket = _bucket_expr(df, ts_col, interval, ts_unit)
     scoped = df.filter(_range_predicate(df, ts_col, raw_from, raw_to, ts_unit))

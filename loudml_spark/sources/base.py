@@ -15,11 +15,12 @@ sinks go through ``foreachBatch``.
 
 from __future__ import annotations
 
+import os
 from abc import ABC, abstractmethod
 
 from pyspark.sql import DataFrame, SparkSession
 
-from loudml_spark import errors
+from loudml_spark import errors, session_cache
 
 
 class Bucket(ABC):
@@ -68,14 +69,83 @@ class Bucket(ABC):
         )
 
 
+# Session confs that parquet schema inference reads when the relation
+# is built; a cached relation keeps the schema they produced.
+_PARQUET_SCHEMA_CONFS = (
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+def _spark_lists(name: str) -> bool:
+    """Whether Spark's file index lists a file or directory of this
+    name (InMemoryFileIndex.shouldFilterOutPathName): names starting
+    with ``_`` (other than partition dirs and summary files) or ``.``,
+    and ``._COPYING_`` files, are skipped."""
+    if name.startswith(("_common_metadata", "_metadata")):
+        return True
+    return not ((name.startswith("_") and "=" not in name)
+                or name.startswith(".") or name.endswith("._COPYING_"))
+
+
+def _visible_files(path):
+    """``(relative path, size, st_mtime_ns)`` of every file Spark lists
+    under a local parquet path, sorted; None when the path is not a
+    plain local path that exists (a URI, a glob, a missing path)."""
+    if (not isinstance(path, str) or ":" in path
+            or any(c in path for c in "*?[]{}")):
+        return None
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    if not os.path.isdir(path):
+        return None
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if _spark_lists(d)]
+        for name in names:
+            if _spark_lists(name):
+                full = os.path.join(root, name)
+                try:
+                    st = os.stat(full)
+                except FileNotFoundError:
+                    continue  # deleted mid-walk: Spark would not list it
+                files.append((os.path.relpath(full, path), st.st_size,
+                              st.st_mtime_ns))
+    return tuple(sorted(files))
+
+
 class ParquetBucket(Bucket):
     """Parquet directory/file bucket — the natural Spark store.
 
     ``options`` passes reader options straight through — e.g.
     ``{"mergeSchema": "true"}`` for schema-evolved datasets (files
-    written before a column existed read back as NULLs)."""
+    written before a column existed read back as NULLs).
+
+    ``read`` returns the lazy relation from the session cache, like
+    ``load_table``: ``spark.read.parquet`` lists the directory and runs
+    a footer-schema job on every call.  The cache tag holds the
+    bucket's settings, the parquet schema confs and the exact listing
+    of the files Spark reads (relative path, size, ``st_mtime_ns``), so
+    any append, overwrite, delete or out-of-band file change misses,
+    and listings a write supersedes age out of the LRU.  A URI, a glob
+    or a missing path is read uncached."""
 
     def read(self, spark):
+        path = self.settings["path"]
+        files = _visible_files(path)
+        if files is None:
+            return self._read(spark)
+        tag = ("parquet_bucket", os.path.abspath(path),
+               repr(sorted(self.settings.items())),
+               tuple(spark.conf.get(k, None) for k in _PARQUET_SCHEMA_CONFS),
+               files)
+        return session_cache.memo(spark, tag, lambda: self._read(spark))
+
+    def _read(self, spark):
         reader = spark.read.options(**self.settings.get("options", {}))
         if "schema" in self.settings:
             reader = reader.schema(self.settings["schema"])

@@ -20,3 +20,34 @@ def spark():
     )
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` → ``(fn(), number of Spark jobs fn started)``,
+    counted through a job group of its own.  The status tracker is fed
+    by the asynchronous listener bus, so the count is read until it
+    holds still."""
+    import itertools
+    import time
+
+    sc = spark.sparkContext
+    ids = itertools.count()
+
+    def count(fn):
+        group = f"count-jobs-{id(ids)}-{next(ids)}"
+        sc.setJobGroup(group, "counted")
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        n = -1
+        for _ in range(20):
+            seen = len(sc.statusTracker().getJobIdsForGroup(group))
+            if seen == n:
+                break
+            n = seen
+            time.sleep(0.05)
+        return out, n
+
+    return count

@@ -131,6 +131,146 @@ def test_max_series_per_request_guard(spark, simple_df, tmp_path):
                         "max_series_per_request": 0})
 
 
+PARITY_BASE = 1704067200
+
+
+@pytest.fixture(scope="module")
+def gapped_df(spark):
+    """A gapped, unaligned source with nulls, a tag, a long column and
+    the same instants as long seconds, long milliseconds, TIMESTAMP
+    and TIMESTAMP_NTZ.  Values are halves and one partition, so every
+    aggregate is exact and independent of the merge order."""
+    rows = [
+        (PARITY_BASE + i * 600 + (i * 37) % 600, (i * 7) % 1000,
+         "a" if i % 3 else "b",
+         None if i % 11 == 0 else float(i % 17) / 2, i % 5)
+        for i in range(300) if (i // 20) % 3 != 1
+    ]
+    df = spark.createDataFrame(
+        rows, "ts_s long, frac_ms long, host string, value double, n long")
+    return (
+        df.withColumn("ts_ms", F.col("ts_s") * 1000 + F.col("frac_ms"))
+        .withColumn("ts_t", F.expr("timestamp_millis(ts_ms)"))
+        .withColumn("ts_ntz", F.col("ts_t").cast("timestamp_ntz"))
+        .drop("frac_ms")
+        .coalesce(1)
+    )
+
+
+def _driver_spine_features():
+    """Every non-post metric plus a percentile, with ``default`` unset
+    and constant, tag filters and a scripted field."""
+    from loudml_spark.functions.metrics import METRICS
+
+    plain = [m for m, spec in METRICS.items() if spec.post is None]
+    feats = [{"metric": m, "field": "value", "name": f"{m}_v"}
+             for m in plain + ["90percentile"]]
+    feats += [{"metric": m, "field": "value", "name": f"{m}_d",
+               "default": 1.5} for m in plain + ["90percentile"]]
+    feats += [
+        {"metric": "max", "field": "n", "name": "max_n"},
+        {"metric": "min", "field": "n", "name": "min_n", "default": -1},
+        {"metric": "avg", "field": "value", "name": "avg_a",
+         "match_all": [{"tag": "host", "value": "a"}]},
+        {"metric": "count", "field": "value", "name": "count_b",
+         "match_all": [{"tag": "host", "value": "b"}]},
+        {"metric": "sum", "field": "value", "name": "sum_script",
+         "script": "value * 2 + n", "default": 0},
+    ]
+    return feats
+
+
+def _spark_spine_requests():
+    """One request per feature that reads the previous bucket, next to
+    a plain feature, so each one alone decides the path."""
+    from loudml_spark.functions.metrics import METRICS
+
+    post = [{"metric": m, "field": "value", "name": f"{m}_v"}
+            for m, spec in METRICS.items() if spec.post is not None]
+    return [[feat, {"metric": "max", "field": "value", "name": "max_v"}]
+            for feat in post + [
+                {"metric": "avg", "field": "value", "name": "avg_prev",
+                 "default": "previous"},
+                {"metric": "sum", "field": "value", "name": "sum_diff",
+                 "transform": "diff"},
+            ]]
+
+
+PARITY_RANGES = {
+    "aligned": (PARITY_BASE, PARITY_BASE + 40 * 3600),
+    "unaligned": (PARITY_BASE + 1234.5, PARITY_BASE + 30 * 3600 + 77),
+    "empty": (PARITY_BASE + 7200, PARITY_BASE + 7200),
+    "point": (PARITY_BASE + 100, PARITY_BASE + 100),
+    "no_data": (PARITY_BASE + 100 * 3600, PARITY_BASE + 110 * 3600),
+}
+
+
+def _assert_spine_parity(df, feats, ts_col, ts_unit):
+    """``read_bucket`` returns, byte for byte, what the Spark spine
+    join returns: ``bucketize(...)`` ordered and collected, on every
+    range shape."""
+    import json
+
+    from loudml_spark.api import _nan_to_none
+    from loudml_spark.features import parse_features
+    from loudml_spark.operators.bucketize import BUCKET_COL, bucketize
+
+    names = [f.name for f in parse_features(feats)]
+    for label, (lo, hi) in PARITY_RANGES.items():
+        got = read_bucket(df, lo, hi, "1h", feats,
+                          ts_col=ts_col, ts_unit=ts_unit)
+        rows = bucketize(df, feats, lo, hi, "1h", ts_col=ts_col,
+                         ts_unit=ts_unit).orderBy(BUCKET_COL).collect()
+        want = {
+            "timestamps": [r[BUCKET_COL] for r in rows],
+            "observed": {n: [_nan_to_none(r[n]) for r in rows]
+                         for n in names},
+        }
+        assert json.dumps(got, sort_keys=True) == json.dumps(
+            want, sort_keys=True), (ts_col, label, names[0])
+
+
+@pytest.mark.parametrize(
+    "feats", [_driver_spine_features()] + _spark_spine_requests(),
+    ids=lambda feats: feats[0]["name"] if len(feats) == 2
+    else "driver_spine")
+def test_read_bucket_matches_spark_spine(gapped_df, feats):
+    _assert_spine_parity(gapped_df, feats, "ts_s", "s")
+
+
+@pytest.mark.parametrize("ts_col,ts_unit", [
+    ("ts_ms", "ms"), ("ts_t", "s"), ("ts_ntz", "s")])
+def test_read_bucket_matches_spark_spine_time_types(
+        gapped_df, ts_col, ts_unit):
+    feats = [
+        {"metric": "avg", "field": "value", "name": "avg_v"},
+        {"metric": "count", "field": "value", "name": "count_v"},
+        {"metric": "max", "field": "n", "name": "max_n", "default": 2},
+    ]
+    _assert_spine_parity(gapped_df, feats, ts_col, ts_unit)
+
+
+def test_read_bucket_jobs(gapped_df, count_jobs):
+    """A read without previous-bucket features runs the aggregation
+    only (2 jobs under AQE: the scan stage and the result stage), and
+    a ``max_series`` refusal is arithmetic: it starts no job."""
+    from loudml_spark import errors
+
+    lo, hi = PARITY_RANGES["aligned"]
+    res, jobs = count_jobs(lambda: read_bucket(
+        gapped_df, lo, hi, "1h", "avg(value);count(value)",
+        ts_col="ts_s"))
+    assert len(res["timestamps"]) == 40
+    assert jobs <= 2
+
+    def refused():
+        with pytest.raises(errors.Invalid, match="max_series_per_request"):
+            read_bucket(gapped_df, lo, hi, "1h", "avg(value)",
+                        ts_col="ts_s", max_series=39)
+    _, jobs = count_jobs(refused)
+    assert jobs == 0
+
+
 def test_patch_mem_bucket_keeps_rows(spark):
     # PATCH rebuilds the bucket from merged settings; a MemBucket holds
     # its rows in-process, so the rebuilt instance must adopt them (the

@@ -306,3 +306,62 @@ def test_forecast_beats_naive_baseline(spark, trained):
     # and the seasonal-naive baseline is computable on the same frame
     sn = naive_forecast(df, interval=3600, horizon=48, season=24)
     assert sn.count() == 48
+
+
+def _join_reference(m, series_df):
+    """The prediction frame as a left join of the predictions back
+    onto ``series_df``: what ``transform`` returned before it reused
+    the collected rows."""
+    from loudml_spark.ml.donut_np import donut_predict_values
+    from loudml_spark.ml.models import BAND_SIGMA, collect_series
+
+    ts, vals = collect_series(series_df, m.ts_col, m.feature_col)
+    pred, sig = donut_predict_values(m.state, vals, span=m.span,
+                                     seed=m.seed)
+    pred_df = series_df.sparkSession.createDataFrame(
+        [(int(t), float(p), float(p - BAND_SIGMA * s),
+          float(p + BAND_SIGMA * s))
+         for t, p, s in zip(ts[m.span - 1:], pred, sig)],
+        f"{m.ts_col} long, predicted double, lower double, upper double")
+    return series_df.join(F.broadcast(pred_df), on=m.ts_col, how="left")
+
+
+def test_transform_equals_join_on_gapped_series(spark, trained):
+    """Nulls, missing buckets and an extra column come through as the
+    join returned them; the first span − 1 buckets have no band."""
+    m, _ = trained
+    rows = [
+        ("h" if i % 4 else None, BASE + i * 3600,
+         None if i % 7 == 3 else 10.0 + 5.0 * math.sin(2 * math.pi * i / 24))
+        for i in range(120) if i % 13 != 5
+    ]
+    series = spark.createDataFrame(
+        rows, "host string, bucket_ts long, value double")
+    got = m.transform(series)
+    want = _join_reference(m, series)
+    assert got.schema == want.schema
+    assert got.orderBy("bucket_ts").collect() == \
+        want.orderBy("bucket_ts").collect()
+    first = got.orderBy("bucket_ts").limit(m.span).collect()
+    assert all(r["predicted"] is None for r in first[:m.span - 1])
+    assert first[-1]["predicted"] is not None
+
+
+def test_predict_scans_the_source_once(spark, trained, tmp_path,
+                                       count_jobs):
+    """Scoring a series bucketized from parquet runs the source scan
+    once: no more jobs than collecting the series, plus one for the
+    driver-built result."""
+    from loudml_spark.operators.bucketize import bucketize
+
+    m, df = trained
+    path = str(tmp_path / "src")
+    df.withColumnRenamed("bucket_ts", "ts").write.parquet(path)
+    series = bucketize(spark.read.parquet(path), ["avg(value)"], BASE,
+                       BASE + 200 * 3600, "1h").withColumnRenamed(
+        "avg_value", "value")
+    _, series_jobs = count_jobs(
+        lambda: series.orderBy("bucket_ts").collect())
+    scored, jobs = count_jobs(lambda: m.predict(series).collect())
+    assert len(scored) == 200
+    assert jobs <= series_jobs + 1

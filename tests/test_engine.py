@@ -317,3 +317,147 @@ def test_concurrent_appends_to_one_parquet_bucket(engine, tmp_path):
             str(tmp_path / "sink")).count() == n_writers * n_rows
     finally:
         engine.delete_bucket("sink")
+
+
+def _points(spark, start, n, value=1.0):
+    return spark.createDataFrame(
+        [(BASE + (start + i) * 60, value) for i in range(n)],
+        "ts long, value double")
+
+
+def _total(engine, name):
+    res = engine.read(name, BASE, BASE + 86400, "1d", "count(value)",
+                      ts_col="ts")
+    return res["observed"]["count_value"][0]
+
+
+def test_parquet_read_memo_two_jobs(engine, tmp_path, count_jobs):
+    """A repeat read of an unchanged parquet bucket reuses its
+    relation: no listing, no footer-schema job, only the aggregation's
+    scan and result jobs."""
+    path = str(tmp_path / "memo")
+    _points(engine.spark, 0, 50).write.parquet(path)
+    engine.add_bucket({"name": "memo", "type": "parquet", "path": path})
+    try:
+        first = engine.read("memo", BASE, BASE + 7200, "10m",
+                            "avg(value);count(value)", ts_col="ts")
+        again, jobs = count_jobs(lambda: engine.read(
+            "memo", BASE + 600, BASE + 7800, "10m",
+            "avg(value);count(value)", ts_col="ts"))
+        assert jobs <= 2
+        assert first["observed"]["count_value"][1:] == \
+            again["observed"]["count_value"][:-1]
+        bucket = engine.buckets.get("memo")
+        assert bucket.read(engine.spark) is bucket.read(engine.spark)
+    finally:
+        engine.delete_bucket("memo")
+
+
+def test_parquet_read_memo_sees_every_change(engine, tmp_path):
+    """Engine.write, an overwrite, a parquet file copied in out of band
+    and a deleted file each change the listing, so the next read
+    misses the memo and sees the change."""
+    import glob
+    import os
+    import shutil
+
+    path = str(tmp_path / "changing")
+    _points(engine.spark, 0, 10).coalesce(1).write.parquet(path)
+    engine.add_bucket({"name": "ch", "type": "parquet", "path": path})
+    try:
+        assert _total(engine, "ch") == 10
+        engine.write("ch", _points(engine.spark, 10, 5).coalesce(1))
+        assert _total(engine, "ch") == 15
+        engine.write("ch", _points(engine.spark, 0, 7).coalesce(1),
+                     mode="overwrite")
+        assert _total(engine, "ch") == 7
+        (only,) = glob.glob(os.path.join(path, "*.parquet"))
+        shutil.copy(only, os.path.join(path, "part-copied.parquet"))
+        assert _total(engine, "ch") == 14
+        os.remove(only)
+        assert _total(engine, "ch") == 7
+    finally:
+        engine.delete_bucket("ch")
+
+
+def test_parquet_read_memo_never_older_than_a_returned_write(
+        engine, tmp_path):
+    """Readers racing one writer, more threads than local[4] cores and
+    a short switch interval: every read counts at least the rows of
+    each write that had returned before the read started."""
+    import sys
+    import threading
+
+    path = str(tmp_path / "raced")
+    _points(engine.spark, 0, 10).coalesce(1).write.parquet(path)
+    engine.add_bucket({"name": "raced", "type": "parquet", "path": path})
+    n_readers, n_writes, n_rows = 5, 4, 5
+    frames = [_points(engine.spark, 10 + w * n_rows, n_rows).coalesce(1)
+              for w in range(n_writes)]
+    barrier = threading.Barrier(n_readers + 1)
+    returned = []  # writes that have returned, appended after each
+    finished = threading.Event()
+    reads, stale, failures = [], [], []
+
+    def writer():
+        barrier.wait(timeout=60)
+        try:
+            for df in frames:
+                engine.write("raced", df)
+                returned.append(1)
+        except Exception as e:  # noqa: BLE001 - reported below
+            failures.append(e)
+        finally:
+            finished.set()
+
+    def reader():
+        barrier.wait(timeout=60)
+        try:
+            while not finished.is_set():
+                done = len(returned)
+                seen = _total(engine, "raced")
+                reads.append(seen)
+                if seen < 10 + done * n_rows:
+                    stale.append((done, seen))
+        except Exception as e:  # noqa: BLE001 - reported below
+            failures.append(e)
+
+    threads = [threading.Thread(target=writer)] + [
+        threading.Thread(target=reader) for _ in range(n_readers)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    try:
+        assert not any(t.is_alive() for t in threads)
+        assert failures == []
+        assert stale == []
+        assert len(reads) >= n_readers
+        assert _total(engine, "raced") == 10 + n_writes * n_rows
+    finally:
+        engine.delete_bucket("raced")
+
+
+def test_parquet_read_glob_path_not_memoized(engine, tmp_path):
+    from loudml_spark import session_cache
+
+    path = str(tmp_path / "globbed")
+    _points(engine.spark, 0, 10).write.parquet(path)
+    engine.add_bucket({"name": "gl", "type": "parquet",
+                       "path": path + "/*.parquet"})
+    try:
+        bucket = engine.buckets.get("gl")
+        before = session_cache.stats()
+        first, second = bucket.read(engine.spark), bucket.read(engine.spark)
+        after = session_cache.stats()
+        assert first is not second
+        assert (after["hits"], after["misses"]) == (
+            before["hits"], before["misses"])
+        assert _total(engine, "gl") == 10
+    finally:
+        engine.delete_bucket("gl")
