@@ -14,6 +14,14 @@ Maps the reference endpoints (SURVEY §2.11) onto engine calls:
   writes to one bucket take turns (df.write batches — no 1000-point
   buffer, loudml/bucket.py:110-146);
 * ``POST /buckets/<n>/_clear`` → Bucket.drop equivalents;
+* ``POST /models/<n>/_eval`` → :meth:`Engine.eval_model`: Spark runs
+  the one aggregation of the widened window (:func:`collect_buckets`);
+  the driver predicts, scores and detects that bounded series in numpy
+  and returns a local frame, so collecting the result starts no job
+  and a write-back is one job;
+* ``POST /models/<n>/_forecast`` → :meth:`Engine.forecast`: each
+  model builds its future buckets on the driver as a local frame, so
+  a forecast starts no Spark job;
 * ``_eval`` / ``_forecast`` result shaping → :func:`format_series` /
   :func:`format_buckets` (loudml/donut.py:331-412) including the
   ``lower_<f>`` / ``upper_<f>`` / ``@<f>`` column names of the
@@ -31,8 +39,10 @@ import math
 import threading
 from typing import Any, Mapping
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from loudml_spark import errors
 from loudml_spark.features import parse_features
@@ -60,16 +70,10 @@ def read_bucket(
     reshaped to the reference's response format.
 
     The response has one entry per bucket of ``range(from_ts, to_ts,
-    interval)``, the aligned cover of the request.  When no feature
-    depends on its previous bucket, the empty-bucket spine is laid on
-    the driver: Spark runs the one aggregation ``bucketize(...,
-    spine=False)`` (a scan stage and a result stage), and each bucket
-    the aggregate lacks gets the fill ``bucketize`` would have given
-    it: 0.0 for count-family metrics, the constant ``default`` when one
-    is set, None otherwise.  A feature with ``default: previous``,
-    ``transform: diff`` or a ``post`` metric (derivative, integral)
-    reads the previous bucket, so such a request keeps the Spark spine
-    join.  Both paths return identical responses.
+    interval)``, the aligned cover of the request, as
+    :func:`collect_buckets` fills it: one aggregation job, with the
+    empty-bucket spine laid on the driver unless a feature reads its
+    previous bucket.
 
     ``max_series`` is the reference's per-bucket
     ``max_series_per_request`` result guard (loudml/bucket.py:41-44,
@@ -88,6 +92,30 @@ def read_bucket(
             raise errors.Invalid(
                 f"result exceeds max_series_per_request ({max_series}); "
                 "narrow the range or raise the bucket's limit")
+    values, _ = collect_buckets(
+        df, feats, raw_from, raw_to, interval, timestamps,
+        ts_col=ts_col, ts_unit=ts_unit)
+    return {"timestamps": timestamps,
+            "observed": {name: [_nan_to_none(v) for v in col]
+                         for name, col in values.items()}}
+
+
+def collect_buckets(df: DataFrame, feats, raw_from, raw_to, interval: int,
+                    timestamps, *, ts_col: str = "ts", ts_unit: str = "s"):
+    """Run the one bucketize aggregation of ``feats`` over the raw
+    range and lay its rows on ``timestamps`` (the aligned spine) on the
+    driver.  Returns ``({feature name: [value per timestamp]},
+    {feature name: StructField})``; each field has the type and
+    nullability the feature has in ``bucketize``'s spine frame.
+
+    When no feature reads its previous bucket, Spark runs the aggregate
+    alone (``spine=False``: a scan stage and a result stage), and each
+    bucket it lacks gets the fill ``bucketize`` would have given it:
+    0.0 for count-family metrics, the constant ``default`` when one is
+    set, None otherwise.  A feature with ``default: previous``,
+    ``transform: diff`` or a ``post`` metric (derivative, integral)
+    reads the previous bucket, so such a request keeps the Spark spine
+    join.  Both paths give identical values."""
     # The driver-side spine saves the spine's broadcast and the
     # Range + TakeOrderedAndProject stage: 2 Spark jobs a read instead
     # of 4.  Measured alternatives (4-core VM, serve read shapes, one
@@ -104,14 +132,16 @@ def read_bucket(
         ts_col=ts_col, ts_unit=ts_unit, spine=spine,
     )
     by_ts = {r[BUCKET_COL]: r for r in out.collect()}
-    observed = {}
+    values, fields = {}, {}
     for f in feats:
         missing = _empty_bucket_value(f)
-        observed[f.name] = [
-            _nan_to_none(by_ts[t][f.name] if t in by_ts else missing)
-            for t in timestamps
-        ]
-    return {"timestamps": timestamps, "observed": observed}
+        values[f.name] = [by_ts[t][f.name] if t in by_ts else missing
+                          for t in timestamps]
+        field = out.schema[f.name]
+        fields[f.name] = T.StructField(
+            f.name, field.dataType,
+            field.nullable or (not spine and missing is None))
+    return values, fields
 
 
 def _reads_previous_bucket(feat) -> bool:
@@ -135,6 +165,68 @@ def _nan_to_none(v):
     if isinstance(v, float) and math.isnan(v):
         return None
     return v
+
+
+def _scored_frame(spark: SparkSession, model, timestamps, observed,
+                  field, from_ts: int, flag_abnormal: bool) -> DataFrame:
+    """``model.predict`` → keep ``ts >= from_ts`` → ``detect_anomalies``
+    on one series held on the driver, as a local frame with the same
+    schema, column order and values.  ``observed`` holds the bucket
+    values of the widened range (None for null), ``field`` their Spark
+    type.  With ``flag_abnormal``, every NaN in a double column becomes
+    null, as the Arrow round trip of ``applyInPandas`` makes it."""
+    import pandas as pd
+
+    from loudml_spark.ml.detect import _STATE_COLS, _sweep
+    from loudml_spark.ml.models import local_frame
+    from loudml_spark.ml.scoring import score_values
+
+    ts = np.asarray(timestamps, dtype=np.int64)
+    obs = np.ma.array([np.nan if v is None else float(v) for v in observed],
+                      mask=[v is None for v in observed])
+    predicted, lower, upper = model.predict_values(ts, obs)
+    score = score_values(obs, predicted, lower, upper, model.anomaly_type)
+    ob, pr = obs.filled(np.nan), predicted.filled(np.nan)
+    mse = np.ma.array((ob - pr) ** 2, mask=np.ma.getmaskarray(obs)
+                      | np.ma.getmaskarray(predicted))
+    keep = ts >= from_ts
+    band_nullable = model.band_nullable()
+    fields = [
+        T.StructField(model.ts_col, T.LongType(), False),
+        T.StructField("observed", field.dataType, field.nullable),
+        *(T.StructField(c, T.DoubleType(), band_nullable)
+          for c in ("predicted", "lower", "upper")),
+        T.StructField("score", T.DoubleType(), False),
+        T.StructField("mse", T.DoubleType(),
+                      field.nullable or band_nullable),
+    ]
+    columns = [ts[keep], [v for v, k in zip(observed, keep) if k]] + [
+        c[keep] for c in (predicted, lower, upper, score, mse)]
+    if flag_abnormal:
+        swept = _sweep(
+            pd.DataFrame({"ts": ts[keep], "score": score[keep],
+                          "observed": ob[keep], "predicted": pr[keep]}),
+            "ts", "score", "observed", "predicted", model.min_threshold,
+            model.max_threshold, model.grace_period)
+        fields += [T.StructField(n, t, True) for n, t in _STATE_COLS]
+        columns += [swept[n].tolist() for n, _ in _STATE_COLS]
+        for i, f in enumerate(fields):
+            if isinstance(f.dataType, (T.DoubleType, T.FloatType)):
+                columns[i], has_null = _nan_to_null(columns[i])
+                if has_null and not f.nullable:
+                    # a NaN band (a NaN in the training series) is null
+                    # now; the Arrow round trip failed on it instead
+                    fields[i] = T.StructField(f.name, f.dataType, True)
+    return local_frame(spark, T.StructType(fields), columns)
+
+
+def _nan_to_null(values):
+    """(``values`` with every NaN made null, whether any is null)."""
+    if isinstance(values, np.ma.MaskedArray):
+        out = np.ma.masked_invalid(values.filled(np.nan))
+        return out, bool(np.ma.getmaskarray(out).any())
+    out = [None if v is None or v != v else v for v in values]
+    return out, None in out
 
 
 def prediction_frame(scored: DataFrame, feature: str,
@@ -281,10 +373,12 @@ def forecast_model(
 ) -> DataFrame:
     """The `_forecast` endpoint: future buckets from a trained model.
 
-    Profile-based models forecast vectorized (spine × broadcast
-    profile); roll-forward estimators (Donut VAE, AR) iterate on the
-    driver (loudml/donut.py:1333-1475) — the series length is bounded
-    by horizon/interval, never data volume.
+    Every model builds its future buckets on the driver as a local
+    frame: profile models look them up (``predict_values``),
+    roll-forward estimators (Donut VAE, AR) iterate
+    (loudml/donut.py:1333-1475) — the series length is bounded by
+    horizon/interval, never data volume — so a forecast starts no
+    Spark job.
 
     ``percent_interval`` controls the confidence band: models with
     native support (DonutModel) receive it directly; for fixed ±3σ
@@ -343,16 +437,17 @@ def fake_prediction_frame(spark: SparkSession, model,
     import sys
     import time as _time
 
+    from loudml_spark.ml.models import local_frame
+
     now_ts = int(now if now is not None else _time.time())
     iv = model.bucket_interval
-    rows = [
-        (now_ts - 2 * iv, 0.0, 0.0, -1.0, 1.0),
-        (now_ts - iv, sys.float_info.max, 0.0, -1.0, 1.0),
-        (now_ts, 0.0, 0.0, -1.0, 1.0),
-    ]
-    return spark.createDataFrame(
-        rows, f"{model.ts_col} long, observed double, predicted double, "
-        "lower double, upper double",
+    return local_frame(
+        spark,
+        T.StructType([T.StructField(model.ts_col, T.LongType())] + [
+            T.StructField(c, T.DoubleType())
+            for c in ("observed", "predicted", "lower", "upper")]),
+        [[now_ts - 2 * iv, now_ts - iv, now_ts],
+         [0.0, sys.float_info.max, 0.0], [0.0] * 3, [-1.0] * 3, [1.0] * 3],
     )
 
 
@@ -626,34 +721,39 @@ class Engine:
     def eval_model(self, model_name: str, bucket_name: str, from_date,
                    to_date, feature_expr: str, *, bg: bool = False,
                    output_bucket: str | None = None,
-                   flag_abnormal: bool = False, **kw):
+                   flag_abnormal: bool = False, ts_col: str = "ts",
+                   ts_unit: str = "s", now: float | None = None):
         """POST /models/<n>/_eval (server.py:1583-1602): score a range
         with automatic history widening; ``flag_abnormal`` runs the
         hysteresis state machine (the endpoint's flag_abnormal_data
         arg) adding is_anomaly / episode columns; optionally save the
-        prediction frame to an output bucket."""
+        prediction frame to an output bucket.
+
+        The window is one bounded series, so Spark runs only its
+        aggregation (:func:`collect_buckets`, over the range widened by
+        ``history_buckets()``); prediction, scoring and detection run
+        on the driver (:func:`_scored_frame`), and the result is a
+        local frame: collecting it starts no job, and a write-back is
+        one job.  The values equal the Spark composition
+        ``bucket_series(widen=True)`` → ``predict`` → filter →
+        ``detect_anomalies``, which ``_top`` and ``predict_range`` keep
+        for keyed series."""
         model = self.get_model(model_name)
 
         def run():
-            series, from_ts, to_ts = model.bucket_series(
-                self.buckets.get(bucket_name).read(self.spark),
-                from_date, to_date, feature_expr, widen=True, **kw)
-            scored = model.predict(series).filter(
-                F.col(model.ts_col) >= F.lit(from_ts))
+            interval = model.bucket_interval
+            lo, from_ts, to_ts = model.series_range(
+                from_date, to_date, widen=True, now=now)
+            feat = parse_features([feature_expr])[0]
+            timestamps = list(range(lo, to_ts, interval))
+            values, fields = collect_buckets(
+                self.buckets.get(bucket_name).read(self.spark), [feat],
+                lo, to_ts, interval, timestamps,
+                ts_col=ts_col, ts_unit=ts_unit)
+            scored = _scored_frame(
+                self.spark, model, timestamps, values[feat.name],
+                fields[feat.name], from_ts, flag_abnormal)
             hooks = self.hooks.get(model_name) if flag_abnormal else None
-            if flag_abnormal:
-                from loudml_spark.ml.detect import detect_anomalies
-
-                scored = detect_anomalies(
-                    scored, model.min_threshold, model.max_threshold,
-                    model.grace_period, ts_col=model.ts_col,
-                )
-            if hooks or output_bucket is not None:
-                # the frame is consumed more than once (hook collect /
-                # sink write / the caller's own action) and is bounded
-                # by range/interval rows — cache instead of recomputing
-                # the widened predict lineage per consumer
-                scored = scored.cache()
             if hooks:
                 # fire on_anomaly_start/end per episode — the
                 # reference's hook loop inside detect
@@ -665,24 +765,12 @@ class Engine:
                 fire_hooks(
                     anomaly_windows(scored, ts_col=model.ts_col),
                     hooks, model=model_name,
-                    series_end_ts=to_ts - model.bucket_interval,
+                    series_end_ts=to_ts - interval,
                 )
             if output_bucket is not None:
                 self.write(output_bucket, prediction_frame(
                     scored, model.feature_col, model_name,
                     ts_col=model.ts_col))
-            if hooks or output_bucket is not None:
-                # the RETURNED frame is a consumer too: hand the
-                # caller a lineage-truncated materialized copy (the
-                # frame is bounded by range/interval rows), THEN
-                # release the cache — the caller's later actions
-                # never recompute the widened-predict lineage, and a
-                # periodic-eval loop doesn't pin every eval's
-                # partitions until LRU (checkpoint blocks are freed
-                # by the ContextCleaner once the frame is unreferenced)
-                result = scored.localCheckpoint(eager=True)
-                scored.unpersist()
-                return result
             return scored
 
         if bg:

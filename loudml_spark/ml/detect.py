@@ -15,7 +15,9 @@ Arrow-batched ``applyInPandas`` over each series key: thousands of
 independent series run in parallel across executors, each series'
 bucket list (bounded by time-range/interval, not data volume) scans
 in one pass.  This is the keyed fan-out the reference cannot do at
-all (single-series models, donut.py:543-545).
+all (single-series models, donut.py:543-545).  An ``_eval`` holds one
+series already collected on the driver, so ``Engine.eval_model`` calls
+:func:`_sweep` there directly.
 """
 
 from __future__ import annotations

@@ -6,8 +6,19 @@ series, predict ``(bucket_ts, observed, predicted, lower, upper)``,
 score + detect — while making the estimator pluggable
 (loudml/model.py:445-468 entry-point registry → a plain dict here).
 
-Baselines implemented Spark-first (train = one aggregation job,
-predict = broadcast join — both scale to any number of series):
+Each model predicts on two paths:
+
+* ``transform`` (under ``predict``) — Spark columns (broadcast
+  profile join, literal weights): the keyed, scalable path of
+  ``_top`` and ``predict_range``;
+* ``predict_values`` — numpy over one bounded series on the driver:
+  ``Engine.eval_model`` collects the aggregated window and predicts,
+  scores and detects it without another Spark job, and ``forecast``
+  builds its future buckets the same way.  The two paths agree to
+  rounding.  Frames built on the driver come from
+  :func:`local_frame`.
+
+Baselines (train = one aggregation job):
 
 * ``GaussianModel`` — global μ/σ of the feature; band μ±3σ.
 * ``SeasonalNaiveModel`` — μ/σ per seasonality slot (hour-of-day,
@@ -59,6 +70,43 @@ def _slot_cols(seasonality: dict, ts_col: str):
     return cols
 
 
+def _slot_values(seasonality: dict, ts):
+    """:func:`_slot_cols` on an epoch-seconds array.  Spark's ``div``
+    and ``%`` truncate toward zero, so a bucket before 1970 gets a
+    negative slot here too (and, matching no profile slot, the global
+    fallback)."""
+    import numpy as np
+
+    ts = np.asarray(ts, dtype=np.int64)
+
+    def div(a, b):
+        return np.sign(a) * (np.abs(a) // b)
+
+    slots = {}
+    if seasonality.get("daytime", True):
+        slots["__hod"] = np.fmod(div(ts, 3600), 24)
+    if seasonality.get("weekday", False):
+        slots["__wd"] = np.fmod(div(ts, 86400) + 3, 7) + 1
+    return slots
+
+
+def local_frame(spark: SparkSession, schema: T.StructType,
+                columns) -> DataFrame:
+    """A frame over columns held on the driver, one sequence per field
+    of ``schema``.  A ``None`` entry or a masked ``numpy.ma`` entry is
+    null; a NaN value stays NaN.  The frame is built from a
+    ``pyarrow.Table``, so Spark plans it as a ``LocalRelation``:
+    collecting it starts no job, where ``createDataFrame(list)`` runs
+    an RDD job with a Python worker on every action."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema))
+
+
 def collect_series(series_df: DataFrame, ts_col: str, value_col: str):
     """Collect an aggregated series in time order → (ts int64 array,
     values float array with NaN for missing)."""
@@ -72,7 +120,8 @@ def collect_series(series_df: DataFrame, ts_col: str, value_col: str):
 
 class BaseModel:
     """Contract: fit(series_df) → self; transform(series_df) → frame
-    with predicted/lower/upper; forecast(spark, from_ts, to_ts)."""
+    with predicted/lower/upper; predict_values(ts, vals) → the same
+    three as numpy arrays; forecast(spark, from_ts, to_ts)."""
 
     TYPE = "base"
 
@@ -132,6 +181,22 @@ class BaseModel:
             return 0  # span="auto" unresolved → predict will raise
         return max(0, span - 1)
 
+    def series_range(self, from_date, to_date, *, widen: bool = False,
+                     now: float | None = None):
+        """``(scan_from, from_ts, to_ts)``: ``[from, to)`` aligned
+        outward to the model's interval, and the scan start, widened by
+        ``history_buckets()`` intervals when ``widen``."""
+        from loudml_spark import timeutil
+
+        interval = self.bucket_interval
+        from_ts, to_ts = timeutil.align_range(
+            timeutil.make_ts(from_date, now=now),
+            timeutil.make_ts(to_date, now=now),
+            interval,
+        )
+        lo = from_ts - (self.history_buckets() * interval if widen else 0)
+        return lo, from_ts, to_ts
+
     def bucket_series(
         self,
         source_df: DataFrame,
@@ -152,20 +217,15 @@ class BaseModel:
         callers).  ``bucketize_kw`` passes through (ts_col, ts_unit,
         group_by).  Returns (series, from_ts, to_ts) — the aligned,
         unwidened range."""
-        from loudml_spark import timeutil
         from loudml_spark.features import parse_features
         from loudml_spark.operators.bucketize import BUCKET_COL, bucketize
 
-        interval = self.bucket_interval
-        from_ts, to_ts = timeutil.align_range(
-            timeutil.make_ts(from_date, now=now),
-            timeutil.make_ts(to_date, now=now),
-            interval,
-        )
-        lo = from_ts - (self.history_buckets() * interval if widen else 0)
+        lo, from_ts, to_ts = self.series_range(
+            from_date, to_date, widen=widen, now=now)
         feat = parse_features([feature_expr])[0]
         series = bucketize(
-            source_df, [feature_expr], lo, to_ts, interval, **bucketize_kw,
+            source_df, [feature_expr], lo, to_ts, self.bucket_interval,
+            **bucketize_kw,
         ).withColumnRenamed(feat.name, self.feature_col)
         if BUCKET_COL != self.ts_col:
             series = series.withColumnRenamed(BUCKET_COL, self.ts_col)
@@ -201,6 +261,40 @@ class BaseModel:
     def transform(self, series_df: DataFrame) -> DataFrame:
         raise NotImplementedError
 
+    def predict_values(self, ts, vals):
+        """(predicted, lower, upper) as ``numpy.ma`` float arrays for
+        one series in time order: ``ts`` the epoch-seconds bucket
+        edges, ``vals`` the observed values as a ``numpy.ma`` float
+        array, masked where null.  A masked output entry is a bucket
+        without a prediction, null on the Spark path."""
+        raise NotImplementedError
+
+    def band_nullable(self) -> bool:
+        """Whether some bucket can get no prediction (a window model's
+        first buckets): the nullability :meth:`transform` gives the
+        predicted/lower/upper columns."""
+        return True
+
+    def band_frame(self, spark: SparkSession, ts, predicted, lower,
+                   upper) -> DataFrame:
+        """``(ts_col, predicted, lower, upper)`` as a local frame."""
+        schema = T.StructType(
+            [T.StructField(self.ts_col, T.LongType(), False)]
+            + [T.StructField(c, T.DoubleType(), self.band_nullable())
+               for c in ("predicted", "lower", "upper")])
+        return local_frame(spark, schema, [ts, predicted, lower, upper])
+
+    def forecast(self, spark: SparkSession, from_ts: int, to_ts: int):
+        """Future buckets ``range(from_ts, to_ts, interval)`` from the
+        trained state alone (the profile models; roll-forward models
+        override)."""
+        import numpy as np
+
+        self._require_trained()
+        ts = np.arange(from_ts, to_ts, self.bucket_interval, dtype=np.int64)
+        return self.band_frame(
+            spark, ts, *self.predict_values(ts, np.ma.masked_all(len(ts))))
+
 
 class GaussianModel(BaseModel):
     """Global-gaussian baseline: predicted = μ, band = μ ± 3σ."""
@@ -217,6 +311,9 @@ class GaussianModel(BaseModel):
         self.state = {"mean": row["mean"], "std": std if std > 0 else 1.0}
         return self
 
+    def band_nullable(self):
+        return False
+
     def transform(self, series_df):
         self._require_trained()
         mu, sigma = self.state["mean"], self.state["std"]
@@ -226,22 +323,24 @@ class GaussianModel(BaseModel):
             .withColumn("upper", F.lit(mu + BAND_SIGMA * sigma))
         )
 
-    def forecast(self, spark: SparkSession, from_ts: int, to_ts: int):
+    def predict_values(self, ts, vals):
+        import numpy as np
+
         self._require_trained()
-        spine = spark.range(from_ts, to_ts, self.bucket_interval).select(
-            F.col("id").alias(self.ts_col)
-        )
-        return self.transform(
-            spine.withColumn(self.feature_col, F.lit(None).cast("double"))
-        ).drop(self.feature_col)
+        mu, sigma = self.state["mean"], self.state["std"]
+        # a NaN μ (NaN in the training series) stays NaN, as F.lit does
+        return tuple(np.ma.array(np.full(len(ts), v, dtype=float))
+                     for v in (mu, mu - BAND_SIGMA * sigma,
+                               mu + BAND_SIGMA * sigma))
 
 
 class SeasonalNaiveModel(BaseModel):
     """Per-slot gaussian profile (hour-of-day × optional weekday).
 
-    Train: one groupBy over the training series.  Predict/forecast:
-    broadcast-join the (≤168-row) profile onto the target spine —
-    no shuffle of the big side at any scale.
+    Train: one groupBy over the training series.  ``transform``
+    broadcast-joins the (≤168-row) profile onto the target spine —
+    no shuffle of the big side at any scale; ``predict_values`` (eval
+    and forecast) looks each bucket's slot up on the driver.
     """
 
     TYPE = "seasonal_naive"
@@ -254,6 +353,11 @@ class SeasonalNaiveModel(BaseModel):
         s = super().settings()
         s["seasonality"] = self.seasonality
         return s
+
+    def band_nullable(self):
+        # coalesce(slot mean, global mean) is null only without a
+        # global mean (a model trained on a dataless range)
+        return self.state["global_mean"] is None
 
     def _with_slots(self, df):
         out = df
@@ -300,11 +404,15 @@ class SeasonalNaiveModel(BaseModel):
                 "__mean", F.lit(p["mean"])
             ).withColumn("__std", F.lit(p["std"]))
         else:
-            prof = spark.createDataFrame(
-                [tuple(p[k] for k in keys) + (p["mean"], p["std"])
-                 for p in self.state["profile"]],
-                ", ".join([f"{k} int" for k in keys])
-                + ", __mean double, __std double",
+            profile = self.state["profile"]
+            prof = local_frame(
+                spark,
+                T.StructType(
+                    [T.StructField(k, T.IntegerType()) for k in keys]
+                    + [T.StructField(c, T.DoubleType())
+                       for c in ("__mean", "__std")]),
+                [[p[k] for p in profile] for k in keys]
+                + [[p[c] for p in profile] for c in ("mean", "std")],
             )
             slotted = self._with_slots(series_df)
             joined = slotted.join(F.broadcast(prof), on=keys, how="left")
@@ -317,14 +425,31 @@ class SeasonalNaiveModel(BaseModel):
             .drop("__mean", "__std", *keys)
         )
 
-    def forecast(self, spark, from_ts: int, to_ts: int):
+    def predict_values(self, ts, vals):
+        """The profile lookup of :meth:`transform`: the bucket's slot
+        mean and std, each falling back to the global one when the
+        slot has none."""
+        import numpy as np
+
         self._require_trained()
-        spine = spark.range(from_ts, to_ts, self.bucket_interval).select(
-            F.col("id").alias(self.ts_col)
-        )
-        return self.transform(
-            spine.withColumn(self.feature_col, F.lit(None).cast("double"))
-        ).drop(self.feature_col)
+        st = self.state
+        keys = st["slot_keys"]
+        profile = {tuple(p[k] for k in keys): p for p in st["profile"]}
+        slots = _slot_values(self.seasonality, ts)
+        found = [profile.get(tuple(int(slots[k][i]) for k in keys), {})
+                 for i in range(len(ts))]
+
+        def coalesce(name, fallback):
+            # null only where slot and fallback are both None; a NaN
+            # mean stays NaN, as Spark's coalesce keeps it
+            vals = [fallback if p.get(name) is None else p[name]
+                    for p in found]
+            return np.ma.array([np.nan if v is None else v for v in vals],
+                               mask=[v is None for v in vals], dtype=float)
+
+        mu = coalesce("mean", st["global_mean"])
+        sigma = coalesce("std", st["global_std"])
+        return mu, mu - BAND_SIGMA * sigma, mu + BAND_SIGMA * sigma
 
 
 class DonutModel(BaseModel):
@@ -398,6 +523,25 @@ class DonutModel(BaseModel):
         )
         return self
 
+    def predict_values(self, ts, vals):
+        """Each bucket from its span-window, the bucket itself masked;
+        the first ``span − 1`` buckets have no full window and no
+        prediction."""
+        import numpy as np
+
+        from loudml_spark.ml.donut_np import donut_predict_values
+
+        self._require_trained()
+        # a NaN value counts as missing, as on the Spark path
+        pred, sig = donut_predict_values(
+            self.state, np.ma.filled(vals, np.nan).astype(float),
+            span=self.span, seed=self.seed)
+        mask = np.arange(len(vals)) < len(vals) - len(pred)
+        return tuple(
+            np.ma.array(np.concatenate([np.full(mask.sum(), np.nan), a]),
+                        mask=mask)
+            for a in (pred, pred - BAND_SIGMA * sig, pred + BAND_SIGMA * sig))
+
     def transform(self, series_df):
         """``series_df`` plus ``predicted``/``lower``/``upper``, null
         for the first ``span − 1`` buckets.  The output is built from
@@ -406,28 +550,20 @@ class DonutModel(BaseModel):
         ``series_df``, which would scan the source a second time."""
         import numpy as np
 
-        from loudml_spark.ml.donut_np import donut_predict_values
-
         self._require_trained()
         rows = series_df.orderBy(self.ts_col).collect()
-        vals = np.array([np.nan if r[self.feature_col] is None
-                         else float(r[self.feature_col]) for r in rows])
-        pred, sig = donut_predict_values(
-            self.state, vals, span=self.span, seed=self.seed)
-        band = [None] * (len(rows) - len(pred)) + [
-            (float(p), float(p - BAND_SIGMA * s), float(p + BAND_SIGMA * s))
-            for p, s in zip(pred, sig)]
+        vals = np.ma.masked_invalid([np.nan if r[self.feature_col] is None
+                                     else float(r[self.feature_col])
+                                     for r in rows])
+        band = self.predict_values(None, vals)
         fields = [series_df.schema[self.ts_col]] + [
             f for f in series_df.schema.fields if f.name != self.ts_col]
         schema = T.StructType(fields + [
             T.StructField(c, T.DoubleType())
             for c in ("predicted", "lower", "upper")])
-        names = [f.name for f in fields]
-        return series_df.sparkSession.createDataFrame(
-            [tuple(r[n] for n in names) + (b or (None, None, None))
-             for r, b in zip(rows, band)],
-            schema,
-        )
+        return local_frame(
+            series_df.sparkSession, schema,
+            [[r[f.name] for r in rows] for f in fields] + list(band))
 
     def forecast(self, spark, from_ts: int, to_ts: int, *,
                  percent_interval: float = 0.68,
@@ -447,6 +583,8 @@ class DonutModel(BaseModel):
         Driver loop bounded by horizon/interval, never data volume.
         Returns (bucket_ts, predicted, lower, upper).
         """
+        import numpy as np
+
         from loudml_spark.ml.donut_np import donut_forecast_values
 
         self._require_trained()
@@ -460,15 +598,8 @@ class DonutModel(BaseModel):
             percent_noise=percent_noise,
             bucket_interval=self.bucket_interval, history=history,
         )
-        rows = [
-            (int(from_ts + j * self.bucket_interval), float(pred[j]),
-             float(pred[j] - half[j]), float(pred[j] + half[j]))
-            for j in range(steps)
-        ]
-        return spark.createDataFrame(
-            rows, f"{self.ts_col} long, predicted double, lower double, "
-            "upper double",
-        )
+        ts = from_ts + np.arange(steps, dtype=np.int64) * self.bucket_interval
+        return self.band_frame(spark, ts, pred, pred - half, pred + half)
 
 
 def auto_hyperparams(

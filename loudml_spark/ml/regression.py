@@ -26,9 +26,15 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from loudml_spark import errors
-from loudml_spark.ml.models import BAND_SIGMA, BaseModel, collect_series
+from loudml_spark.ml.models import (
+    BAND_SIGMA,
+    BaseModel,
+    collect_series,
+    local_frame,
+)
 
 
 def _solve_spd(A: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -164,6 +170,20 @@ class WindowRegressionModel(BaseModel):
             .drop("__win")
         )
 
+    def predict_values(self, ts, vals):
+        """:meth:`transform` on the driver (:func:`_ar_predict`; a NaN
+        is a value, as for Spark's ``last(ignorenulls)``).  The window
+        sum is pairwise here and left to right in Spark, so the two
+        may differ in the last bits."""
+        self._require_trained()
+        st = self.state
+        pred, has = _ar_predict(
+            np.ma.getdata(vals), np.ma.getmaskarray(vals), st["weights"],
+            st["mean"], st["std"], self.span)
+        pred = np.ma.array(pred, mask=~has)
+        half = BAND_SIGMA * st["sigma"]
+        return pred, pred - half, pred + half
+
     def forecast(self, spark, from_ts: int, to_ts: int,
                  history: list[float] | None = None):
         """Sequential roll-forward from the last observed window.
@@ -178,19 +198,13 @@ class WindowRegressionModel(BaseModel):
         mu, sd = self.state["mean"], self.state["std"]
         sigma = self.state["sigma"]
         window = list(history[-self.span:])
-        out = []
-        ts = from_ts
-        while ts < to_ts:
-            nxt = _predict_window(np.array(window), w, mu, sd)
-            out.append((ts, nxt, nxt - BAND_SIGMA * sigma,
-                        nxt + BAND_SIGMA * sigma))
-            window = window[1:] + [nxt]
-            ts += self.bucket_interval
-        return spark.createDataFrame(
-            out, f"{self.ts_col} long, predicted double, "
-            "lower double, upper double"
-        )
-
+        ts = np.arange(from_ts, to_ts, self.bucket_interval, dtype=np.int64)
+        pred = np.empty(len(ts))
+        for j in range(len(ts)):
+            pred[j] = _predict_window(np.array(window), w, mu, sd)
+            window = window[1:] + [pred[j]]
+        return self.band_frame(spark, ts, pred, pred - BAND_SIGMA * sigma,
+                               pred + BAND_SIGMA * sigma)
 
     def impute(self, series_df: DataFrame) -> DataFrame:
         """Fill missing buckets with model predictions (the reference's
@@ -216,12 +230,12 @@ class WindowRegressionModel(BaseModel):
                 pred = mu
             filled.append(pred)
             imputed_flags.append(True)
-        spark = series_df.sparkSession
-        return spark.createDataFrame(
-            [(r[self.ts_col], filled[i], imputed_flags[i])
-             for i, r in enumerate(rows)],
-            f"{self.ts_col} long, {self.feature_col} double, imputed boolean",
-        )
+        return local_frame(
+            series_df.sparkSession,
+            T.StructType([T.StructField(self.ts_col, T.LongType()),
+                          T.StructField(self.feature_col, T.DoubleType()),
+                          T.StructField("imputed", T.BooleanType())]),
+            [[r[self.ts_col] for r in rows], filled, imputed_flags])
 
 
 from loudml_spark.ml.models import MODEL_TYPES  # noqa: E402
@@ -276,24 +290,33 @@ def auto_span(
     return results[0][0]
 
 
+def _ar_predict(values, null, w, mu: float, sd: float, span: int):
+    """(predictions, has_window): forward-fill over the ``null``
+    entries, then predict each bucket from the ``span`` filled values
+    strictly before it once all of them exist (nulls before the first
+    observation are absent, like ``collect_list``)."""
+    n = len(values)
+    last = np.maximum.accumulate(np.where(null, -1, np.arange(n)))
+    filled = np.asarray(values, dtype=float)[last]
+    wt = np.asarray(w, dtype=float)
+    pred, has = np.full(n, np.nan), np.zeros(n, dtype=bool)
+    for i in range(span, n):
+        if last[i - span] >= 0:
+            pred[i] = _predict_window(filled[i - span:i], wt, mu, sd)
+            has[i] = True
+    return pred, has
+
+
 def ar_predict_values(
     values: np.ndarray, w, mu: float, sd: float, span: int
 ) -> np.ndarray:
-    """Pure-numpy mirror of :func:`predict_many`'s per-row scoring —
-    forward-fill, assemble the ``span`` strictly-previous values
-    (nulls before the first observation are absent, like
-    ``collect_list``), dot with the weights.  Float op order matches
-    the Spark path exactly, so an external oracle recomputing
+    """Pure-numpy mirror of :func:`predict_many`'s per-row scoring, NaN
+    for missing in and out (:func:`_ar_predict`).  Float op order
+    matches the Spark path exactly, so an external oracle recomputing
     predictions from the same series reproduces them bit-for-bit
     (tests/test_regression.py pins the equivalence)."""
-    wt = np.asarray(w, dtype=float)
-    filled = pd.Series(values).ffill().to_numpy(dtype=float)
-    out = np.full(len(filled), np.nan)
-    for i in range(len(filled)):
-        win = [x for x in filled[max(0, i - span):i] if not np.isnan(x)]
-        if len(win) == len(wt) - 1:
-            out[i] = _predict_window(win, wt, mu, sd)
-    return out
+    values = np.asarray(values, dtype=float)
+    return _ar_predict(values, np.isnan(values), w, mu, sd, span)[0]
 
 
 def fit_many(

@@ -1,4 +1,11 @@
-"""Anomaly scoring — pure Spark column math (JVM-side, codegen'd).
+"""Anomaly scoring, on two paths with one set of constants.
+
+* :func:`score_col` is Spark column math (JVM-side, codegen'd): the
+  keyed, scalable path that ``_top``, ``predict_range``, the fleets
+  and the catalog use.
+* :func:`score_values` is its numpy mirror, for the one bounded series
+  of an ``_eval``, scored on the driver.  It gives the same results,
+  nulls and NaN included.
 
 Semantics match the reference's compute_bucket_scores
 (/root/reference/loudml/donut.py:899-924):
@@ -13,13 +20,14 @@ Semantics match the reference's compute_bucket_scores
 
 Φ is the standard normal CDF.  Spark has no erf builtin and scipy is
 not a dependency, so Φ uses the Abramowitz-Stegun 7.1.26 polynomial
-(max abs error 1.5e-7 — invisible at score resolution) expressed as
-Column arithmetic: the whole scoring pipeline stays inside
-whole-stage codegen, no Python boundary.
+(max abs error 1.5e-7 — invisible at score resolution), expressed as
+Column arithmetic on the Spark path, so that path stays inside
+whole-stage codegen with no Python boundary.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -126,6 +134,68 @@ def score_col(
     return F.lit(100.0) * F.greatest(
         F.lit(0.0), F.least(F.lit(1.0), directional)
     )
+
+
+def _erf_values(x: np.ndarray) -> np.ndarray:
+    """:func:`erf_col` on a float array, term for term."""
+    sign = np.where(x < 0, -1.0, 1.0)
+    ax = np.abs(x)
+    t = 1.0 / (1.0 + _P * ax)
+    poly = (_A1 * t + _A2 * t * t + _A3 * t * t * t
+            + _A4 * t * t * t * t + _A5 * t * t * t * t * t)
+    return sign * (1.0 - poly * np.exp(-ax * ax))
+
+
+def _least(x, x_null, c: float):
+    """Spark ``least(x, c)``: a null ``x`` is skipped and NaN sorts
+    above every number."""
+    return np.where(x_null | np.isnan(x) | (c < x), c, x)
+
+
+def _greatest(x, x_null, c: float):
+    """Spark ``greatest(x, c)``: a null ``x`` is skipped and NaN sorts
+    above every number."""
+    return np.where(x_null | (c > x), c, x)
+
+
+def score_values(
+    observed,
+    predicted,
+    lower,
+    upper,
+    anomaly_type: str = "low_high",
+) -> np.ndarray:
+    """:func:`score_col` on the driver: the same constants and the same
+    operations in the same order, over float arrays.  A null is a
+    masked entry of a ``numpy.ma`` array; NaN is a NaN value.  The
+    score is never null: like Spark's ``least``/``greatest``, the
+    clamp skips nulls and ranks NaN above every number, so a null
+    observed value or band scores 100 under ``low_high`` and 0 under
+    ``low``/``high``, and a NaN observed value scores 100 under
+    ``low_high`` and ``high`` and 0 under ``low``."""
+    if anomaly_type not in ("low", "high", "low_high"):
+        raise errors.Invalid(f"invalid anomaly_type: {anomaly_type}")
+    (ob, ob_n), (pr, pr_n), (lo, lo_n), (up, up_n) = (
+        (np.ma.getdata(a).astype(float), np.ma.getmaskarray(a))
+        for a in (observed, predicted, lower, upper))
+    with np.errstate(all="ignore"):
+        mu = (lo + up) / 2.0
+        std_raw = (up - mu) / 3.0
+        std = np.where(std_raw == 0, 1.0, std_raw)
+        x = np.abs(ob - mu) / std
+        raw = 2.0 * (0.5 * (1.0 + _erf_values(x / _SQRT2))) - 1.0
+        # a null comparison takes otherwise(raw), as in score_col
+        signed = np.where(~pr_n & (ob - pr < 0), -raw, raw)
+    signed_null = ob_n | lo_n | up_n
+    if anomaly_type == "low":
+        directional, d_null = -_least(signed, signed_null, 0.0), False
+    elif anomaly_type == "high":
+        directional, d_null = _greatest(signed, signed_null, 0.0), False
+    else:
+        directional, d_null = np.abs(signed), signed_null
+    clipped = _least(directional, d_null, 1.0)
+    # greatest(0.0, clipped) keeps its first argument on a tie: +0.0
+    return 100.0 * np.where(clipped > 0.0, clipped, 0.0)
 
 
 def with_scores(
